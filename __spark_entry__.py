@@ -29,8 +29,9 @@ def entry(spark: SparkSession) -> DataFrame:
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    # driver_order: alphabetical rotated 50/round, so the driver's 50-entry
-    # correctness window sweeps the whole surface across rounds.
+    # driver_order: least-recently-verified first (ties alphabetical), so
+    # the driver's 50-entry correctness window always holds the stalest
+    # entries and sweeps the whole surface across rounds.
     return {name: REGISTRY[name].spark for name in driver_order()}
 
 

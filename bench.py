@@ -19,6 +19,7 @@ import json
 import os
 import sys
 import time
+from contextlib import contextmanager
 from pathlib import Path
 
 _REPO = str(Path(__file__).resolve().parent)
@@ -148,76 +149,86 @@ mapping:
 """
 
 
-def _latency_probe(spark, trigger_sec: int = 5, n_events: int = 20_000) -> dict:
-    """BASELINE.md's reference-parity latency row (VERDICT r16 ask #6):
-    run the WATCH pipeline under a real processing-time trigger
-    (trigger='5 seconds' mirroring the reference's config.yaml:17) with
-    the RocksDB state-store provider, and report p50/p99 micro-batch
-    commit latency from the engine's own progress events. The source is
-    the file-backed fake Redis client pre-loaded with ``n_events``
-    compact envelopes; the config's buffers.source.size (2000) is the
-    per-batch admission cap, so the preload drains as ~10 paced
-    micro-batches — the reference's poll-cap pacing, not one availableNow
-    gulp. Latency = durationMs.triggerExecution (source poll -> dedupe ->
-    pack -> sink + checkpoint commit, the full batch critical path)."""
-    import json as _json
-    import shutil as _shutil
+@contextmanager
+def _probe_pipeline(spark, prefix: str):
+    """Scratch watch pipeline shared by the two latency probes: the
+    latency config, a file-backed fake Redis source and the RocksDB state
+    store. Yields ``(add, start)``: ``add(n, base)`` appends ``n`` compact
+    envelopes to the source stream, ``start(trigger_sec)`` starts the watch
+    query on it. On exit the provider conf is restored and the working dir
+    (config, fake-redis stream, checkpoint/work dirs) is removed."""
+    import shutil
     import tempfile
-    import time as _time
 
     from cdc_dedupe_spark.config import load_config
     from cdc_dedupe_spark.streaming.pipeline import watch
     from cdc_dedupe_spark.streaming.run import STATE_STORE_PROVIDERS, _PROVIDER_CONF
     from tests.fake_redis import FakeRedis
 
-    # Probe working dir (config, fake-redis stream, checkpoint/work dirs) is
-    # removed in the finally below once the query has stopped — every bench
-    # run used to leak a multi-MB directory into /tmp (ADVICE r17).
-    tmp = Path(tempfile.mkdtemp(prefix="bench-latency-"))
-    (tmp / "config.yaml").write_text(_LATENCY_CONFIG)
-    cfg = load_config(tmp / "config.yaml")
-    redis_dir = tmp / "redis"
-    fake = FakeRedis(str(redis_dir))
-    stream = "m2.m2.catalog_category_entity"
-    for i in range(n_events):
-        payload = _json.dumps(
-            {"before": {"entity_id": i % 997, "v": 1}, "after": {"entity_id": i % 997, "v": 1}}
-        )
-        fake.xadd(stream, {"key": payload})
-
+    tmp = Path(tempfile.mkdtemp(prefix=prefix))
     prev_provider = spark.conf.get(_PROVIDER_CONF, None)
     spark.conf.set(_PROVIDER_CONF, STATE_STORE_PROVIDERS["rocksdb"])
-    want_batches = -(-n_events // 2000)  # admission cap in _LATENCY_CONFIG
     try:
-        handles = watch(
-            spark,
-            cfg,
-            source_dir=None,
-            work_dir=str(tmp / "work"),
-            available_now=False,
-            trigger_seconds=trigger_sec,
-            redis_options={
-                "client_factory": "tests.fake_redis:make_client",
-                "fake_dir": str(redis_dir),
-            },
-        )
-        q = handles.query
-        deadline = _time.time() + (want_batches + 4) * trigger_sec + 60
-        while _time.time() < deadline:
-            lp = q.lastProgress
-            if lp is not None and lp["batchId"] >= want_batches + 1:
-                break
-            _time.sleep(1.0)
-        progresses = [p for p in q.recentProgress if p["numInputRows"] > 0]
-        run_id = str(q.runId)
-        q.stop()
-        q.awaitTermination()
+        (tmp / "config.yaml").write_text(_LATENCY_CONFIG)
+        cfg = load_config(tmp / "config.yaml")
+        redis_dir = tmp / "redis"
+        fake = FakeRedis(str(redis_dir))
+
+        def add(n: int, base: int = 0) -> None:
+            for i in range(n):
+                row = {"entity_id": (base + i) % 997, "v": 1}
+                payload = json.dumps({"before": row, "after": row})
+                fake.xadd("m2.m2.catalog_category_entity", {"key": payload})
+
+        def start(trigger_sec: int):
+            return watch(
+                spark,
+                cfg,
+                source_dir=None,
+                work_dir=str(tmp / "work"),
+                available_now=False,
+                trigger_seconds=trigger_sec,
+                redis_options={
+                    "client_factory": "tests.fake_redis:make_client",
+                    "fake_dir": str(redis_dir),
+                },
+            ).query
+
+        yield add, start
     finally:
         if prev_provider is None:
             spark.conf.unset(_PROVIDER_CONF)
         else:
             spark.conf.set(_PROVIDER_CONF, prev_provider)
-        _shutil.rmtree(tmp, ignore_errors=True)
+        shutil.rmtree(tmp, ignore_errors=True)
+
+
+def _latency_probe(spark, trigger_sec: int = 5, n_events: int = 20_000) -> dict:
+    """BASELINE.md's reference-parity latency row: run the WATCH pipeline
+    under a real processing-time trigger (trigger='5 seconds' mirroring
+    the reference's config.yaml:17) with the RocksDB state-store provider,
+    and report p50/p99 micro-batch commit latency from the engine's own
+    progress events. The source is the file-backed fake Redis client
+    pre-loaded with ``n_events`` compact envelopes; the config's
+    buffers.source.size (2000) is the per-batch admission cap, so the
+    preload drains as ~10 paced micro-batches — the reference's poll-cap
+    pacing, not one availableNow gulp. Latency =
+    durationMs.triggerExecution (source poll -> dedupe -> pack -> sink +
+    checkpoint commit, the full batch critical path)."""
+    want_batches = -(-n_events // 2000)  # admission cap in _LATENCY_CONFIG
+    with _probe_pipeline(spark, "bench-latency-") as (add, start):
+        add(n_events)
+        q = start(trigger_sec)
+        deadline = time.time() + (want_batches + 4) * trigger_sec + 60
+        while time.time() < deadline:
+            lp = q.lastProgress
+            if lp is not None and lp["batchId"] >= want_batches + 1:
+                break
+            time.sleep(1.0)
+        progresses = [p for p in q.recentProgress if p["numInputRows"] > 0]
+        run_id = str(q.runId)
+        q.stop()
+        q.awaitTermination()
 
     commits = sorted(p["durationMs"]["triggerExecution"] / 1000.0 for p in progresses)
     if not commits:
@@ -245,12 +256,12 @@ def _latency_probe(spark, trigger_sec: int = 5, n_events: int = 20_000) -> dict:
 def _backlog_drain_probe(
     spark, trigger_sec: int = 5, cap: int = 2000, backlog_mult: int = 10
 ) -> dict:
-    """Recovery-case latency row (VERDICT r17 ask #6): the steady-state
-    probe above measures a paced drain; this one measures what happens
-    after an OUTAGE. Phase 1 runs the watch pipeline through one
-    cap-sized batch and stops it (the paused trigger); phase 2 lands a
-    ``backlog_mult``× admission-cap backlog in the source stream while
-    nothing consumes; phase 3 restarts from the checkpoint and drains.
+    """Recovery-case latency row: the steady-state probe above measures a
+    paced drain; this one measures what happens after an OUTAGE. Phase 1
+    runs the watch pipeline through one cap-sized batch and stops it (the
+    paused trigger); phase 2 lands a ``backlog_mult``× admission-cap
+    backlog in the source stream while nothing consumes; phase 3 restarts
+    from the checkpoint and drains.
 
     The numbers that matter: batches_to_drain (the admission cap —
     buffers.source.size, mirroring the reference's poll cap — must slice
@@ -260,87 +271,38 @@ def _backlog_drain_probe(
     peak_commit_sec (per-batch latency stays near steady-state even
     with a 10× backlog queued — state-store and sink cost scale with
     the BATCH, not the backlog)."""
-    import json as _json
-    import shutil as _shutil
-    import tempfile
-    import time as _time
-
-    from cdc_dedupe_spark.config import load_config
-    from cdc_dedupe_spark.streaming.pipeline import watch
-    from cdc_dedupe_spark.streaming.run import STATE_STORE_PROVIDERS, _PROVIDER_CONF
-    from tests.fake_redis import FakeRedis
-
-    tmp = Path(tempfile.mkdtemp(prefix="bench-drain-"))
     run_ids: list[str] = []
-    prev_provider = spark.conf.get(_PROVIDER_CONF, None)
-    spark.conf.set(_PROVIDER_CONF, STATE_STORE_PROVIDERS["rocksdb"])
-    try:
-        (tmp / "config.yaml").write_text(_LATENCY_CONFIG)
-        cfg = load_config(tmp / "config.yaml")
-        redis_dir = tmp / "redis"
-        fake = FakeRedis(str(redis_dir))
-        stream = "m2.m2.catalog_category_entity"
-
-        def _add(n: int, base: int) -> None:
-            for i in range(n):
-                payload = _json.dumps(
-                    {
-                        "before": {"entity_id": (base + i) % 997, "v": 1},
-                        "after": {"entity_id": (base + i) % 997, "v": 1},
-                    }
-                )
-                fake.xadd(stream, {"key": payload})
-
-        def _start():
-            return watch(
-                spark,
-                cfg,
-                source_dir=None,
-                work_dir=str(tmp / "work"),
-                available_now=False,
-                trigger_seconds=trigger_sec,
-                redis_options={
-                    "client_factory": "tests.fake_redis:make_client",
-                    "fake_dir": str(redis_dir),
-                },
-            ).query
-
+    with _probe_pipeline(spark, "bench-drain-") as (add, start):
         # Phase 1: steady state — one cap-sized batch through, then stop.
-        _add(cap, 0)
-        q = _start()
-        deadline = _time.time() + 10 * trigger_sec + 60
-        while _time.time() < deadline:
+        add(cap, 0)
+        q = start(trigger_sec)
+        deadline = time.time() + 10 * trigger_sec + 60
+        while time.time() < deadline:
             if sum(p["numInputRows"] for p in q.recentProgress) >= cap:
                 break
-            _time.sleep(1.0)
+            time.sleep(1.0)
         run_ids.append(str(q.runId))
         q.stop()
         q.awaitTermination()
 
         # Phase 2: the outage — a 10×-cap backlog lands, nothing consumes.
         backlog = cap * backlog_mult
-        _add(backlog, cap)
+        add(backlog, cap)
 
         # Phase 3: restart from the checkpoint; measure the drain.
         want_batches = -(-backlog // cap)
-        t0 = _time.time()
-        q = _start()
-        deadline = _time.time() + (want_batches + 6) * trigger_sec + 120
-        while _time.time() < deadline:
+        t0 = time.time()
+        q = start(trigger_sec)
+        deadline = time.time() + (want_batches + 6) * trigger_sec + 120
+        while time.time() < deadline:
             if sum(p["numInputRows"] for p in q.recentProgress) >= backlog:
                 break
-            _time.sleep(1.0)
-        drain_wall = _time.time() - t0
+            time.sleep(1.0)
+        drain_wall = time.time() - t0
         progresses = [p for p in q.recentProgress if p["numInputRows"] > 0]
         run_ids.append(str(q.runId))
         q.stop()
         q.awaitTermination()
-    finally:
-        if prev_provider is None:
-            spark.conf.unset(_PROVIDER_CONF)
-        else:
-            spark.conf.set(_PROVIDER_CONF, prev_provider)
-        _shutil.rmtree(tmp, ignore_errors=True)
 
     if not progresses:
         raise RuntimeError("backlog-drain probe produced no non-empty micro-batches")
@@ -394,8 +356,6 @@ def main() -> int:
         # only; parity/tests keep engine defaults.
         spark.conf.set("spark.sql.files.maxPartitionBytes", str(2 * 1024 * 1024))
         spark.conf.set("spark.sql.files.openCostInBytes", str(128 * 1024))
-
-    from pyspark.sql import functions as F  # noqa: F401 (kept for later use)
 
     # Warm the JVM/Python-worker paths once so per-query numbers measure the
     # engine, not first-call startup (BASELINE.md: warm JVM, cached session).

@@ -84,13 +84,6 @@ INTERPRETED_EDGE_MAX = 100_000_000
 # runtime coalescing) exactly as before.
 _LOOP_ROWS_PER_PARTITION = 2_000_000
 
-# Diagnostics from the most recent connected_components call (test pins:
-# driver rounds consumed = probe actions run; one action per round is the
-# loop's cost contract). Single-threaded diagnostic only (ADVICE r19):
-# concurrent calls race on it — use the ``diag`` out-param for a
-# race-free per-call readout.
-last_round_count = 0
-
 # Debug/test gate (ADVICE r19): when True, assert the documented
 # edge-endpoints ⊆ nodes invariant with an anti-join count before the
 # loop (one extra job), so a future caller violating it fails loudly
@@ -117,8 +110,8 @@ def connected_components(
     Returns (vec_id, cluster_id). Nodes with no edges keep their own id.
     ``max_rounds`` counts driver rounds; each applies HOOKS_PER_ROUND
     edge-hops, so the reach budget is 3x the round budget.
-    ``diag``, when passed, receives {"rounds": n} — the race-free form of
-    the module-level last_round_count diagnostic.
+    ``diag``, when passed, receives {"rounds": n}: the driver rounds this
+    call consumed, one probe action each (the loop's cost contract).
     """
     spark = nodes.sparkSession
     if VALIDATE_EDGE_ENDPOINTS:
@@ -148,8 +141,7 @@ def connected_components(
     # "What's wrong" #1). prev_sum=None makes round 1 unconditionally "not
     # converged" on any non-empty graph, so setup needs no probe job either.
     labels = nodes.select("vec_id", F.col("vec_id").alias("lbl")).localCheckpoint(eager=False)
-    global last_round_count
-    last_round_count = 0
+    rounds = 0
     prev_sum = None
     converged = False
     scope = (
@@ -175,13 +167,13 @@ def connected_components(
                 .localCheckpoint(eager=False)
             )
             cur_sum = labels.agg(F.sum("lbl")).first()[0]
-            last_round_count += 1
+            rounds += 1
             if cur_sum == prev_sum:  # monotone => equal sum == no label changed
                 converged = True
                 break
             prev_sum = cur_sum
     if diag is not None:
-        diag["rounds"] = last_round_count
+        diag["rounds"] = rounds
     if not converged:
         # Labels were still moving when the round budget ran out; stale
         # labels mean wrong cluster assignments, so fail loudly rather

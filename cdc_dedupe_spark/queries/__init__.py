@@ -2,20 +2,13 @@
 
 from __future__ import annotations
 
+import json
+import re
+from pathlib import Path
+
 from .registry import REGISTRY, QueryDef, register  # noqa: F401
 
-# Group modules register themselves on import; thematic import order below
-# is irrelevant to verification. The order the DRIVER sees (via
-# __spark_entry__.queries()) is `driver_order()`: alphabetical, rotated by
-# 50 positions per round. The driver checks the first 50 entries, so with
-# ~90 queries every entry receives a driver CORRECTNESS row at least every
-# other round — content-blind (pure alphabet + arithmetic), replacing the
-# r3 frozen order that kept ~40 queries permanently outside the window
-# (VERDICT r3 "What's wrong" #3). Off-window entries are still covered
-# every round by the local oracle-parity twin at sf0.001
-# (tests/test_oracle_parity.py) and the committed full-surface sweep at
-# the driver's own sf0.01 (scripts/parity_sweep.py -> PARITY_LOCAL.json),
-# both now bit-sensitive — the same sensitivity as the driver's hash.
+# Group modules register themselves on import; import order is irrelevant.
 from . import llm  # noqa: F401,E402
 from . import llm_ext  # noqa: F401,E402
 from . import streaming  # noqa: F401,E402
@@ -29,68 +22,55 @@ from . import pipeline_ops  # noqa: F401,E402
 from . import stats_ml  # noqa: F401,E402
 from . import web_dedup  # noqa: F401,E402
 
-# Rotation offset for the driver window. Advance by 50 each round (r4=50,
-# r5=100, ...); applied mod the registry size, so consecutive rounds'
-# 50-entry windows sweep the whole alphabetical surface. r6 (offset 150 ≡
-# 52 mod 98) puts the 48 entries r5 could not reach — the whole streaming
-# group and the text_* family among them — at the front of the window.
-# r7 (offset 206; registry grew 98 -> 101 this round, so ≡ 4 mod 101):
-# maximal-coverage window over the entries the driver has not yet
-# verified — the whole r6 off-window alphabetical head (agg_*, ann_*,
-# cdc_*, dedup_*, doc_*, fn_*, join_* — VERDICT r6 item 2) plus two of
-# the three r7 additions (contamination_ngram, doc_pack_sequences); only
-# source_scorecard waits for the r8 window (it has committed sf0.01
-# sweep + local parity evidence meanwhile).
-# r8 (offset 286; registry grew 101 -> 114, ≡ 58 mod 114): computed
-# maximal coverage of never-driver-verified entries — source_scorecard
-# (VERDICT r7 item 1) and nine of the thirteen r8 additions — plus 40 of
-# the 50 entries last verified in r6 (the window is saturated: 10 never
-# + 40 r6 = 50 slots exactly). Left for r9: cdc_upsert_latest,
-# dedup_span_ngram, events_gap_fill and graph_pagerank (they sort into
-# the c..g region the r7 window already covered; all have sf0.01 sweep +
-# local parity evidence meanwhile) and 10 r6-verified entries (agg_cube,
-# agg_distinct, the window_* family, and the two rows-only approx aggs
-# that never hash-match by design).
-# r9 (offset 257; registry grew 114 -> 127, ≡ 3 mod 127): the window
-# spans sorted indices 3..52 — ALL FOUR r8 never-verified leftovers
-# (graph_label_prop's insertion at index 51 pushed graph_pagerank to 52,
-# so the anchor moved one right; agg_cms_heavy_hitters (2) rotates to
-# r10 with sweep + one-sidedness-unit evidence)
-# (cdc_upsert_latest, dedup_span_ngram, events_gap_fill,
-# graph_pagerank: VERDICT r8 "Next round" #1, the oldest debt) plus
-# the r9 additions agg_hll_registers, dedup_minhash_cluster,
-# events_anomaly_mad and graph_label_prop.
-# Computed by scripted argmax over all rotations with old-debt
-# priority: no 50-entry window reaches past graph_pagerank (52) AND
-# back to the v/w-region r9 additions, so join_bloom_prefilter (54),
-# vec_pq_encode and window_cume_dist (committed-sweep exact-hash + unit
-# evidence), graph_label_prop, join_fuzzy_band, pipeline_quality_gate,
-# ts_ewma_hourly
-# and stats_two_sample
-# (sweep + independent-
-# implementation units) plus the by-design rows-only stream_bloom_dedupe
-# (guarantee units) — all added THIS round — wait for the r10 window
-# along with the r6-stale window_* family.
-#
-# r10: the offset arithmetic is RETIRED. The 15 entries VERDICT r9 wanted
-# in the r10 window span sorted indices 2..126 — no contiguous 50-window
-# covers them (best reachable was 12/15). driver_order() now sorts the
-# registry least-recently-driver-verified first (ties alphabetical),
-# using cdc_dedupe_spark/queries/driver_history.py, which is GENERATED
-# from the committed CORRECTNESS_r*.json artifacts by
-# scripts/update_rotation.py (run at round start, committed). Names with
-# no history (new queries) sort to the very front. The 50-entry window is
-# therefore always exactly the 50 stalest entries, so no entry can go
-# more than ceil(N/50) rounds without a fresh driver row — the staleness
-# bound the old offset scheme could not guarantee (window_* sat at r6 for
-# three rounds). tests/test_rotation.py pins both the order and the bound.
-from .driver_history import DRIVER_LAST_VERIFIED  # noqa: E402
+REPO = Path(__file__).resolve().parents[2]
+
+# Contract resets: query name -> first round whose driver rows still count.
+# When a query's OUTPUT CONTRACT changes (new columns, new oracle, rows-only
+# upgraded to exact), older passing rows verified the OLD semantics and must
+# not keep it out of the window — drop them so the entry re-fronts as
+# never-verified until the driver re-checks the new contract.
+CONTRACT_RESETS: dict[str, int] = {
+    # r13: rows-only -> exact
+    "stream_stateful_agg": 13,
+    "agg_approx_distinct": 13,
+    "agg_approx_percentile": 13,
+    # r14: rows-only -> exact key-set oracle
+    "stream_watermark_dedupe": 14,
+}
+
+
+def row_passes(row: dict) -> bool:
+    """A driver CORRECTNESS row passes on full value-hash parity against the
+    DuckDB oracle, or on the declared rows-only check for queries without an
+    oracle twin (``err == "no_oracle"`` with a non-null ``spark_rows``)."""
+    if not isinstance(row, dict):
+        return False
+    if row.get("hash_match"):
+        return True
+    return row.get("err") == "no_oracle" and row.get("spark_rows") is not None
+
+
+def driver_last_verified(root: Path = REPO) -> dict[str, int]:
+    """Query name -> newest round whose ``CORRECTNESS_r<round>.json`` under
+    ``root`` holds a passing row for it (rows older than the name's
+    CONTRACT_RESETS round do not count). Names never verified are absent."""
+    latest: dict[str, int] = {}
+    for path in root.glob("CORRECTNESS_r*.json"):
+        m = re.fullmatch(r"CORRECTNESS_r(\d+)\.json", path.name)
+        if m is None:
+            continue
+        rnd = int(m.group(1))
+        for name, row in json.loads(path.read_text()).items():
+            if rnd >= CONTRACT_RESETS.get(name, 0) and row_passes(row):
+                latest[name] = max(latest.get(name, 0), rnd)
+    return latest
 
 
 def driver_order() -> list[str]:
     """Registry names in the order the driver contract exposes them:
-    least-recently-driver-verified first (never-verified and brand-new
-    queries sort to the front), alphabetical within a round cohort. The
-    driver checks the first 50, so the window always retires the oldest
-    verification debt first."""
-    return sorted(REGISTRY, key=lambda n: (DRIVER_LAST_VERIFIED.get(n, 0), n))
+    least-recently-driver-verified first (never-verified queries at the
+    front), alphabetical within a round. The driver checks the first 50
+    entries, so this order bounds any entry's staleness at ceil(N/50)
+    rounds."""
+    last = driver_last_verified()
+    return sorted(REGISTRY, key=lambda n: (last.get(n, 0), n))

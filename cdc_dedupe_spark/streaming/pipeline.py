@@ -20,14 +20,13 @@ partitioned job. State never accumulates across batches (window-scoped
 semantics, like the reference); the cross-batch variant is
 dropDuplicatesWithinWatermark (queries/streaming.py).
 
-Sink semantics: **effectively-once by default** via a batchId-idempotent
-sink layer (``idempotent_sink=True``). The raw JSON-file and XADD sinks
-are append-only, so a micro-batch retried after a crash between write and
-checkpoint commit would duplicate its output — the reference's
-at-least-once contract (crash between XADD and XACK replays pending
-entries, RedisSource.java:92). The idempotent layer closes both crash
-windows with a per-batch manifest (markers inside the checkpoint dir, so
-both share one lifecycle):
+Sink semantics: **effectively-once** via a batchId-idempotent sink
+layer. Plain JSON-file and XADD appends would duplicate the output of a
+micro-batch retried after a crash between write and checkpoint commit —
+the reference's at-least-once contract (crash between XADD and XACK
+replays pending entries, RedisSource.java:92). The idempotent layer
+closes both crash windows with a per-batch manifest (markers inside the
+checkpoint dir, so both share one lifecycle):
 
  - crash AFTER the sinks ran but BEFORE the checkpoint commit: the
    ``{batchId}.done`` marker exists, so the engine's replay of that batch
@@ -45,8 +44,7 @@ both share one lifecycle):
 
 At 1000-executor scale with object-store sinks, swap the file publish for
 a transactional table format (Delta/Iceberg appends keyed by batchId) —
-the manifest contract is the same. ``idempotent_sink=False`` restores the
-reference's raw at-least-once behavior (byte-identical sink layout).
+the manifest contract is the same.
 """
 
 from __future__ import annotations
@@ -119,9 +117,7 @@ _format_checked: set[str] = set()
 
 
 def _format_check_key(cfg: Config) -> str:
-    import json as _json
-
-    return _json.dumps(
+    return json.dumps(
         [cfg.source.format, cfg.source.prefix, cfg.target.prefix, cfg.mapping], sort_keys=True
     )
 
@@ -228,9 +224,9 @@ def _scrub_batch_files(batch_id: int, *dirs: str) -> None:
 
 def _scrub_batch_redis(batch_id: int, cfg: Config, sink_options: dict[str, str]) -> None:
     """Delete target-stream entries a crashed attempt XADDed (they carry
-    ``batch=<batchId>``, written only in idempotent mode). Runs ONLY on a
-    started-without-done replay — never in the fresh hot path — so the
-    full XRANGE scan is a crash-recovery cost, not a steady-state one."""
+    ``batch=<batchId>``). Runs ONLY on a started-without-done replay —
+    never in the fresh hot path — so the full XRANGE scan is a
+    crash-recovery cost, not a steady-state one."""
     from ..sources.redis_stream import _is_missing_stream, make_client
 
     client = make_client(sink_options)
@@ -255,10 +251,10 @@ def _process_batch(
     output_dir: str,
     ack_dir: str,
     dead_dir: str,
-    sink_options: dict[str, str] | None = None,
-    manifest: SinkManifest | None = None,
-    staging_root: Path | None = None,
-    ack_options: dict[str, str] | None = None,
+    sink_options: dict[str, str] | None,
+    manifest: SinkManifest,
+    staging_root: Path,
+    ack_options: dict[str, str] | None,
 ) -> None:
     # Source-side acks (XACK / acknowledge=delete) need the SOURCE's Redis
     # connection, not the sink's: a Redis-source run with JSON file sinks
@@ -266,13 +262,13 @@ def _process_batch(
     ack_wanted = ack_options is not None and bool(
         cfg.source.group or cfg.source.acknowledge == "delete"
     )
-    already = manifest is not None and manifest.committed(batch_id)
+    already = manifest.committed(batch_id)
     if already and not ack_wanted:
         # Checkpoint replay of a fully-sunk batch (crash landed between
         # sink actions and checkpoint commit): every sink action below
         # already ran and there is no ack work — skip it all.
         return
-    if manifest is not None and not already:
+    if not already:
         if manifest.started(batch_id):
             # Crashed mid-write: scrub the partial attempt before rewriting.
             # Safe precisely because the destructive source ack only ever
@@ -294,7 +290,7 @@ def _process_batch(
     batch.persist()
     try:
         if batch.isEmpty():
-            if manifest is not None and not already:
+            if not already:
                 manifest.mark(batch_id)  # nothing to sink; replays skip
             return
         if not already:
@@ -309,27 +305,19 @@ def _process_batch(
         if not already:
             if sink_options is not None:
                 # XADD straight to the target Redis streams (reference topology).
-                opts = dict(sink_options)
-                if manifest is not None:
-                    # Entries carry their batchId so a crash-replay can scrub
-                    # the partial attempt (_scrub_batch_redis).
-                    opts["extra_fields"] = json.dumps({"batch": str(batch_id)})
+                # Entries carry their batchId so a crash-replay can scrub the
+                # partial attempt (_scrub_batch_redis).
+                opts = {**sink_options, "extra_fields": json.dumps({"batch": str(batch_id)})}
                 packed.write.format("redis_stream").options(**opts).mode("append").save()
-            elif manifest is not None:
-                _publish_json(packed, batch_id, "target_stream", output_dir, staging_root)
             else:
-                packed.write.mode("append").partitionBy("target_stream").json(output_dir)
+                _publish_json(packed, batch_id, "target_stream", output_dir, staging_root)
             # Dead-letter sink BEFORE acks: malformed records must have a
             # surviving copy before acknowledge=delete can remove them from
             # the source (plans/watch_plan.py dead relation; the reference
             # instead wedges the stream on the first malformed record,
             # RedisSource.java:63-66).
-            if manifest is not None:
-                _publish_json(dead, batch_id, "stream", dead_dir, staging_root)
-                _publish_json(acks, batch_id, "stream", ack_dir, staging_root)
-            else:
-                dead.write.mode("append").partitionBy("stream").json(dead_dir)
-                acks.write.mode("append").partitionBy("stream").json(ack_dir)
+            _publish_json(dead, batch_id, "stream", dead_dir, staging_root)
+            _publish_json(acks, batch_id, "stream", ack_dir, staging_root)
             # Effectively-once ordering: mark done BEFORE the destructive
             # source ack. A crash after mark but mid-ack replays into the
             # ack-only path below (sinks skipped, remaining entries
@@ -337,8 +325,7 @@ def _process_batch(
             # would let a crash-replay scrub COMPLETE output whose source
             # entries acknowledge=delete already removed — permanent loss,
             # not duplication.
-            if manifest is not None:
-                manifest.mark(batch_id)
+            manifest.mark(batch_id)
 
         # S15-S20: real XACK against the consumer group (WatchStream.java:
         # 196-205 parity — PEL interop with other group consumers), then
@@ -400,7 +387,6 @@ def watch(
     trigger_seconds: int | None = None,
     redis_options: dict[str, str] | None = None,
     redis_sink: bool = False,
-    idempotent_sink: bool = True,
 ) -> WatchHandles:
     """Start the watch pipeline.
 
@@ -412,10 +398,9 @@ def watch(
 
     availableNow=True drains existing input and stops (the test/replay
     mode); trigger_seconds mirrors the reference's 5 s dedupe window
-    (config.yaml:17) for continuous runs. ``idempotent_sink`` (default on)
-    dedupes checkpoint-replayed micro-batches via a per-batch manifest —
-    effectively-once sinks (module docstring); off = the reference's raw
-    at-least-once append behavior."""
+    (config.yaml:17) for continuous runs. Checkpoint-replayed micro-batches
+    are deduped via a per-batch manifest — effectively-once sinks (module
+    docstring)."""
     work = Path(work_dir)
     output_dir = str(work / "targets")
     ack_dir = str(work / "acks")
@@ -501,7 +486,7 @@ def watch(
             _mark_seeded(work)
         stream = spark.readStream.schema(ENVELOPE_ROW_SCHEMA).json(source_dir)
 
-    manifest = SinkManifest(work / "checkpoint" / "sink_manifest") if idempotent_sink else None
+    manifest = SinkManifest(work / "checkpoint" / "sink_manifest")
     staging_root = work / "staging"
     writer = stream.writeStream.foreachBatch(
         lambda b, bid: _process_batch(

@@ -107,18 +107,17 @@ def test_multi_hook_round_and_action_budget(spark):
        (~14 with the 3-hook plan); the ceiling below still fails if an
        eager-checkpoint (or any extra per-round action) creeps back in
        ON TOP of the round budget pinned in (1)."""
-    from cdc_dedupe_spark.operators import graph as graph_op
-
     sc = spark.sparkContext
     nodes = spark.range(30).selectExpr("id as vec_id")
     edges = spark.createDataFrame([(i, i + 1) for i in range(0, 29, 2)], "u long, v long")
+    d: dict = {}
     sc.setJobGroup("cc_job_probe", "pin per-round job count")
     try:
-        assert connected_components(nodes, edges).count() == 30
+        assert connected_components(nodes, edges, diag=d).count() == 30
     finally:
         sc.setJobGroup(None, None)
-    assert graph_op.last_round_count == 2, (
-        f"{graph_op.last_round_count} rounds for a diameter-1 graph: "
+    assert d["rounds"] == 2, (
+        f"{d['rounds']} rounds for a diameter-1 graph: "
         "multi-hook rounds regressed"
     )
     jobs = len(sc.statusTracker().getJobIdsForGroup("cc_job_probe"))
@@ -126,15 +125,12 @@ def test_multi_hook_round_and_action_budget(spark):
 
 
 def test_diag_out_param_reports_rounds(spark):
-    """r20 (ADVICE r19): the ``diag`` out-param is the race-free per-call
-    round readout — same value the module global reports."""
-    from cdc_dedupe_spark.operators import graph as graph_op
-
+    """The ``diag`` out-param reports the driver rounds of this call."""
     nodes = spark.range(6).selectExpr("id as vec_id")
     edges = spark.createDataFrame([(0, 1), (2, 3)], "u long, v long")
     d: dict = {}
     connected_components(nodes, edges, diag=d).count()
-    assert d["rounds"] == graph_op.last_round_count > 0
+    assert d["rounds"] > 0
 
 
 def test_validate_edge_endpoints_gate(spark):

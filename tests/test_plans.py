@@ -25,6 +25,18 @@ def plan_of(spark, sf_dir: str, name: str, mode: str = "formatted") -> str:
     return buf.getvalue()
 
 
+@pytest.fixture(scope="session")
+def batch_plans(spark, sf_dir) -> dict[str, str]:
+    """name -> formatted plan of every batch query, built and explained
+    once for the registry-wide sweeps. Streaming queries execute on build
+    and are plan-checked by their own tests."""
+    return {
+        name: plan_of(spark, sf_dir, name)
+        for name, q in REGISTRY.items()
+        if q.group != "streaming" and name != "cdc_dedupe_stream"
+    }
+
+
 def n_exchanges(plan: str) -> int:
     """Count Exchange nodes in a formatted plan (detail section lines)."""
     return len(re.findall(r"^\(\d+\) Exchange", plan, re.MULTILINE))
@@ -149,22 +161,14 @@ def test_window_dedupe_single_shuffle(spark, sf_dir):
     assert "WindowGroupLimit" in plan
 
 
-def test_no_cartesian_products_anywhere(spark, sf_dir):
+def test_no_cartesian_products_anywhere(batch_plans):
     """Global sweep: no declared batch query may compile to a
     CartesianProduct — every cross join in the registry is a deliberate
     broadcast of an O(1)-row side (probe vectors, centroids), which plans
     as BroadcastNestedLoopJoin instead. A true cartesian at 100 TB is a
-    non-starter. (Streaming queries execute on build and are plan-checked
-    by their own tests.)"""
-    skip = {"cdc_dedupe_stream"}
-    for name, q in REGISTRY.items():
-        if q.group == "streaming" or name in skip:
-            continue
-        df = q.spark(spark, sf_dir)
-        buf = io.StringIO()
-        with contextlib.redirect_stdout(buf):
-            df.explain("formatted")
-        assert "CartesianProduct" not in buf.getvalue(), name
+    non-starter."""
+    for name, p in batch_plans.items():
+        assert "CartesianProduct" not in p, name
 
 
 @pytest.mark.parametrize(
@@ -457,7 +461,7 @@ def test_anomaly_mad_single_raw_shuffle(spark, sf_dir):
     assert plan.count("BroadcastExchange") >= 2, plan
 
 
-def test_no_global_sorts_or_stray_python_udfs_anywhere(spark, sf_dir):
+def test_no_global_sorts_or_stray_python_udfs_anywhere(batch_plans):
     """Registry-wide scale-smell sweep (the round-9 plan audit, made
     permanent): no batch query may compile to a global range-partitioned
     sort (top-k must be TakeOrderedAndProject; windows partition on a
@@ -468,14 +472,7 @@ def test_no_global_sorts_or_stray_python_udfs_anywhere(spark, sf_dir):
     udaf_pandas) plan ArrowEvalPython / FlatMapGroupsInPandas and stay
     outside this ban by design."""
     allowed_python = {"udf_python", "udtf_python"}
-    for name, q in REGISTRY.items():
-        if q.group == "streaming" or name == "cdc_dedupe_stream":
-            continue
-        df = q.spark(spark, sf_dir)
-        buf = io.StringIO()
-        with contextlib.redirect_stdout(buf):
-            df.explain("formatted")
-        p = buf.getvalue()
+    for name, p in batch_plans.items():
         assert "Exchange rangepartitioning" not in p, name
         if name not in allowed_python:
             assert "BatchEvalPython" not in p, name

@@ -1,24 +1,24 @@
-"""Driver-window rotation hygiene (VERDICT r9 "Next round" #1 and #6).
+"""Driver-window rotation hygiene.
 
 The driver checks the first 50 entries of ``__spark_entry__.queries()``
 per round. ``driver_order()`` must therefore (a) surface the stalest
 verification debt first and (b) structurally bound how long any entry can
-go without a driver CORRECTNESS row. These tests pin both against the
-GENERATED history module so the r6-style staleness (window_* untouched
-for three rounds) cannot silently recur.
+go without a driver CORRECTNESS row. The order tests read the committed
+CORRECTNESS_r*.json artifacts through ``driver_last_verified``; the policy
+test points it at a temporary directory.
 """
 
 from __future__ import annotations
 
 import json
-import re
-import subprocess
-from pathlib import Path
 
-from cdc_dedupe_spark.queries import REGISTRY, driver_order
-from cdc_dedupe_spark.queries.driver_history import DRIVER_LAST_VERIFIED
+from cdc_dedupe_spark.queries import (
+    CONTRACT_RESETS,
+    REGISTRY,
+    driver_last_verified,
+    driver_order,
+)
 
-REPO = Path(__file__).resolve().parent.parent
 WINDOW = 50
 
 
@@ -31,11 +31,12 @@ def test_driver_order_is_registry_permutation():
 def test_window_is_exactly_the_stalest_entries():
     """The first 50 names are the 50 smallest (last_verified, name) keys —
     i.e. the window always retires the oldest debt first."""
+    last = driver_last_verified()
     order = driver_order()
-    keyed = sorted(REGISTRY, key=lambda n: (DRIVER_LAST_VERIFIED.get(n, 0), n))
+    keyed = sorted(REGISTRY, key=lambda n: (last.get(n, 0), n))
     assert order == keyed
-    window_keys = {DRIVER_LAST_VERIFIED.get(n, 0) for n in order[:WINDOW]}
-    rest_keys = {DRIVER_LAST_VERIFIED.get(n, 0) for n in order[WINDOW:]}
+    window_keys = {last.get(n, 0) for n in order[:WINDOW]}
+    rest_keys = {last.get(n, 0) for n in order[WINDOW:]}
     assert max(window_keys) <= min(rest_keys)
 
 
@@ -45,18 +46,18 @@ def test_staleness_bound_is_structural():
     stalest entries, so the spread between the newest and oldest verified
     rounds in the registry can never exceed the number of window-sweeps
     needed to cover the surface (+1 for the round in flight)."""
-    rounds = [DRIVER_LAST_VERIFIED.get(n, 0) for n in REGISTRY]
-    verified = [r for r in rounds if r > 0]
-    assert verified, "history module is empty — run scripts/update_rotation.py"
+    last = driver_last_verified()
+    verified = [last.get(n, 0) for n in REGISTRY if last.get(n, 0) > 0]
+    assert verified, "no passing row in any committed CORRECTNESS_r*.json"
     newest = max(verified)
     sweeps = -(-len(REGISTRY) // WINDOW)  # ceil
     # Entries with no history must fill the window FIRST. When fewer than
     # 50 exist they must all be inside; when a round adds more than 50 new
-    # queries (round 12 added 40 on top of 13 carried), the correct
-    # structural claim is saturation — the window contains ONLY
-    # never-verified entries, and the leftovers are next round's front
-    # (LRU order keys them at round 0, ahead of everything verified).
-    never = [n for n in REGISTRY if DRIVER_LAST_VERIFIED.get(n, 0) == 0]
+    # queries, the correct structural claim is saturation — the window
+    # contains ONLY never-verified entries, and the leftovers are next
+    # round's front (LRU order keys them at round 0, ahead of everything
+    # verified).
+    never = [n for n in REGISTRY if last.get(n, 0) == 0]
     window = driver_order()[:WINDOW]
     if len(never) <= WINDOW:
         assert all(n in window for n in never), (
@@ -64,58 +65,53 @@ def test_staleness_bound_is_structural():
             f"{[n for n in never if n not in window]}"
         )
     else:
-        assert all(DRIVER_LAST_VERIFIED.get(n, 0) == 0 for n in window), (
+        assert all(last.get(n, 0) == 0 for n in window), (
             "window not saturated with never-verified entries while "
             f"{len(never)} > {WINDOW} exist"
         )
     # Verified entries: oldest allowed round is newest - sweeps.
     stale = {
-        n: DRIVER_LAST_VERIFIED[n]
+        n: last[n]
         for n in REGISTRY
-        if 0 < DRIVER_LAST_VERIFIED.get(n, 0) < newest - sweeps
-        and n not in window
+        if 0 < last.get(n, 0) < newest - sweeps and n not in window
     }
     assert not stale, f"entries stale beyond the structural bound and not in window: {stale}"
 
 
-def test_history_module_matches_committed_artifacts():
-    """driver_history.py is generated — verify it agrees with the
-    CORRECTNESS_r*.json files actually in the repo, so a forgotten
-    regeneration fails loudly instead of skewing the window."""
-    import importlib.util
-
-    spec = importlib.util.spec_from_file_location(
-        "update_rotation", REPO / "scripts" / "update_rotation.py"
-    )
-    gen = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(gen)
-
-    tracked = subprocess.run(
-        ["git", "ls-files", "CORRECTNESS_r*.json"],
-        cwd=REPO, capture_output=True, text=True, check=True,
-    ).stdout.split()
-    latest: dict[str, int] = {}
-    for p in sorted(REPO / f for f in tracked):
-        rnd = int(re.search(r"r(\d+)", p.name).group(1))
-        for name, row in json.loads(p.read_text()).items():
-            if not isinstance(row, dict):
-                continue
-            # Same pass + contract-reset policy as the generator (imported,
-            # not duplicated, so the policies cannot drift apart).
-            if rnd < gen.CONTRACT_RESETS.get(name, 0):
-                continue
-            if gen.row_passes(row):
-                latest[name] = max(latest.get(name, 0), rnd)
-    assert latest == DRIVER_LAST_VERIFIED, (
-        "driver_history.py is out of date — run scripts/update_rotation.py"
-    )
+def test_last_verified_pass_and_reset_policy(tmp_path):
+    """Pass rule and CONTRACT_RESETS policy, on two tiny artifacts."""
+    reset_name, reset_round = next(iter(CONTRACT_RESETS.items()))
+    old, new = reset_round - 1, reset_round + 1
+    ok = {"hash_match": True, "spark_rows": 3, "err": None}
+    rows_only = {"hash_match": False, "spark_rows": 7, "err": "no_oracle"}
+    failing = {"hash_match": False, "spark_rows": 3, "err": None}
+    (tmp_path / f"CORRECTNESS_r{old:02d}.json").write_text(json.dumps({
+        "hashed": ok,
+        "rows_only": rows_only,
+        "failing": ok,
+        "newest_wins": ok,
+        reset_name: ok,
+        "no_rows": {"hash_match": False, "spark_rows": None, "err": "no_oracle"},
+    }))
+    (tmp_path / f"CORRECTNESS_r{new:02d}.json").write_text(json.dumps({
+        "failing": failing,
+        "newest_wins": ok,
+        "never": failing,
+    }))
+    assert driver_last_verified(tmp_path) == {
+        "hashed": old,
+        "rows_only": old,
+        "failing": old,
+        "newest_wins": new,
+    }
 
 
 def test_r9_verification_debt_stayed_retired():
-    """VERDICT r9 item 1 is DONE: the 9 never-driver-verified r9 additions
-    plus the 6 r6-stale window_* entries all earned green rows in the r10
-    window. Pin that the history reflects it — if any of them ever reads as
-    pre-r10 again, the generated module (or an artifact) regressed."""
+    """The 9 never-driver-verified r9 additions plus the 6 r6-stale
+    window_* entries all earned green rows in the r10 window. Pin that the
+    history reflects it — if any of them ever reads as pre-r10 again, an
+    artifact regressed."""
+    last = driver_last_verified()
     targets = [
         "agg_cms_heavy_hitters", "join_bloom_prefilter", "join_fuzzy_band",
         "pipeline_quality_gate", "stats_two_sample", "stream_bloom_dedupe",
@@ -123,9 +119,5 @@ def test_r9_verification_debt_stayed_retired():
         "window_lag_lead", "window_ntile", "window_percent_rank",
         "window_range_frame", "window_rank", "window_running_sum",
     ]
-    regressed = {
-        t: DRIVER_LAST_VERIFIED.get(t, 0)
-        for t in targets
-        if DRIVER_LAST_VERIFIED.get(t, 0) < 10
-    }
+    regressed = {t: last.get(t, 0) for t in targets if last.get(t, 0) < 10}
     assert not regressed, f"r9 debt entries lost their r10+ driver rows: {regressed}"

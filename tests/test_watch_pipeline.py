@@ -445,28 +445,6 @@ def test_watch_redis_sink_idempotent_replay(spark, tmp_path):
     assert non_seed(tgt) == [[1, 2]], "scrub-replay must leave exactly one copy"
 
 
-def test_watch_sink_at_least_once_when_idempotence_off(spark, tmp_path):
-    """idempotent_sink=False pins the reference's raw contract: the same
-    commit-crash replay DOES duplicate the batch (at-least-once) — the
-    documented behavior the manifest upgrades away."""
-    events = [_envelope_compact(f"100{i}-0", eid) for i, eid in enumerate([1, 2])]
-    cfg = load_config(_write_config(tmp_path))
-    src = tmp_path / "in"
-    src.mkdir()
-    (src / "batch0.json").write_text("\n".join(json.dumps(e) for e in events))
-    h = watch(spark, cfg, str(src), str(tmp_path / "work"), idempotent_sink=False)
-    h.query.awaitTermination()
-
-    _delete_last_commit(tmp_path / "work")
-    h2 = watch(spark, cfg, str(src), str(tmp_path / "work"), idempotent_sink=False)
-    h2.query.awaitTermination()
-
-    tgt = "target.catalog_product_flat"
-    out = spark.read.json(h2.output_dir)
-    batches = [json.loads(r) for r in _target_records(out, tgt) if r != "[]"]
-    assert batches == [[1, 2], [1, 2]], "raw append sink should have replayed the batch"
-
-
 def test_unknown_source_format_warns(tmp_path):
     p = tmp_path / "config.yaml"
     p.write_text(CONFIG_YAML.format(ack="simple").replace("format: compact", "format: protobuf"))
