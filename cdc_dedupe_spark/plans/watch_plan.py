@@ -1,10 +1,11 @@
 """The watch micro-batch as a pure logical plan.
 
 Input: a batch of envelope rows ``(offset, stream, fields)`` plus the
-broadcastable routing relation compiled from config. Output: the two
-result relations the sinks write — packed id batches per target and the
-ack ledger — with no side effects here, so the plan is unit-testable in
-batch mode and reusable by any sink layer.
+routing config, compiled into a literal map expression (no relation, so
+no broadcast job). Output: the result relations the sinks write — packed
+id batches per target, the dead letters and the ack ledger — and their
+union tagged by sink, with no side effects here, so the plan is
+unit-testable in batch mode and reusable by any sink layer.
 
 Reference stages covered (SURVEY.md §2A): S2/S3 decode+extract, S6 fan-out,
 S9 first-wins dedupe, S12/S13 packing, S15-S19 ack set.
@@ -12,16 +13,57 @@ S9 first-wins dedupe, S12/S13 packing, S15-S19 ack set.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from functools import reduce
+
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..config import Config
 from ..operators.cdc import dedupe_first, envelope_payload, extract_entity_id
 
 
-def compile_watch_plan(
-    batch: DataFrame, routes: DataFrame, cfg: Config
-) -> tuple[DataFrame, DataFrame, DataFrame]:
+def _routes(cfg: Config) -> dict[str, list[tuple[str, str]]]:
+    """source stream -> [(id_column, target_stream)] — the full general
+    mapping (every column of every table, WatchStream.java:347-352, with
+    the correct per-column id extraction the reference gets wrong for
+    tables with >1 mapped column; see SURVEY.md §2A fine print)."""
+    routes = {
+        f"{cfg.source.prefix}{tbl}": [
+            (col, f"{cfg.target.prefix}{tgt}") for col, tgts in cols.items() for tgt in tgts
+        ]
+        for tbl, cols in cfg.mapping.items()
+    }
+    return {stream: r for stream, r in routes.items() if r}
+
+
+def routed_streams(cfg: Config) -> list[str]:
+    """Source streams with at least one route: the ones whose entries are
+    consumed (acked). Unroutable streams are never consumed by the
+    reference either."""
+    return list(_routes(cfg))
+
+
+def routing_map(cfg: Config) -> Column:
+    """The routing config as a literal ``map<source stream, array<struct<
+    id_column, target_stream>>>`` expression: fan-out is a per-row
+    generator over it, with no join, broadcast or job of its own."""
+    entries = [
+        e
+        for stream, routes in _routes(cfg).items()
+        for e in (
+            F.lit(stream),
+            F.array(*(
+                F.struct(F.lit(col).alias("id_column"), F.lit(tgt).alias("target_stream"))
+                for col, tgt in routes
+            )),
+        )
+    ]
+    if not entries:
+        return F.lit(None).cast("map<string,array<struct<id_column:string,target_stream:string>>>")
+    return F.create_map(*entries)
+
+
+def compile_watch_plan(batch: DataFrame, cfg: Config) -> tuple[DataFrame, DataFrame, DataFrame]:
     """Compile one micro-batch into ``(packed, acks, dead)`` DataFrames.
 
     ``packed``: (target_stream, ids) — arrival-ordered, deduped id arrays
@@ -61,12 +103,14 @@ def compile_watch_plan(
     off_seq = F.coalesce(raw_seq.try_cast("long"), F.lit(0))
     seq_ok = raw_seq.isNull() | raw_seq.try_cast("long").isNotNull()
 
-    # S2/S3 + S6: decode once, fan out via broadcast routing join; the id
-    # column is resolved per routing row, so multi-column tables extract
-    # each column's own id (correct general semantics — the reference
-    # extracts the first column's id for every mapping, SURVEY.md §2A).
+    # S2/S3 + S6: decode once, fan out by generating one row per route of
+    # the record's stream (no rows for an unroutable stream, like an inner
+    # join); the id column is resolved per route, so multi-column tables
+    # extract each column's own id (correct general semantics — the
+    # reference extracts the first column's id for every mapping,
+    # SURVEY.md §2A).
     decoded = (
-        batch.join(F.broadcast(routes), "stream", "inner")
+        batch.select("*", F.inline(F.try_element_at(routing_map(cfg), F.col("stream"))))
         .withColumn("payload", envelope_payload("fields"))
         .withColumn("entity_id", extract_entity_id(F.col("payload"), F.col("id_column")))
         .withColumn("_ms", off_ms)
@@ -110,9 +154,38 @@ def compile_watch_plan(
     # S15-S19 ack set: every input record on a routed stream (unroutable
     # streams are never consumed by the reference either).
     acks = (
-        batch.join(F.broadcast(routes.select("stream").distinct()), "stream", "inner")
+        batch.filter(F.col("stream").isin(routed_streams(cfg)))
         .select("stream", "offset")
         .distinct()
         .withColumn("ack_mode", F.lit(cfg.source.acknowledge))
     )
     return packed, acks, dead
+
+
+# Sink kind -> the directory key column its files sit under
+# (``<kind>/<column>=<value>/``).
+SINK_KEYS = {"targets": "target_stream", "dead": "stream", "acks": "stream"}
+_SINK_FIELDS = ("ids", "offset", "id_column", "payload", "ack_mode")
+
+
+def tag_sinks(dead: DataFrame, acks: DataFrame, packed: DataFrame | None = None) -> DataFrame:
+    """Union the sink relations into one relation ``(_sink, _key, ids,
+    offset, id_column, payload, ack_mode)`` so one write covers them all:
+    ``_sink`` is the kind (SINK_KEYS), ``_key`` its target or source
+    stream, and the (all string) fields a kind does not carry are NULL.
+    ``packed`` is left out when it goes to another sink (XADD)."""
+    kinds = [("dead", dead), ("acks", acks)]
+    if packed is not None:
+        kinds.append(("targets", packed))
+    parts = [
+        df.select(
+            F.lit(kind).alias("_sink"),
+            F.col(SINK_KEYS[kind]).alias("_key"),
+            *(
+                (F.col(c) if c in df.columns else F.lit(None).cast("string")).alias(c)
+                for c in _SINK_FIELDS
+            ),
+        )
+        for kind, df in kinds
+    ]
+    return reduce(DataFrame.union, parts)

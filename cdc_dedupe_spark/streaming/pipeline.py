@@ -6,19 +6,22 @@ id extract → fan-out to per-target sinks → size-or-time dedupe window →
 first-wins dedupe → ≤1000-id JSON batches → XADD + ack barrier → XACK.
 
 Spark mapping: file-stream source of envelope rows (offset, stream, fields)
-→ one declarative plan per micro-batch inside ``foreachBatch``: broadcast
-routing join (fan-out, S6) → per-target first-wins dedupe scoped to the
-micro-batch (S8+S9; the trigger interval IS the dedupe window) → arrival-
-order packing into ≤target.size JSON id arrays (S12/S13) → one partitioned
-write for all targets (S14) → ack ledger append (S15-S19; the checkpoint
+→ one declarative plan per micro-batch inside ``foreachBatch``: fan-out
+over a literal routing map (S6) → per-target first-wins dedupe scoped to
+the micro-batch (S8+S9; the trigger interval IS the dedupe window) →
+arrival-order packing into ≤target.size JSON id arrays (S12/S13) → packed
+batches (S14), dead letters and the ack ledger (S15-S19; the checkpoint
 itself is the real at-least-once/effectively-once contract, the ledger is
-observability parity with XACK).
+observability parity with XACK) tagged by sink and written ONCE, with
+their row counts observed on that write → one XACK/XDEL pass over the
+persisted batch.
 
-Scale: no driver-side loops over data — routing is broadcast, dedupe is a
-keyed shuffle (AQE-salted on skew), the multi-target write is a single
+Scale: no driver-side loops over data — routing is a per-row expression,
+dedupe is a keyed shuffle (AQE-salted on skew), every file sink is one
 partitioned job. State never accumulates across batches (window-scoped
 semantics, like the reference); the cross-batch variant is
-dropDuplicatesWithinWatermark (queries/streaming.py).
+dropDuplicatesWithinWatermark (queries/streaming.py). Each sunk batch
+appends its counts and per-layer times to ``<work_dir>/batch_metrics.jsonl``.
 
 Sink semantics: **effectively-once** via a batchId-idempotent sink
 layer. Plain JSON-file and XADD appends would duplicate the output of a
@@ -51,35 +54,23 @@ from __future__ import annotations
 
 import json
 import shutil
+import time
 import warnings
+from collections.abc import Mapping
 from dataclasses import dataclass
 from pathlib import Path
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from ..config import Config
-from ..plans.watch_plan import compile_watch_plan
+from ..plans.watch_plan import SINK_KEYS, compile_watch_plan, routed_streams, tag_sinks
 
 # FIXTURES.md §A: one row per stream entry. Canonical definition lives
 # with the source (sources/redis_stream.py) — the file-stream and Redis
 # paths must never diverge in schema.
 from ..sources.redis_stream import ENVELOPE_ROW_SCHEMA  # noqa: E402
-
-
-def routing_rows(spark: SparkSession, cfg: Config) -> DataFrame:
-    """(source_stream, column, target_stream) — the full general mapping
-    (every column of every table, WatchStream.java:347-352, with the
-    correct per-column id extraction the reference gets wrong for tables
-    with >1 mapped column; see SURVEY.md §2A fine print)."""
-    rows = [
-        (f"{cfg.source.prefix}{tbl}", col, f"{cfg.target.prefix}{tgt}")
-        for tbl, cols in cfg.mapping.items()
-        for col, tgts in cols.items()
-        for tgt in tgts
-    ]
-    return spark.createDataFrame(rows, "stream string, id_column string, target_stream string")
 
 
 def _needs_seed(work: Path) -> bool:
@@ -110,9 +101,10 @@ def seed_targets(spark: SparkSession, cfg: Config, output_dir: str) -> None:
 
 
 # Configs whose declared source.format was already checked against observed
-# records (warn once per distinct config CONTENT, on the first non-empty
-# batch — a content key, because id() can be reused after GC and Config's
-# mapping dict makes the object unhashable; VERDICT r6 "What's wrong" #2).
+# records (warn once per distinct config CONTENT, on the first batch with
+# acked entries — a content key, because id() can be reused after GC and
+# Config's mapping dict makes the object unhashable; VERDICT r6 "What's
+# wrong" #2).
 _format_checked: set[str] = set()
 
 
@@ -126,8 +118,8 @@ def _warn_format_mismatch(batch: DataFrame, cfg: Config) -> None:
     """The format knob is declarative (decode detects per record, matching
     the reference: declared config.yaml:3, ignored RedisSource.java:58) —
     but if what it declares contradicts what the stream carries, say so
-    once (ADVICE r3). One tiny aggregate job on the first non-empty batch
-    only; never in the per-batch hot path."""
+    once (ADVICE r3). One tiny aggregate job on the first batch with acked
+    entries only; never in the per-batch hot path."""
     if cfg.source.format not in ("compact", "extended"):
         return
     key = _format_check_key(cfg)
@@ -191,24 +183,38 @@ class SinkManifest:
 
 
 def _publish_json(
-    df: DataFrame, batch_id: int, partition_col: str, final_dir: str, staging_root: Path
+    df: DataFrame,
+    batch_id: int,
+    partition_col: Mapping[str, str],
+    final_dir: str,
+    staging_root: Path,
 ) -> None:
-    """Append ``df`` to the hive-partitioned ``final_dir`` under
-    batch-deterministic file names: stage the write, then move each part
-    file into place as ``b{batchId}-<part-name>`` — the committer pattern
+    """Write the sink-tagged relation ``df`` (plans/watch_plan.py
+    ``tag_sinks``) once, then publish each kind's files into its
+    hive-partitioned dir under batch-deterministic names: the staged
+    ``_sink=S/_key=V/part-*`` moves to ``S/<partition_col[S]>=V/b{batchId}-
+    part-*`` (``V`` exactly as Spark escaped it) — the committer pattern
     that lets a replay of the same batch identify (and scrub) a crashed
-    attempt's files. Moves are driver-side metadata ops, O(part files),
-    not O(rows); a cluster deployment swaps this for a transactional
-    table append (module docstring)."""
+    attempt's files. NULL fields are left out of each line explicitly
+    (whatever the session conf), so each kind's lines carry only its own
+    fields. Moves are driver-side metadata ops, O(part files), not O(rows);
+    a cluster deployment swaps this for a transactional table append
+    (module docstring)."""
     staging = staging_root / f"b{batch_id}-{Path(final_dir).name}"
-    df.write.mode("overwrite").partitionBy(partition_col).json(str(staging))
+    (
+        df.write.mode("overwrite")
+        .option("ignoreNullFields", True)
+        .partitionBy("_sink", "_key")
+        .json(str(staging))
+    )
     final = Path(final_dir)
-    for part in staging.rglob("*"):
-        if part.is_file() and not part.name.startswith(("_", ".")):
-            rel = part.relative_to(staging)
-            dest = final / rel.parent / f"b{batch_id}-{rel.name}"
-            dest.parent.mkdir(parents=True, exist_ok=True)
-            part.replace(dest)
+    for sink, col in partition_col.items():
+        for key_dir in (staging / f"_sink={sink}").glob("_key=*"):
+            dest_dir = final / sink / f"{col}={key_dir.name[len('_key='):]}"
+            dest_dir.mkdir(parents=True, exist_ok=True)
+            for part in key_dir.iterdir():
+                if part.is_file() and not part.name.startswith(("_", ".")):
+                    part.replace(dest_dir / f"b{batch_id}-{part.name}")
     shutil.rmtree(staging, ignore_errors=True)
 
 
@@ -243,17 +249,30 @@ def _scrub_batch_redis(batch_id: int, cfg: Config, sink_options: dict[str, str])
             client.xdel(stream, *stale)
 
 
+def _observe_counts(
+    df: DataFrame, packed: Column, **kinds: Column
+) -> tuple[DataFrame, Observation]:
+    """Attach the batch's row counts to ``df``'s next action: a
+    batch-mode Observation rides on that action, so counting adds no job.
+    ``packed`` selects the packed rows (records and their ids); each
+    ``kinds`` entry counts the rows it selects."""
+    obs = Observation()
+    observed = df.observe(
+        obs,
+        *(F.count_if(c).alias(name) for name, c in kinds.items()),
+        F.count_if(packed).alias("packed_records"),
+        F.coalesce(F.sum(F.when(packed, F.json_array_length("ids"))), F.lit(0)).alias("packed_ids"),
+    )
+    return observed, obs
+
+
 def _process_batch(
     batch: DataFrame,
     batch_id: int,
-    routes: DataFrame,
     cfg: Config,
-    output_dir: str,
-    ack_dir: str,
-    dead_dir: str,
+    work_dir: str,
     sink_options: dict[str, str] | None,
     manifest: SinkManifest,
-    staging_root: Path,
     ack_options: dict[str, str] | None,
 ) -> None:
     # Source-side acks (XACK / acknowledge=delete) need the SOURCE's Redis
@@ -268,63 +287,68 @@ def _process_batch(
         # sink actions and checkpoint commit): every sink action below
         # already ran and there is no ack work — skip it all.
         return
-    if not already:
-        if manifest.started(batch_id):
-            # Crashed mid-write: scrub the partial attempt before rewriting.
-            # Safe precisely because the destructive source ack only ever
-            # runs AFTER mark() (below): started-without-done implies the
-            # source still holds every entry of this batch.
-            _scrub_batch_files(batch_id, output_dir, ack_dir, dead_dir)
-            if sink_options is not None:
-                _scrub_batch_redis(batch_id, cfg, sink_options)
-        manifest.start(batch_id)
-    # One persist covers every action below (isEmpty, the one-shot format
-    # probe, the packed/dead/ack writes and the ack foreachPartition):
-    # without it each action re-evaluates the whole lineage from the
-    # source — for the Redis source that's up to 4 XRANGEs of every
-    # stream's id slice per batch, 4× decode/route/dedupe for the others
+    work = Path(work_dir)
+    # One persist covers the two passes over the batch — the tagged sink
+    # write and the ack foreachPartition — plus the one-shot format probe:
+    # without it each re-evaluates the whole lineage from the source — for
+    # the Redis source another XRANGE of every stream's id slice per pass
     # (VERDICT r7 "What's wrong" #1). The micro-batch is bounded (trigger
     # interval / admission cap), so default MEMORY_AND_DISK is safe; each
     # source partition is fetched exactly once (pinned by
     # tests/test_watch_pipeline.py::test_watch_batch_reads_source_once).
     batch.persist()
     try:
-        if batch.isEmpty():
-            if not already:
-                manifest.mark(batch_id)  # nothing to sink; replays skip
-            return
+        acked = None  # unknown on a done-marked replay: ack everything routed
         if not already:
-            _warn_format_mismatch(batch, cfg)
-
-        # Plan compilation is pure (plans/watch_plan.py); this layer only
-        # owns the sinks: one partitioned write per relation covers every
-        # target (S14) and the ack ledger (S15-S19 — the checkpoint is the
-        # real at-least-once contract, the ledger is XACK observability
-        # parity).
-        packed, acks, dead = compile_watch_plan(batch, routes, cfg)
-        if not already:
+            if manifest.started(batch_id):
+                # Crashed mid-write: scrub the partial attempt before
+                # rewriting. Safe precisely because the destructive source
+                # ack only ever runs AFTER mark() (below): started-without-
+                # done implies the source still holds every entry.
+                _scrub_batch_files(batch_id, *(str(work / k) for k in SINK_KEYS))
+                if sink_options is not None:
+                    _scrub_batch_redis(batch_id, cfg, sink_options)
+            manifest.start(batch_id)
+            t0 = time.perf_counter()
+            # Plan compilation is pure (plans/watch_plan.py); this layer
+            # only owns the sinks: packed (S14), dead letters and the ack
+            # ledger (S15-S19 — the checkpoint is the real at-least-once
+            # contract, the ledger is XACK observability parity) go out in
+            # ONE partitioned write, with their row counts observed on it.
+            packed, acks, dead = compile_watch_plan(batch, cfg)
+            sink = F.col("_sink")
+            tagged, obs = _observe_counts(
+                tag_sinks(dead, acks, None if sink_options is not None else packed),
+                sink == "targets", acked=sink == "acks", dead=sink == "dead",
+            )
+            t1 = time.perf_counter()
             if sink_options is not None:
-                # XADD straight to the target Redis streams (reference topology).
-                # Entries carry their batchId so a crash-replay can scrub the
-                # partial attempt (_scrub_batch_redis).
+                # XADD straight to the target Redis streams (reference
+                # topology). Entries carry their batchId so a crash-replay
+                # can scrub the partial attempt (_scrub_batch_redis).
+                packed, packed_obs = _observe_counts(packed, F.lit(True))
                 opts = {**sink_options, "extra_fields": json.dumps({"batch": str(batch_id)})}
                 packed.write.format("redis_stream").options(**opts).mode("append").save()
-            else:
-                _publish_json(packed, batch_id, "target_stream", output_dir, staging_root)
-            # Dead-letter sink BEFORE acks: malformed records must have a
-            # surviving copy before acknowledge=delete can remove them from
-            # the source (plans/watch_plan.py dead relation; the reference
-            # instead wedges the stream on the first malformed record,
-            # RedisSource.java:63-66).
-            _publish_json(dead, batch_id, "stream", dead_dir, staging_root)
-            _publish_json(acks, batch_id, "stream", ack_dir, staging_root)
+            # Dead letters land BEFORE any source ack: malformed records
+            # must have a surviving copy before acknowledge=delete can
+            # remove them from the source (plans/watch_plan.py dead
+            # relation; the reference instead wedges the stream on the
+            # first malformed record, RedisSource.java:63-66).
+            _publish_json(tagged, batch_id, SINK_KEYS, work_dir, work / "staging")
+            counts = obs.get
+            if sink_options is not None:
+                counts.update(packed_obs.get)
+            t2 = time.perf_counter()
+            acked = counts["acked"]
+            if acked:
+                _warn_format_mismatch(batch, cfg)
             # Effectively-once ordering: mark done BEFORE the destructive
             # source ack. A crash after mark but mid-ack replays into the
-            # ack-only path below (sinks skipped, remaining entries
-            # re-acked — XACK/XDEL are idempotent). Marking AFTER the ack
-            # would let a crash-replay scrub COMPLETE output whose source
-            # entries acknowledge=delete already removed — permanent loss,
-            # not duplication.
+            # ack-only path (sinks skipped, entries re-acked — XACK/XDEL
+            # are idempotent). Marking AFTER the ack would let a
+            # crash-replay scrub COMPLETE output whose source entries
+            # acknowledge=delete already removed — permanent loss, not
+            # duplication.
             manifest.mark(batch_id)
 
         # S15-S20: real XACK against the consumer group (WatchStream.java:
@@ -332,15 +356,17 @@ def _process_batch(
         # acknowledge=delete removes acked entries (WatchStream.java:207-220;
         # the reference's tests assert the source is emptied,
         # WatchTests.java:151-154). Uses the SOURCE connection (ack_options)
-        # — runs for a Redis source regardless of sink kind. Executor-side
-        # per partition, ids grouped per stream and sent in many-id chunks
-        # (the reference batches its XDELs the same way) — O(streams ·
-        # chunks) round trips, never O(rows). Gate on having anything to
-        # send: with no consumer group and acknowledge != delete there is
-        # no XACK and no XDEL, so skip the foreachPartition entirely (it
-        # would open one Redis client per non-empty partition per batch to
-        # do nothing).
-        if ack_wanted:
+        # — runs for a Redis source regardless of sink kind. Reads the
+        # persisted batch (no shuffle: a repeated offset is re-acked,
+        # which XACK/XDEL make free); executor-side per partition, ids
+        # grouped per stream and sent in many-id chunks (the reference
+        # batches its XDELs the same way) — O(streams · chunks) round
+        # trips, never O(rows). Skipped when nothing was acked, and when
+        # there is nothing to send (no consumer group and acknowledge !=
+        # delete), which would open one Redis client per non-empty
+        # partition per batch to do nothing.
+        t3 = time.perf_counter()
+        if ack_wanted and acked != 0:
             opts = dict(ack_options)
             group = cfg.source.group
             delete = cfg.source.acknowledge == "delete"
@@ -365,7 +391,19 @@ def _process_batch(
                 finally:
                     getattr(client, "close", lambda: None)()
 
-            acks.foreachPartition(_ack)
+            batch.filter(F.col("stream").isin(routed_streams(cfg))).select(
+                "stream", "offset"
+            ).foreachPartition(_ack)
+        if not already:
+            # Per-batch metrics ledger: the observed counts (no extra job)
+            # and where the batch's time went.
+            t4 = time.perf_counter()
+            line = {"batch_id": batch_id, **counts} | {
+                f"{layer}_ms": round(1000.0 * (end - start), 3)
+                for layer, start, end in (("plan", t0, t1), ("publish", t1, t2), ("ack", t3, t4))
+            }
+            with open(work / "batch_metrics.jsonl", "a") as f:
+                f.write(json.dumps(line) + "\n")
     finally:
         batch.unpersist()
 
@@ -406,8 +444,6 @@ def watch(
     ack_dir = str(work / "acks")
     dead_dir = str(work / "dead")
     checkpoint = str(work / "checkpoint")
-
-    routes = routing_rows(spark, cfg)
 
     sink_options: dict[str, str] | None = None
     if redis_options is not None:
@@ -487,12 +523,8 @@ def watch(
         stream = spark.readStream.schema(ENVELOPE_ROW_SCHEMA).json(source_dir)
 
     manifest = SinkManifest(work / "checkpoint" / "sink_manifest")
-    staging_root = work / "staging"
     writer = stream.writeStream.foreachBatch(
-        lambda b, bid: _process_batch(
-            b, bid, routes, cfg, output_dir, ack_dir, dead_dir, sink_options,
-            manifest, staging_root, ack_options,
-        )
+        lambda b, bid: _process_batch(b, bid, cfg, work_dir, sink_options, manifest, ack_options)
     ).option("checkpointLocation", checkpoint)
     if available_now:
         writer = writer.trigger(availableNow=True)
