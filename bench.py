@@ -163,7 +163,7 @@ def _probe_pipeline(spark, prefix: str):
     from cdc_dedupe_spark.config import load_config
     from cdc_dedupe_spark.streaming.pipeline import watch
     from cdc_dedupe_spark.streaming.run import STATE_STORE_PROVIDERS, _PROVIDER_CONF
-    from tests.fake_redis import FakeRedis
+    from cdc_dedupe_spark.sources.fake_redis import FakeRedis
 
     tmp = Path(tempfile.mkdtemp(prefix=prefix))
     prev_provider = spark.conf.get(_PROVIDER_CONF, None)
@@ -189,7 +189,7 @@ def _probe_pipeline(spark, prefix: str):
                 available_now=False,
                 trigger_seconds=trigger_sec,
                 redis_options={
-                    "client_factory": "tests.fake_redis:make_client",
+                    "client_factory": "cdc_dedupe_spark.sources.fake_redis:make_client",
                     "fake_dir": str(redis_dir),
                 },
             ).query

@@ -2121,27 +2121,26 @@ _TWS_OUT = StructType(
 
 
 class _RowEmit:
-    """Per-task one-row DataFrame factory for TWS emissions (r20, guide
-    §4 — after the r19 roundtrip cut, the next per-key Python cost is
-    constructing the yielded pandas frame): ``pd.DataFrame([dict])``
-    measures ~260 us per call; a cached prototype + ``.copy()`` + `iat`
-    writes the same row in ~110 us. Column dtypes are pinned by the
-    first emitted row (every caller emits fixed-type rows, so the pin is
-    stable); values are untouched — this changes only how the one-row
-    frame is built."""
+    """Per-task one-row DataFrame factory for TWS emissions:
+    ``pd.DataFrame([dict])`` measures ~260 us per call; copying a cached
+    one-row prototype and writing the row with ``iat`` takes ~110 us. The
+    prototype's dtypes come from the output schema, and every call returns
+    its own copy, so a caller mutating one frame cannot reach the next."""
 
-    __slots__ = ("cols", "proto")
+    __slots__ = ("proto",)
 
-    def __init__(self, cols: tuple) -> None:
-        self.cols = cols
-        self.proto = None
+    _DTYPES = {"bigint": "int64", "boolean": "bool"}
+
+    def __init__(self, schema: StructType) -> None:
+        self.proto = pd.DataFrame(
+            {
+                f.name: pd.Series([0], dtype=self._DTYPES[f.dataType.simpleString()])
+                for f in schema.fields
+            }
+        )
 
     def __call__(self, *row) -> pd.DataFrame:
-        p = self.proto
-        if p is None:
-            self.proto = p = pd.DataFrame([row], columns=list(self.cols))
-            return p
-        df = p.copy()
+        df = self.proto.copy()
         for i, v in enumerate(row):
             df.iat[0, i] = v
         return df
@@ -2170,12 +2169,7 @@ class SessTwsProcessor(StatefulProcessor):
     def init(self, handle) -> None:
         self.handle = handle
         self.state = handle.getValueState("sess", _TWS_STATE)
-        self._emit = _RowEmit(
-            (
-                "user_id", "emit_seq", "via_timer", "n_closed", "n_sessions",
-                "n_events", "max_session_events", "total_duration_us",
-            )
-        )
+        self._emit = _RowEmit(_TWS_OUT)
 
     def close(self) -> None:
         pass
@@ -2521,12 +2515,7 @@ class FeaturesBootstrapProcessor(StatefulProcessor):
     def init(self, handle) -> None:
         self.handle = handle
         self.state = handle.getValueState("feat", _SUFB_STATE)
-        self._emit = _RowEmit(
-            (
-                "user_id", "emit_seq", "n_events", "n_purchases", "n_types",
-                "spend_cents", "last_seen_us",
-            )
-        )
+        self._emit = _RowEmit(_SUFB_OUT)
 
     def close(self) -> None:
         pass

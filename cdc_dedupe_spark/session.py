@@ -5,6 +5,14 @@ cluster the same code runs unchanged (the builder only sets master when
 none is configured). Defaults chosen for correctness parity with the
 DuckDB oracle (UTC session timezone) and for sane local shuffle sizing;
 at cluster scale AQE re-plans shuffle partition counts at runtime.
+
+Python workers are forked by ``cdc_dedupe_spark.worker_daemon`` instead
+of the stock ``pyspark.daemon``: pyspark invalidates import caches at the
+start of every task, and under CPython 3.11 that re-reads pyspark.zip's
+central directory once per zip importer (~100-240 ms CPU per task). The
+package daemon skips the re-read while the archive is unchanged. The
+daemon module is a static conf, so a session created elsewhere and
+handed in (then tuned by ``tune_session``) keeps the stock daemon.
 """
 
 from __future__ import annotations
@@ -64,6 +72,7 @@ def get_spark(app_name: str = "cdc-dedupe-spark") -> SparkSession:
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
+        .config("spark.python.daemon.module", "cdc_dedupe_spark.worker_daemon")
     )
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
@@ -104,7 +113,9 @@ def temp_sql_confs(spark: SparkSession, confs: dict[str, str]):
 def tune_session(spark: SparkSession) -> SparkSession:
     """Apply runtime-settable parity/perf confs to an externally provided
     session (the driver hands us its own SparkSession; master/memory are
-    fixed by then but SQL confs are not)."""
+    fixed by then but SQL confs are not). ``spark.python.daemon.module``
+    is static too, so such a session keeps the stock ``pyspark.daemon``
+    and its tasks still re-read pyspark.zip (see the module docstring)."""
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     spark.conf.set("spark.sql.adaptive.enabled", "true")
     spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "true")

@@ -1,6 +1,8 @@
-"""File-backed fake Redis Streams client for the redis_stream data source
-tests. State lives in a directory (one JSONL file per stream) so driver
-and executor processes see the same streams without a server.
+"""File-backed fake Redis Streams client for the redis_stream data source,
+used by the tests and by bench.py's watch probes (pass
+``client_factory="cdc_dedupe_spark.sources.fake_redis:make_client"``).
+State lives in a directory (one JSONL file per stream) so driver and
+executor processes see the same streams without a server.
 
 Entry ids are synthesized as "1-<line number>" — monotonic per stream,
 which is all the source's offset logic relies on.

@@ -1,11 +1,11 @@
 """Live-Redis validation (VERDICT r6 'What's missing' #2).
 
 Everything else in the suite drives the redis_stream source/sink through
-``tests/fake_redis.py`` because the ``redis`` package is not installed in
-the build container. These tests run the same watch topology against a
-REAL server when one is available, validating the XREADGROUP/XACK/XDEL
-interop and the ``_is_missing_stream`` error taxonomy that the fake can
-only assert by construction.
+``cdc_dedupe_spark/sources/fake_redis.py`` because the ``redis`` package
+is an optional extra. These tests run the same watch
+topology against a REAL server when one is available, validating the
+XREADGROUP/XACK/XDEL interop and the ``_is_missing_stream`` error
+taxonomy that the fake can only assert by construction.
 
 Enable with::
 

@@ -19,7 +19,7 @@ from cdc_dedupe_spark.sources.redis_stream import (
     _split_range,
     ensure_group,
 )
-from tests.fake_redis import FakeRedis
+from cdc_dedupe_spark.sources.fake_redis import FakeRedis
 
 ENVELOPE = '{"after": {"entity_id": "%d"}}'
 
@@ -27,7 +27,7 @@ ENVELOPE = '{"after": {"entity_id": "%d"}}'
 def _opts(tmp_path, streams: str) -> dict[str, str]:
     return {
         "streams": streams,
-        "client_factory": "tests.fake_redis:make_client",
+        "client_factory": "cdc_dedupe_spark.sources.fake_redis:make_client",
         "fake_dir": str(tmp_path),
     }
 
@@ -123,7 +123,7 @@ def test_stream_sink_xadds_packed_batches(spark, tmp_path):
     src = spark.readStream.schema("target_stream string, ids string").json(str(in_dir))
     q = (
         src.writeStream.format("redis_stream")
-        .option("client_factory", "tests.fake_redis:make_client")
+        .option("client_factory", "cdc_dedupe_spark.sources.fake_redis:make_client")
         .option("fake_dir", str(out_dir))
         .option("checkpointLocation", str(tmp_path / "ckpt"))
         .trigger(availableNow=True)
@@ -212,7 +212,7 @@ def test_writer_pipelines_xadds(spark, tmp_path):
     src = spark.readStream.schema("target_stream string, ids string").json(str(in_dir))
     q = (
         src.writeStream.format("redis_stream")
-        .option("client_factory", "tests.fake_redis:make_client")
+        .option("client_factory", "cdc_dedupe_spark.sources.fake_redis:make_client")
         .option("fake_dir", str(out_dir))
         .option("checkpointLocation", str(tmp_path / "ckpt"))
         .trigger(availableNow=True)

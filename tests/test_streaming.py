@@ -680,3 +680,20 @@ def test_run_to_memory_rejects_unknown_state_store(spark, sf_dir):
     stream = events_stream(spark, sf_dir)
     with pytest.raises(ValueError, match="rocksdb"):
         run_to_memory(stream, "bad_store_test", state_store="rocks")
+
+
+def test_row_emit_frames_are_independent_and_typed_by_schema():
+    from cdc_dedupe_spark.queries.streaming import _RowEmit, _TWS_OUT
+
+    emit = _RowEmit(_TWS_OUT)
+    first = emit(1, 1, False, 0, 1, 3, 3, 10)
+    first["extra"] = 0
+    first.iat[0, 0] = 99
+    second = emit(2, 5, True, 1, 2, 7, 4, 20)
+    assert list(second.columns) == _TWS_OUT.fieldNames()
+    assert second.iloc[0].tolist() == [2, 5, True, 1, 2, 7, 4, 20]
+    second.iat[0, 0] = 42
+    assert emit(3, 1, False, 0, 0, 0, 0, 0).iloc[0].tolist() == [3, 1, False, 0, 0, 0, 0, 0]
+    assert second.dtypes.astype(str).tolist() == [
+        "int64", "int64", "bool", "int64", "int64", "int64", "int64", "int64",
+    ]

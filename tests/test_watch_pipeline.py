@@ -193,7 +193,7 @@ def test_watch_redis_to_redis_topology(spark, tmp_path, ack):
     the file-backed fake client. acknowledge=delete empties the source
     stream (S20, WatchTests.java:151-154); simple retains all entries
     (WatchTests.java:245-248)."""
-    from tests.fake_redis import FakeRedis
+    from cdc_dedupe_spark.sources.fake_redis import FakeRedis
 
     cfg = load_config(_write_config(tmp_path, ack))
     redis_dir = tmp_path / "redis"
@@ -208,7 +208,7 @@ def test_watch_redis_to_redis_topology(spark, tmp_path, ack):
         source_dir=None,
         work_dir=str(tmp_path / "work"),
         redis_options={
-            "client_factory": "tests.fake_redis:make_client",
+            "client_factory": "cdc_dedupe_spark.sources.fake_redis:make_client",
             "fake_dir": str(redis_dir),
         },
         redis_sink=True,
@@ -250,7 +250,7 @@ def test_watch_batch_reads_source_once(spark, tmp_path):
     partition exactly ONCE — one XRANGE per (stream, batch), not one per
     action. Redis-sink mode with group+delete acks = the maximal action
     count."""
-    from tests.fake_redis import FakeRedis
+    from cdc_dedupe_spark.sources.fake_redis import FakeRedis
 
     cfg = load_config(_write_config(tmp_path, "delete"))
     redis_dir = tmp_path / "redis"
@@ -265,7 +265,7 @@ def test_watch_batch_reads_source_once(spark, tmp_path):
         source_dir=None,
         work_dir=str(tmp_path / "work"),
         redis_options={
-            "client_factory": "tests.fake_redis:make_client",
+            "client_factory": "cdc_dedupe_spark.sources.fake_redis:make_client",
             "fake_dir": str(redis_dir),
         },
         redis_sink=True,
@@ -288,7 +288,7 @@ def test_watch_drain_keeps_cap_watermark_fresh(spark, tmp_path):
     dir can never seed a regressed offset from a stale file. A
     user-supplied cap in drain mode is stripped with a warning (a capped
     latestOffset answer would silently truncate the drain)."""
-    from tests.fake_redis import FakeRedis
+    from cdc_dedupe_spark.sources.fake_redis import FakeRedis
 
     cfg = load_config(_write_config(tmp_path))
     redis_dir = tmp_path / "redis"
@@ -304,7 +304,7 @@ def test_watch_drain_keeps_cap_watermark_fresh(spark, tmp_path):
             source_dir=None,
             work_dir=str(tmp_path / "work"),
             redis_options={
-                "client_factory": "tests.fake_redis:make_client",
+                "client_factory": "cdc_dedupe_spark.sources.fake_redis:make_client",
                 "fake_dir": str(redis_dir),
                 "max_entries_per_batch": "1",  # would truncate the drain
             },
@@ -410,7 +410,7 @@ def test_watch_redis_sink_idempotent_replay(spark, tmp_path):
     XADDs entirely; a started-without-done replay scrubs the crashed
     attempt's entries (they carry batch=<batchId>) and rewrites exactly
     one copy."""
-    from tests.fake_redis import FakeRedis
+    from cdc_dedupe_spark.sources.fake_redis import FakeRedis
 
     cfg = load_config(_write_config(tmp_path, "simple"))
     redis_dir = tmp_path / "redis"
@@ -418,7 +418,7 @@ def test_watch_redis_sink_idempotent_replay(spark, tmp_path):
     for i, eid in enumerate([1, 2, 1, 2], start=1):
         env = _envelope_compact(f"1-{i}", eid)
         fake.xadd(env["stream"], env["fields"])
-    redis_opts = {"client_factory": "tests.fake_redis:make_client", "fake_dir": str(redis_dir)}
+    redis_opts = {"client_factory": "cdc_dedupe_spark.sources.fake_redis:make_client", "fake_dir": str(redis_dir)}
     work = str(tmp_path / "work")
 
     def run() -> None:
@@ -490,7 +490,7 @@ def test_watch_delete_with_foreign_consumer_pel(spark, tmp_path):
     assert the source still empties (WatchTests.java:151-154), and real
     Redis leaves the foreign PEL dangling rather than blocking XDEL. The
     pipeline must neither skip the delete nor touch the foreign group."""
-    from tests.fake_redis import FakeRedis
+    from cdc_dedupe_spark.sources.fake_redis import FakeRedis
 
     cfg = load_config(_write_config(tmp_path, "delete"))
     redis_dir = tmp_path / "redis"
@@ -512,7 +512,7 @@ def test_watch_delete_with_foreign_consumer_pel(spark, tmp_path):
         source_dir=None,
         work_dir=str(tmp_path / "work"),
         redis_options={
-            "client_factory": "tests.fake_redis:make_client",
+            "client_factory": "cdc_dedupe_spark.sources.fake_redis:make_client",
             "fake_dir": str(redis_dir),
         },
         redis_sink=True,
@@ -540,7 +540,7 @@ def test_watch_crash_mid_delete_ack_no_output_loss(spark, tmp_path):
     the now-partial source) and only finish the remaining acks. Marking
     AFTER the ack (the old order) scrubbed and rewrote the batch from
     whatever entries survived the partial delete — permanent loss."""
-    from tests.fake_redis import FakeRedis
+    from cdc_dedupe_spark.sources.fake_redis import FakeRedis
 
     cfg = load_config(_write_config(tmp_path, "delete"))
     redis_dir = tmp_path / "redis"
@@ -550,7 +550,7 @@ def test_watch_crash_mid_delete_ack_no_output_loss(spark, tmp_path):
         fake.xadd(env["stream"], env["fields"])
 
     crash_opts = {
-        "client_factory": "tests.fake_redis:make_xdel_crash_client",
+        "client_factory": "cdc_dedupe_spark.sources.fake_redis:make_xdel_crash_client",
         "fake_dir": str(redis_dir),
         "crash_state": str(tmp_path / "crash.flag"),
     }
@@ -581,7 +581,7 @@ def test_watch_redis_source_json_sink_still_acks(spark, tmp_path):
     S15-S20 ack path is about the source stream, not the sink kind — the
     source must still be XACKed and emptied (round-8 review: the ack
     block was wrongly gated on redis_sink)."""
-    from tests.fake_redis import FakeRedis
+    from cdc_dedupe_spark.sources.fake_redis import FakeRedis
 
     cfg = load_config(_write_config(tmp_path, "delete"))
     redis_dir = tmp_path / "redis"
@@ -593,7 +593,7 @@ def test_watch_redis_source_json_sink_still_acks(spark, tmp_path):
     handles = watch(
         spark, cfg, source_dir=None, work_dir=str(tmp_path / "work"),
         redis_options={
-            "client_factory": "tests.fake_redis:make_client",
+            "client_factory": "cdc_dedupe_spark.sources.fake_redis:make_client",
             "fake_dir": str(redis_dir),
         },
         redis_sink=False,
@@ -758,7 +758,7 @@ STATIC_EVENTS = [
 def _sink_static_batch(spark, tmp_path, batch_ids=(3,)):
     """Sink STATIC_EVENTS once per batch id into ``tmp_path/work`` (source
     acks go to a FakeRedis); returns (work dir, fake, jobs per batch id)."""
-    from tests.fake_redis import FakeRedis
+    from cdc_dedupe_spark.sources.fake_redis import FakeRedis
 
     from cdc_dedupe_spark.streaming.pipeline import (
         ENVELOPE_ROW_SCHEMA,
@@ -771,7 +771,7 @@ def _sink_static_batch(spark, tmp_path, batch_ids=(3,)):
     work = tmp_path / "work"
     fake = FakeRedis(str(tmp_path / "redis"))
     ack_options = {
-        "client_factory": "tests.fake_redis:make_client",
+        "client_factory": "cdc_dedupe_spark.sources.fake_redis:make_client",
         "fake_dir": str(tmp_path / "redis"),
     }
     manifest = SinkManifest(work / "checkpoint" / "sink_manifest")
