@@ -11,6 +11,13 @@ every output column — count() would let Catalyst prune computed columns
 and silently skip map-only kernels; driver transfer stays O(1) so the
 measurement is engine time, not driver materialization). BASELINE.md
 targets: <= 30 s/query, <= 15 min suite at sf0.1.
+
+  python bench.py NAME...
+
+times only the named queries, the same way (corpus, warm-ups, runs), and
+prints the same line for them. It skips the streaming probes and the skew
+sweep, and writes neither BENCH_LOCAL.json nor SKEW_LOCAL.json. For a
+query's plan, use ``python -m cdc_dedupe_spark.cli explain NAME``.
 """
 
 from __future__ import annotations
@@ -114,11 +121,7 @@ def force_full_plan(df) -> str:
     aggregates whose plans count() cannot prune meaningfully). Real
     execution errors propagate to the per-query failure handler
     instead of being silently re-run under count() with a doubled,
-    mislabeled time (ADVICE r13 #1).
-
-    Module-level (r20, ADVICE r19 #5) so scripts/qprof.py can import the
-    EXACT bench methodology instead of re-implementing it; behavior is
-    byte-identical to the r19 inline version."""
+    mislabeled time."""
     from pyspark.sql import functions as F
 
     if any(_has_map(f.dataType) for f in df.schema.fields):
@@ -161,13 +164,12 @@ def _probe_pipeline(spark, prefix: str):
     import tempfile
 
     from cdc_dedupe_spark.config import load_config
+    from cdc_dedupe_spark.session import temp_sql_confs
     from cdc_dedupe_spark.streaming.pipeline import watch
     from cdc_dedupe_spark.streaming.run import STATE_STORE_PROVIDERS, _PROVIDER_CONF
     from cdc_dedupe_spark.sources.fake_redis import FakeRedis
 
     tmp = Path(tempfile.mkdtemp(prefix=prefix))
-    prev_provider = spark.conf.get(_PROVIDER_CONF, None)
-    spark.conf.set(_PROVIDER_CONF, STATE_STORE_PROVIDERS["rocksdb"])
     try:
         (tmp / "config.yaml").write_text(_LATENCY_CONFIG)
         cfg = load_config(tmp / "config.yaml")
@@ -194,12 +196,9 @@ def _probe_pipeline(spark, prefix: str):
                 },
             ).query
 
-        yield add, start
+        with temp_sql_confs(spark, {_PROVIDER_CONF: STATE_STORE_PROVIDERS["rocksdb"]}):
+            yield add, start
     finally:
-        if prev_provider is None:
-            spark.conf.unset(_PROVIDER_CONF)
-        else:
-            spark.conf.set(_PROVIDER_CONF, prev_provider)
         shutil.rmtree(tmp, ignore_errors=True)
 
 
@@ -326,26 +325,33 @@ def _backlog_drain_probe(
     }
 
 
-def main() -> int:
+def main(only: list[str]) -> int:
+    """Time every query, or only the ``only`` ones (see the module
+    docstring)."""
+    from cdc_dedupe_spark.queries import REGISTRY
+
+    unknown = [n for n in only if n not in REGISTRY]
+    if unknown:
+        raise SystemExit(f"unknown queries {unknown}; valid names: {' '.join(sorted(REGISTRY))}")
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = float(Path(sf_dir).name.removeprefix("sf")) if Path(sf_dir).name.startswith("sf") else -1.0
     sf_dir, rechunked = _maybe_rechunk(sf_dir)
 
-    # Parallelism-defect probe (diag.py, VERDICT r13 #5a): run under an
-    # event log so single-task stages are flagged post-run. ALWAYS a
-    # fresh per-run subdirectory — even when the user exports
-    # SPARK_GRAFT_EVENTLOG_DIR (then used as the parent), so skew_flags
-    # never parses a previous run's logs into this run's SKEW_LOCAL.json
-    # (ADVICE r14 #3). Every log file in evlog_dir belongs to this bench.
-    import tempfile
+    if not only:
+        # Parallelism-defect probe (diag.py): run under an event log so
+        # single-task stages are flagged post-run. ALWAYS a fresh per-run
+        # subdirectory — even when the user exports SPARK_GRAFT_EVENTLOG_DIR
+        # (then used as the parent), so skew_flags never parses a previous
+        # run's logs into this run's SKEW_LOCAL.json. Every log file in
+        # evlog_dir belongs to this bench.
+        import tempfile
 
-    _ev_base = os.environ.get("SPARK_GRAFT_EVENTLOG_DIR")
-    if _ev_base:
-        os.makedirs(_ev_base, exist_ok=True)
-    evlog_dir = tempfile.mkdtemp(prefix="bench-evlog-", dir=_ev_base)
-    os.environ["SPARK_GRAFT_EVENTLOG_DIR"] = evlog_dir
+        _ev_base = os.environ.get("SPARK_GRAFT_EVENTLOG_DIR")
+        if _ev_base:
+            os.makedirs(_ev_base, exist_ok=True)
+        evlog_dir = tempfile.mkdtemp(prefix="bench-evlog-", dir=_ev_base)
+        os.environ["SPARK_GRAFT_EVENTLOG_DIR"] = evlog_dir
 
-    from cdc_dedupe_spark.queries import REGISTRY
     from cdc_dedupe_spark.session import get_spark
 
     spark = get_spark("cdc-dedupe-spark-bench")
@@ -387,22 +393,23 @@ def main() -> int:
     # (VERDICT r8 "Next round" #6). Raw per-query numbers stay untouched
     # for round-over-round comparability.
     stream_overhead = None
-    try:
-        from cdc_dedupe_spark.sources.replay import events_stream
-        from cdc_dedupe_spark.streaming.run import run_to_memory
+    if not only:
+        try:
+            from cdc_dedupe_spark.sources.replay import events_stream
+            from cdc_dedupe_spark.streaming.run import run_to_memory
 
-        samples = []
-        for _ in range(3):
-            t0 = time.perf_counter()
-            run_to_memory(
-                events_stream(spark, sf_dir).groupBy().count(),
-                "bench_noop_stream",
-                output_mode="complete",
-            ).count()
-            samples.append(time.perf_counter() - t0)
-        stream_overhead = round(sorted(samples)[1], 3)  # median of 3
-    except Exception as e:
-        print(f"stream overhead probe failed (continuing): {e}", file=sys.stderr)
+            samples = []
+            for _ in range(3):
+                t0 = time.perf_counter()
+                run_to_memory(
+                    events_stream(spark, sf_dir).groupBy().count(),
+                    "bench_noop_stream",
+                    output_mode="complete",
+                ).count()
+                samples.append(time.perf_counter() - t0)
+            stream_overhead = round(sorted(samples)[1], 3)  # median of 3
+        except Exception as e:
+            print(f"stream overhead probe failed (continuing): {e}", file=sys.stderr)
 
     # Median-of-N suite runs (VERDICT r17 ask #2): r17's committed headline
     # (392.5 s) was one run under afternoon host load while three same-HEAD
@@ -438,7 +445,7 @@ def main() -> int:
             break
         per_query: dict[str, float] = {}
         total = 0.0
-        for name in sorted(REGISTRY):
+        for name in sorted(only or REGISTRY):
             if name in failures:
                 continue  # failed once; re-running N times hides nothing new
             q = REGISTRY[name]
@@ -509,7 +516,7 @@ def main() -> int:
     # BASELINE.md row "p50 batch commit <= 10 s under trigger='5 seconds'"
     # (VERDICT r16 ask #6): measured under a REAL processing-time trigger;
     # adds ~(n_batches * trigger) wall, opt out with SPARK_GRAFT_BENCH_LATENCY=0.
-    if os.environ.get("SPARK_GRAFT_BENCH_LATENCY", "1") == "1":
+    if not only and os.environ.get("SPARK_GRAFT_BENCH_LATENCY", "1") == "1":
         try:
             result["microbatch_latency"] = _latency_probe(spark)
         except Exception as e:
@@ -526,53 +533,54 @@ def main() -> int:
     # the session stops; parse it and persist per-stage flags. The
     # printed line carries only the count — SKEW_LOCAL.json has details.
     spark.stop()
-    try:
-        from cdc_dedupe_spark.diag import skew_flags
+    if not only:
+        try:
+            from cdc_dedupe_spark.diag import skew_flags
 
-        probe_runs = tuple(
-            rid
-            for rid in (
-                (result.get("microbatch_latency") or {}).get("query_run_id"),
-                (result.get("backlog_drain") or {}).get("query_run_ids", ()),
+            probe_runs = tuple(
+                rid
+                for rid in (
+                    (result.get("microbatch_latency") or {}).get("query_run_id"),
+                    (result.get("backlog_drain") or {}).get("query_run_ids", ()),
+                )
+                for rid in (rid if isinstance(rid, (list, tuple)) else (rid,))
+                if rid
             )
-            for rid in (rid if isinstance(rid, (list, tuple)) else (rid,))
-            if rid
-        )
-        raw = [
-            f
-            for f in skew_flags(evlog_dir, min_task_sec=1.0)
-            if f["query"] != "warmup"
-            and not any(rid in f["query"] for rid in probe_runs)
-        ]
-        # N suite runs replay every stage N times — collapse repeats of the
-        # same defect to one flag (the worst occurrence) with a count, so
-        # "skew_flags: 3" still means three DISTINCT defects, not one seen
-        # three times.
-        by_defect: dict[tuple, dict] = {}
-        for f in raw:
-            k = (f["query"], f["kind"])
-            if k not in by_defect or f["max_task_sec"] > by_defect[k]["max_task_sec"]:
-                prev = by_defect.get(k, {}).get("occurrences", 0)
-                by_defect[k] = {**f, "occurrences": prev + 1}
-            else:
-                by_defect[k]["occurrences"] += 1
-        flags = sorted(
-            by_defect.values(), key=lambda f: -f["max_task_sec"]
-        )
-        Path(_REPO, "SKEW_LOCAL.json").write_text(
-            json.dumps({"sf": sf, "min_task_sec": 1.0, "flags": flags}, indent=1) + "\n"
-        )
-        result["skew_flags"] = len(flags)
-        if flags:
-            worst = max(flags, key=lambda f: f["max_task_sec"])
-            print(f"skew flags: {len(flags)} (worst: {worst})", file=sys.stderr)
-    except Exception as e:
-        print(f"skew sweep failed (continuing): {type(e).__name__}: {e}", file=sys.stderr)
+            raw = [
+                f
+                for f in skew_flags(evlog_dir, min_task_sec=1.0)
+                if f["query"] != "warmup"
+                and not any(rid in f["query"] for rid in probe_runs)
+            ]
+            # N suite runs replay every stage N times — collapse repeats of the
+            # same defect to one flag (the worst occurrence) with a count, so
+            # "skew_flags: 3" still means three DISTINCT defects, not one seen
+            # three times.
+            by_defect: dict[tuple, dict] = {}
+            for f in raw:
+                k = (f["query"], f["kind"])
+                if k not in by_defect or f["max_task_sec"] > by_defect[k]["max_task_sec"]:
+                    prev = by_defect.get(k, {}).get("occurrences", 0)
+                    by_defect[k] = {**f, "occurrences": prev + 1}
+                else:
+                    by_defect[k]["occurrences"] += 1
+            flags = sorted(
+                by_defect.values(), key=lambda f: -f["max_task_sec"]
+            )
+            Path(_REPO, "SKEW_LOCAL.json").write_text(
+                json.dumps({"sf": sf, "min_task_sec": 1.0, "flags": flags}, indent=1) + "\n"
+            )
+            result["skew_flags"] = len(flags)
+            if flags:
+                worst = max(flags, key=lambda f: f["max_task_sec"])
+                print(f"skew flags: {len(flags)} (worst: {worst})", file=sys.stderr)
+        except Exception as e:
+            print(f"skew sweep failed (continuing): {type(e).__name__}: {e}", file=sys.stderr)
 
-    # Persist the full result (the r3/r4 driver tail-capture truncated the
-    # printed line), then print last so no JVM shutdown logs land after
-    # the JSON and push it out of a tail window.
-    Path(_REPO, "BENCH_LOCAL.json").write_text(json.dumps(result) + "\n")
+        # Persist the full result (a tail capture of the output can cut the
+        # printed line), then print last so no JVM shutdown logs land after
+        # the JSON and push it out of a tail window.
+        Path(_REPO, "BENCH_LOCAL.json").write_text(json.dumps(result) + "\n")
     # The driver captures only the LAST 2000 bytes of output (measured:
     # BENCH_r04 tail == 2000 chars while the full line was 2629 -> parsed
     # null). Budget the printed line: keep the slowest queries (the ones
@@ -602,4 +610,4 @@ def main() -> int:
 
 
 if __name__ == "__main__":
-    sys.exit(main())
+    sys.exit(main(sys.argv[1:]))

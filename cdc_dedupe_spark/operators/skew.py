@@ -48,15 +48,3 @@ def salted_join(
     out = big_salted.join(small_salted, keys + [SALT_COL], how)
     return out.drop(SALT_COL)
 
-
-def salt_counts(df: DataFrame, keys: list[str], top: int = 10) -> DataFrame:
-    """Diagnostic: the heaviest join keys and their row share — the input
-    you size ``salt`` with."""
-    total = df.count()
-    return (
-        df.groupBy(*keys)
-        .agg(F.count(F.lit(1)).alias("n_rows"))
-        .withColumn("share", F.col("n_rows") / F.lit(float(total)))
-        .orderBy(F.col("n_rows").desc(), *keys)
-        .limit(top)
-    )

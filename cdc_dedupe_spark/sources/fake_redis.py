@@ -217,6 +217,23 @@ def make_client(options: dict) -> FakeRedis:
     return FakeRedis(options["fake_dir"])
 
 
+def make_counting_client(options: dict) -> FakeRedis:
+    """Client that appends ``open:<pid>`` when it is made and
+    ``close:<pid>`` when it is closed to ``<fake_dir>/_clients.log``, from
+    whichever process holds it — for checking that every client opened is
+    closed."""
+    client = make_client(options)
+    log = client.root / "_clients.log"
+
+    def note(event: str) -> None:
+        with open(log, "a") as f:
+            f.write(f"{event}:{os.getpid()}\n")
+
+    note("open")
+    client.close = lambda: note("close")  # type: ignore[attr-defined]
+    return client
+
+
 def make_xdel_crash_client(options: dict) -> "FakeRedis":
     """Client whose FIRST xdel performs the deletion and then raises —
     simulating a driver crash mid-acknowledge=delete (some source entries

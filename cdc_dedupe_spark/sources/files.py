@@ -65,19 +65,6 @@ def read_table(
     return reader.options(**options).json(path)
 
 
-def convert_to_parquet(
-    df: DataFrame, out_path: str, partition_by: tuple[str, ...] = ()
-) -> None:
-    """One-shot ingest conversion: land a csv/json-read frame as parquet
-    (optionally partitioned) so every later pass gets the vectorized
-    reader + pushdown + pruning. The write is the only full scan the
-    slow format ever pays."""
-    w = df.write.mode("overwrite")
-    if partition_by:
-        w = w.partitionBy(*partition_by)
-    w.parquet(out_path)
-
-
 def write_bucketed_table(
     df: DataFrame,
     table_name: str,

@@ -1,7 +1,17 @@
-"""Redis Streams source/sink via PySpark's Python Data Source API — the
-engine-native replacement for the reference's Lettuce consumer/producer
+"""Redis Streams I/O for the watch pipeline — the only module that sends
+Redis commands. It replaces the reference's Lettuce consumer/producer
 (RedisSource.java:72-93 XREADGROUP poll loop; WatchStream.java:291-293
-XADD sink).
+XADD; WatchStream.java:196-220 XACK/XDEL) with:
+
+ - a streaming source (``spark.readStream.format("redis_stream")``);
+ - a batch XADD writer (``df.write.format("redis_stream")``), which the
+   pipeline calls inside ``foreachBatch``;
+ - the functions the pipeline's driver and ack pass call:
+   ``ack_entries`` (XACK/XDEL), ``scrub_batch`` (crash-replay cleanup of
+   target streams), ``seed_streams`` (the startup seed entries),
+   ``ensure_group`` (consumer-group bootstrap).
+
+Each of them opens its own client and closes it when done.
 
 Spark-first mapping of the reference's consumer-group model:
 
@@ -9,16 +19,11 @@ Spark-first mapping of the reference's consumer-group model:
    last-delivered-id); here the *checkpoint* owns offsets — Spark's
    streaming engine calls ``latestOffset`` on the driver, fans the
    (start, end] id range out to one ``InputPartition`` per watched stream,
-   and commits the range to the offset log after the sink runs. The
-   end-to-end contract is **at-least-once** with append-only sinks (XADD /
-   JSON files): a crash between sink write and offset-log commit replays
-   the batch and duplicates output — the same contract as the reference's
-   XADD-then-XACK (RedisSource.java:92). Exactly-once needs a
-   transactional or batchId-idempotent sink, not a source change.
+   and commits the range to the offset log after the sink runs. Output is
+   effectively-once only because the pipeline's batch writes are
+   batchId-idempotent (streaming/pipeline.py); XADD itself is an append.
  - one partition per source stream bounds parallelism at |streams|, like
-   the reference's one-Flux-per-table (WatchStream.java:113-115). Streams
-   far hotter than others can be split further by id sub-ranges — the
-   partition planner below is the single place to do it.
+   the reference's one-Flux-per-table (WatchStream.java:113-115).
 
 Admission control (the reference's poll batch size, config.yaml:13-15 —
 capping entries per micro-batch): the Python Data Source API's
@@ -74,13 +79,13 @@ from __future__ import annotations
 import importlib
 import json
 import warnings
+from contextlib import contextmanager
 from dataclasses import dataclass
-from typing import Any, Iterator, Sequence, Tuple
+from typing import Any, Iterable, Iterator, Sequence, Tuple
 
 from pyspark.sql.datasource import (
     DataSource,
     DataSourceStreamReader,
-    DataSourceStreamWriter,
     DataSourceWriter,
     InputPartition,
     WriterCommitMessage,
@@ -94,46 +99,15 @@ ZERO_ID = "0-0"
 # Commands per pipelined round trip on the XADD/XACK/XDEL paths.
 PIPELINE_CHUNK = 1000
 
+# Field that stamps a target-stream entry with the micro-batch that XADDed
+# it: the writer sets it, scrub_batch deletes by it.
+_BATCH_FIELD = "batch"
+
 
 def _record_id_tuple(record_id: str) -> Tuple[int, int]:
     """'millis-seq' -> (millis, seq) for ordering comparisons."""
     ms, _, seq = record_id.partition("-")
     return int(ms), int(seq or 0)
-
-
-_MAX_SEQ = (1 << 63) - 1  # valid XRANGE seq bound; above any generated seq
-
-
-def _split_range(start_id: str, end_id: str, k: int) -> list[Tuple[str, str]]:
-    """Split the (start_id, end_id] id range into <= k disjoint sub-ranges
-    whose union is exactly the input range — the hot-stream admission
-    control the reference gets from its poll batch cap (config.yaml:13-15).
-
-    Ids order lexicographically by (millis, seq). When the range spans
-    multiple millis we cut the millis space evenly (boundary = "ms-MAXSEQ",
-    so each cut keeps whole-millis groups together); within a single millis
-    we cut the seq space (auto-generated seqs are contiguous, so even cuts
-    balance well). Empty sub-ranges cost one no-op XRANGE each."""
-    if k <= 1:
-        return [(start_id, end_id)]
-    (sms, sseq), (ems, eseq) = _record_id_tuple(start_id), _record_id_tuple(end_id)
-    bounds: list[str] = []
-    if ems > sms:
-        k = min(k, ems - sms)
-        for i in range(1, k):
-            bounds.append(f"{sms + (ems - sms) * i // k}-{_MAX_SEQ}")
-    else:
-        k = min(k, eseq - sseq)
-        for i in range(1, k):
-            bounds.append(f"{sms}-{sseq + (eseq - sseq) * i // k}")
-    out: list[Tuple[str, str]] = []
-    prev = start_id
-    for b in bounds:
-        if _record_id_tuple(b) > _record_id_tuple(prev):
-            out.append((prev, b))
-            prev = b
-    out.append((prev, end_id))
-    return out
 
 
 def _is_missing_stream(e: Exception) -> bool:
@@ -178,6 +152,22 @@ def make_client(options: dict[str, str]) -> Any:
         db=int(options.get("db", "0")),
         decode_responses=True,
     )
+
+
+def _close(client: Any) -> None:
+    # Fake clients without close() are fine.
+    getattr(client, "close", lambda: None)()
+
+
+@contextmanager
+def connect(options: dict[str, str]) -> Iterator[Any]:
+    """A client for the block, closed on exit: a long-lived process that
+    drops clients unclosed keeps their sockets until GC."""
+    client = make_client(options)
+    try:
+        yield client
+    finally:
+        _close(client)
 
 
 def ensure_group(client: Any, stream: str, group: str, start_id: str = ZERO_ID) -> None:
@@ -358,50 +348,23 @@ class RedisStreamReader(DataSourceStreamReader):
         return out
 
     def partitions(self, start: dict, end: dict) -> Sequence[StreamRange]:
-        """One task per stream with new entries; hot streams additionally
-        split into id sub-ranges when ``max_entries_per_task`` is set —
-        recovering the reference's poll-size admission control
-        (config.yaml:13-15, RedisSource.java:86) at the task level: a burst
-        stream becomes ceil(est/cap) parallel bounded reads instead of one
-        unbounded task. The estimate is XLEN via XINFO (O(1), driver-side,
-        one call per hot stream); it over-counts entries outside the range,
-        which only makes splits finer — never lost or duplicated ids, since
-        the sub-ranges partition (start, end] exactly."""
-        cap = int(self.options.get("max_entries_per_task", "0"))
+        """One task per stream with new entries."""
         parts: list[StreamRange] = []
         for s in self.streams:
-            s_start = start.get(s, ZERO_ID)
-            s_end = end.get(s, ZERO_ID)
-            if _record_id_tuple(s_end) <= _record_id_tuple(s_start):
-                continue
-            k = 1
-            if cap > 0:
-                try:
-                    est = int(self._c().xinfo_stream(s).get("length", 0))
-                except Exception as e:
-                    if not _is_missing_stream(e):
-                        raise
-                    est = 0
-                k = min(-(-est // cap) if est else 1, 64)
-            for sub_start, sub_end in _split_range(s_start, s_end, k):
-                parts.append(StreamRange(stream=s, start_id=sub_start, end_id=sub_end))
+            s_start, s_end = start.get(s, ZERO_ID), end.get(s, ZERO_ID)
+            if _record_id_tuple(s_end) > _record_id_tuple(s_start):
+                parts.append(StreamRange(stream=s, start_id=s_start, end_id=s_end))
         # Spark requires >=1 partition; an empty range reads nothing.
         return parts or [StreamRange(stream=self.streams[0], start_id=ZERO_ID, end_id=ZERO_ID)]
 
     def read(self, partition: StreamRange) -> Iterator[Tuple[str, str, dict]]:
         if partition.start_id == partition.end_id:
             return
-        client = make_client(self.options)
-        try:
+        with connect(self.options) as client:
             # '(' prefix = exclusive start (the offset already consumed).
             entries = client.xrange(partition.stream, f"({partition.start_id}", partition.end_id)
             for record_id, fields in entries:
                 yield record_id, partition.stream, dict(fields)
-        finally:
-            # Task-scoped client: close it (long-lived executors churn one
-            # connection per (stream, batch) otherwise — sockets linger
-            # until GC). Fake clients without close() are fine.
-            getattr(client, "close", lambda: None)()
 
     def commit(self, end: dict) -> None:
         """Offsets live in the checkpoint; nothing to do server-side (XACK
@@ -411,76 +374,47 @@ class RedisStreamReader(DataSourceStreamReader):
         batch, then capped again)."""
         self._merge_watermark(end)
 
-
-class RedisStreamWriter(DataSourceStreamWriter):
-    """Sink: XADD one entry per row — field ``ids`` carries the packed JSON
-    array (WatchStream.java:285-293 shape). Executors write their own
-    partitions. XADD is append-only and NOT idempotent: a micro-batch
-    retried after a crash between write and checkpoint commit appends its
-    entries again — at-least-once, exactly the reference's XADD-then-XACK
-    contract (streaming/pipeline.py module docstring)."""
-
-    def __init__(self, schema: StructType, options: dict[str, str]) -> None:
-        self.options = dict(options)
-        self.field = options.get("field", "ids")
-        self.stream_col = options.get("stream_column", "target_stream")
-        self.value_col = options.get("value_column", "ids")
-        # Constant fields merged into every entry (JSON dict) — the watch
-        # pipeline's idempotent mode stamps entries with their batchId so
-        # a crash-replay can identify and scrub a partial attempt.
-        self.extra_fields: dict[str, str] = (
-            json.loads(options["extra_fields"]) if "extra_fields" in options else {}
-        )
-        self.names = [f.name for f in schema.fields]
-
-    def write(self, rows: Iterator[Any]) -> WriterCommitMessage:
-        # Pipeline the XADDs (one network round trip per PIPELINE_CHUNK
-        # entries instead of per entry, WatchStream.java:291-293 does the
-        # same batching via Reactor). Falls back to per-call for clients
-        # without pipeline support.
-        client = make_client(self.options)
-        try:
-            si, vi = self.names.index(self.stream_col), self.names.index(self.value_col)
-            pipe = client.pipeline() if hasattr(client, "pipeline") else None
-            n = 0
-            for row in rows:
-                fields = {self.field: row[vi], **self.extra_fields}
-                (pipe if pipe is not None else client).xadd(row[si], fields)
-                n += 1
-                if pipe is not None and n % PIPELINE_CHUNK == 0:
-                    pipe.execute()
-            if pipe is not None and n % PIPELINE_CHUNK:
-                pipe.execute()
-            return WriterCommitMessage()
-        finally:
-            getattr(client, "close", lambda: None)()
-
-    def commit(self, messages, batchId) -> None:  # noqa: N803 (API signature)
-        pass
-
-    def abort(self, messages, batchId) -> None:  # noqa: N803 (API signature)
-        pass
+    def stop(self) -> None:
+        """Close the client the offset probes cached. Spark calls this when
+        the source runner's loop ends; on a normal query stop, Spark 4.1.2
+        ends the runner process instead, which closes the connection."""
+        if self._client is not None:
+            _close(self._client)
+            self._client = None
 
 
 class RedisBatchWriter(DataSourceWriter):
-    """Batch-mode XADD writer (``df.write.format("redis_stream")``) — the
-    shape ``foreachBatch`` uses to land packed batches on target streams."""
+    """``df.write.format("redis_stream")``: XADD one entry per row to the
+    stream in its ``target_stream`` column, with field ``ids`` set to its
+    ``ids`` column (the packed JSON array, WatchStream.java:285-293 shape).
+    With the ``batch_id`` option set, every entry also carries
+    ``batch=<batch_id>``, which ``scrub_batch`` deletes by. XADD is an
+    append: a retried micro-batch is kept from duplicating its entries by
+    the watch pipeline's manifest and scrub, not by this writer."""
 
     def __init__(self, schema: StructType, options: dict[str, str]) -> None:
-        self._w = RedisStreamWriter(schema, options)
+        self.options = dict(options)
+        self.stamp = {_BATCH_FIELD: options["batch_id"]} if "batch_id" in options else {}
+        names = [f.name for f in schema.fields]
+        self.stream_i, self.ids_i = names.index("target_stream"), names.index("ids")
 
     def write(self, rows: Iterator[Any]) -> WriterCommitMessage:
-        return self._w.write(rows)
-
-    def commit(self, messages) -> None:
-        pass
-
-    def abort(self, messages) -> None:
-        pass
+        # Pipeline the XADDs: one network round trip per PIPELINE_CHUNK
+        # entries instead of per entry (WatchStream.java:291-293 batches
+        # the same way through Reactor).
+        with connect(self.options) as client:
+            pipe = client.pipeline()
+            for n, row in enumerate(rows, start=1):
+                pipe.xadd(row[self.stream_i], {"ids": row[self.ids_i], **self.stamp})
+                if n % PIPELINE_CHUNK == 0:
+                    pipe.execute()
+            pipe.execute()
+        return WriterCommitMessage()
 
 
 class RedisStreamDataSource(DataSource):
-    """``spark.readStream.format("redis_stream")`` after
+    """``spark.readStream.format("redis_stream")`` and
+    ``df.write.format("redis_stream")`` after
     ``spark.dataSource.register(RedisStreamDataSource)``."""
 
     @classmethod
@@ -493,18 +427,56 @@ class RedisStreamDataSource(DataSource):
     def streamReader(self, schema: StructType) -> RedisStreamReader:
         return RedisStreamReader(schema, self.options)
 
-    def streamWriter(self, schema: StructType, overwrite: bool) -> RedisStreamWriter:
-        return RedisStreamWriter(schema, self.options)
-
     def writer(self, schema: StructType, overwrite: bool) -> RedisBatchWriter:
         return RedisBatchWriter(schema, self.options)
 
 
-def register(spark) -> None:
-    spark.dataSource.register(RedisStreamDataSource)
+def ack_entries(
+    options: dict[str, str], group: str | None, delete: bool, rows: Iterable[Any]
+) -> None:
+    """The watch pipeline's source ack for one partition of ``(stream,
+    offset)`` rows: XACK against ``group`` (WatchStream.java:196-205),
+    then XDEL under ``delete`` (WatchStream.java:207-220). Ids are grouped
+    per stream and sent PIPELINE_CHUNK per command, so round trips are
+    O(streams · chunks), never O(rows). Both commands are idempotent, so
+    a replay re-acks for free. An empty partition opens no client."""
+    by_stream: dict[str, list[str]] = {}
+    for row in rows:
+        by_stream.setdefault(row["stream"], []).append(row["offset"])
+    if not by_stream:
+        return
+    with connect(options) as client:
+        for stream, ids in by_stream.items():
+            for i in range(0, len(ids), PIPELINE_CHUNK):
+                chunk = ids[i : i + PIPELINE_CHUNK]
+                if group:
+                    client.xack(stream, group, *chunk)
+                if delete:
+                    client.xdel(stream, *chunk)
 
 
-def seed_payload() -> dict[str, str]:
-    """The reference's startup seed record for every target stream
-    (WatchStream.java:262-265)."""
-    return {"ids": json.dumps([])}
+def scrub_batch(options: dict[str, str], streams: Iterable[str], batch_id: int) -> None:
+    """Delete the entries a crashed attempt of micro-batch ``batch_id``
+    XADDed to ``streams`` (they carry ``batch=<batch_id>``). A stream that
+    does not exist has nothing to scrub. Each stream is scanned whole, so
+    this is a crash-recovery cost: the pipeline runs it only on a replay
+    of a batch that started and never finished."""
+    with connect(options) as client:
+        for stream in streams:
+            try:
+                entries = client.xrange(stream)
+            except Exception as e:
+                if not _is_missing_stream(e):
+                    raise
+                continue
+            stale = [rid for rid, f in entries if f.get(_BATCH_FIELD) == str(batch_id)]
+            if stale:
+                client.xdel(stream, *stale)
+
+
+def seed_streams(options: dict[str, str], streams: Iterable[str]) -> None:
+    """XADD the reference's startup seed entry, ``{"ids": "[]"}``, to each
+    target stream (WatchStream.java:262-265)."""
+    with connect(options) as client:
+        for stream in streams:
+            client.xadd(stream, {"ids": "[]"})

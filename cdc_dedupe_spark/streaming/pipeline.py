@@ -14,7 +14,9 @@ batches (S14), dead letters and the ack ledger (S15-S19; the checkpoint
 itself is the real at-least-once/effectively-once contract, the ledger is
 observability parity with XACK) tagged by sink and written ONCE, with
 their row counts observed on that write → one XACK/XDEL pass over the
-persisted batch.
+persisted batch. Every Redis command (the source reads, the XADD sink,
+the acks, the crash scrub and the startup seeds) goes through
+``sources/redis_stream.py``; this module sends none itself.
 
 Scale: no driver-side loops over data — routing is a per-row expression,
 dedupe is a keyed shuffle (AQE-salted on skew), every file sink is one
@@ -39,7 +41,8 @@ checkpoint dir, so both share one lifecycle):
    without ``.done``, so the replay first scrubs the crashed attempt's
    output — file sinks publish under batch-deterministic names
    (``b{batchId}-*``, staged then moved, the classic committer pattern),
-   XADD entries carry a ``batch`` field — then rewrites. Scrub runs ONLY
+   XADD entries are stamped with their batchId (the writer's ``batch_id``
+   option, ``scrub_batch``) — then rewrites. Scrub runs ONLY
    on a genuine crash-replay (started-without-done), never in the fresh
    hot path, and is safe precisely because ``done`` is marked BEFORE the
    destructive acknowledge=delete: started-without-done implies the
@@ -58,6 +61,7 @@ import time
 import warnings
 from collections.abc import Mapping
 from dataclasses import dataclass
+from functools import partial
 from pathlib import Path
 
 from pyspark.sql import Column, DataFrame, Observation, SparkSession
@@ -70,7 +74,15 @@ from ..plans.watch_plan import SINK_KEYS, compile_watch_plan, routed_streams, ta
 # FIXTURES.md §A: one row per stream entry. Canonical definition lives
 # with the source (sources/redis_stream.py) — the file-stream and Redis
 # paths must never diverge in schema.
-from ..sources.redis_stream import ENVELOPE_ROW_SCHEMA  # noqa: E402
+from ..sources.redis_stream import (
+    ENVELOPE_ROW_SCHEMA,
+    RedisStreamDataSource,
+    ack_entries,
+    connect,
+    ensure_group,
+    scrub_batch,
+    seed_streams,
+)
 
 
 def _needs_seed(work: Path) -> bool:
@@ -90,12 +102,15 @@ def _mark_seeded(work: Path) -> None:
     marker.write_text("")
 
 
+def _target_streams(cfg: Config) -> list[str]:
+    return [f"{cfg.target.prefix}{t}" for t in cfg.targets()]
+
+
 def seed_targets(spark: SparkSession, cfg: Config, output_dir: str) -> None:
     """Seed every target stream with ``{"ids": "[]"}`` at startup
     (WatchStream.java:262-265; the reference's tests count on it)."""
     seeds = spark.createDataFrame(
-        [("[]", f"{cfg.target.prefix}{t}") for t in cfg.targets()],
-        "ids string, target_stream string",
+        [("[]", t) for t in _target_streams(cfg)], "ids string, target_stream string"
     )
     seeds.coalesce(1).write.mode("append").partitionBy("target_stream").json(output_dir)
 
@@ -228,27 +243,6 @@ def _scrub_batch_files(batch_id: int, *dirs: str) -> None:
                     f.unlink()
 
 
-def _scrub_batch_redis(batch_id: int, cfg: Config, sink_options: dict[str, str]) -> None:
-    """Delete target-stream entries a crashed attempt XADDed (they carry
-    ``batch=<batchId>``). Runs ONLY on a started-without-done replay —
-    never in the fresh hot path — so the full XRANGE scan is a
-    crash-recovery cost, not a steady-state one."""
-    from ..sources.redis_stream import _is_missing_stream, make_client
-
-    client = make_client(sink_options)
-    for t in cfg.targets():
-        stream = f"{cfg.target.prefix}{t}"
-        try:
-            entries = client.xrange(stream)
-        except Exception as e:
-            if not _is_missing_stream(e):
-                raise
-            continue
-        stale = [rid for rid, fields in entries if fields.get("batch") == str(batch_id)]
-        if stale:
-            client.xdel(stream, *stale)
-
-
 def _observe_counts(
     df: DataFrame, packed: Column, **kinds: Column
 ) -> tuple[DataFrame, Observation]:
@@ -307,7 +301,7 @@ def _process_batch(
                 # done implies the source still holds every entry.
                 _scrub_batch_files(batch_id, *(str(work / k) for k in SINK_KEYS))
                 if sink_options is not None:
-                    _scrub_batch_redis(batch_id, cfg, sink_options)
+                    scrub_batch(sink_options, _target_streams(cfg), batch_id)
             manifest.start(batch_id)
             t0 = time.perf_counter()
             # Plan compilation is pure (plans/watch_plan.py); this layer
@@ -325,10 +319,11 @@ def _process_batch(
             if sink_options is not None:
                 # XADD straight to the target Redis streams (reference
                 # topology). Entries carry their batchId so a crash-replay
-                # can scrub the partial attempt (_scrub_batch_redis).
+                # can scrub the partial attempt (scrub_batch).
                 packed, packed_obs = _observe_counts(packed, F.lit(True))
-                opts = {**sink_options, "extra_fields": json.dumps({"batch": str(batch_id)})}
-                packed.write.format("redis_stream").options(**opts).mode("append").save()
+                packed.write.format("redis_stream").options(
+                    **sink_options, batch_id=str(batch_id)
+                ).mode("append").save()
             # Dead letters land BEFORE any source ack: malformed records
             # must have a surviving copy before acknowledge=delete can
             # remove them from the source (plans/watch_plan.py dead
@@ -358,42 +353,21 @@ def _process_batch(
         # WatchTests.java:151-154). Uses the SOURCE connection (ack_options)
         # — runs for a Redis source regardless of sink kind. Reads the
         # persisted batch (no shuffle: a repeated offset is re-acked,
-        # which XACK/XDEL make free); executor-side per partition, ids
-        # grouped per stream and sent in many-id chunks (the reference
-        # batches its XDELs the same way) — O(streams · chunks) round
-        # trips, never O(rows). Skipped when nothing was acked, and when
-        # there is nothing to send (no consumer group and acknowledge !=
-        # delete), which would open one Redis client per non-empty
-        # partition per batch to do nothing.
+        # which XACK/XDEL make free), executor-side per partition
+        # (ack_entries: O(streams · chunks) round trips, never O(rows)).
+        # Skipped when nothing was acked, and when there is nothing to
+        # send (no consumer group and acknowledge != delete), which would
+        # open one Redis client per non-empty partition per batch to do
+        # nothing.
         t3 = time.perf_counter()
         if ack_wanted and acked != 0:
-            opts = dict(ack_options)
-            group = cfg.source.group
-            delete = cfg.source.acknowledge == "delete"
-
-            def _ack(rows) -> None:
-                from ..sources.redis_stream import PIPELINE_CHUNK, make_client
-
-                by_stream: dict[str, list[str]] = {}
-                for row in rows:
-                    by_stream.setdefault(row["stream"], []).append(row["offset"])
-                if not by_stream:
-                    return
-                client = make_client(opts)
-                try:
-                    for stream, ids in by_stream.items():
-                        for i in range(0, len(ids), PIPELINE_CHUNK):
-                            chunk = ids[i : i + PIPELINE_CHUNK]
-                            if group:
-                                client.xack(stream, group, *chunk)
-                            if delete:
-                                client.xdel(stream, *chunk)
-                finally:
-                    getattr(client, "close", lambda: None)()
-
             batch.filter(F.col("stream").isin(routed_streams(cfg))).select(
                 "stream", "offset"
-            ).foreachPartition(_ack)
+            ).foreachPartition(
+                partial(
+                    ack_entries, ack_options, cfg.source.group, cfg.source.acknowledge == "delete"
+                )
+            )
         if not already:
             # Per-batch metrics ledger: the observed counts (no extra job)
             # and where the batch's time went.
@@ -445,26 +419,19 @@ def watch(
     dead_dir = str(work / "dead")
     checkpoint = str(work / "checkpoint")
 
-    sink_options: dict[str, str] | None = None
+    sink_options = ack_options = None
     if redis_options is not None:
-        from ..sources.redis_stream import (
-            RedisStreamDataSource,
-            ensure_group,
-            make_client,
-            seed_payload,
-        )
-
         spark.dataSource.register(RedisStreamDataSource)
-        source_streams = ",".join(f"{cfg.source.prefix}{t}" for t in cfg.mapping)
-        client = make_client(redis_options)
+        source_streams = [f"{cfg.source.prefix}{t}" for t in cfg.mapping]
         # Bootstrap the consumer group on every source stream at 0-0
         # (BUSYGROUP-tolerant), so the XACKs emitted per batch land in a
         # real group PEL — drop-in interop with the reference's consumers
         # (RedisSource.java:72-80).
         if cfg.source.group:
-            for t in cfg.mapping:
-                ensure_group(client, f"{cfg.source.prefix}{t}", cfg.source.group)
-        reader = spark.readStream.format("redis_stream").option("streams", source_streams)
+            with connect(redis_options) as client:
+                for s in source_streams:
+                    ensure_group(client, s, cfg.source.group)
+        reader = spark.readStream.format("redis_stream").option("streams", ",".join(source_streams))
         reader_opts = dict(redis_options)
         # The reference's poll batch cap (buffers.source.size,
         # config.yaml:13-15) becomes the source's per-batch admission cap;
@@ -504,23 +471,18 @@ def watch(
         ack_options = dict(redis_options)
         if redis_sink:
             sink_options = dict(redis_options)
-            # Seed every target stream with {"ids": "[]"} (WatchStream.java:
-            # 262-265) — once per pipeline lifetime, not per process start:
-            # the seeds carry no batch id, so the idempotent machinery
-            # cannot dedupe them and every restart would add another.
-            if _needs_seed(work):
-                for t in cfg.targets():
-                    client.xadd(f"{cfg.target.prefix}{t}", seed_payload())
-                _mark_seeded(work)
-        elif _needs_seed(work):
-            seed_targets(spark, cfg, output_dir)
-            _mark_seeded(work)
     else:
-        ack_options = None
-        if _needs_seed(work):
-            seed_targets(spark, cfg, output_dir)
-            _mark_seeded(work)
         stream = spark.readStream.schema(ENVELOPE_ROW_SCHEMA).json(source_dir)
+    # Seed every target stream with {"ids": "[]"} (WatchStream.java:
+    # 262-265) — once per pipeline lifetime, not per process start: the
+    # seeds carry no batch id, so the idempotent machinery cannot dedupe
+    # them and every restart would add another.
+    if _needs_seed(work):
+        if sink_options is not None:
+            seed_streams(sink_options, _target_streams(cfg))
+        else:
+            seed_targets(spark, cfg, output_dir)
+        _mark_seeded(work)
 
     manifest = SinkManifest(work / "checkpoint" / "sink_manifest")
     writer = stream.writeStream.foreachBatch(

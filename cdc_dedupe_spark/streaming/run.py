@@ -11,6 +11,8 @@ import os
 
 from pyspark.sql import DataFrame
 
+from ..session import temp_sql_confs
+
 _SEQ = itertools.count()
 
 # Streaming STATE partitions are a state-volume sizing decision, distinct
@@ -80,19 +82,15 @@ def run_to_memory(
         raise ValueError(
             f"unknown state store {store!r}; have {sorted(STATE_STORE_PROVIDERS)}"
         )
-    provider = STATE_STORE_PROVIDERS[store] if store else None
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    prev_provider = spark.conf.get(_PROVIDER_CONF, None)
     # state_partitions overrides the default width for queries whose
     # POINT is a specific state layout (the re-shard migration) — the
     # width is pinned into the checkpoint at first start
-    spark.conf.set(
-        "spark.sql.shuffle.partitions",
-        str(state_partitions) if state_partitions else _STATE_PARTITIONS,
-    )
-    if provider is not None:
-        spark.conf.set(_PROVIDER_CONF, provider)
-    try:
+    confs = {
+        "spark.sql.shuffle.partitions": str(state_partitions) if state_partitions else _STATE_PARTITIONS
+    }
+    if store:
+        confs[_PROVIDER_CONF] = STATE_STORE_PROVIDERS[store]
+    with temp_sql_confs(spark, confs):
         writer = (
             sdf.writeStream.format("memory")
             .queryName(name)
@@ -106,11 +104,4 @@ def run_to_memory(
             writer = writer.option("checkpointLocation", checkpoint_location)
         q = writer.start()
         q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-        if provider is not None:
-            if prev_provider is None:
-                spark.conf.unset(_PROVIDER_CONF)
-            else:
-                spark.conf.set(_PROVIDER_CONF, prev_provider)
     return spark.table(name)

@@ -36,9 +36,7 @@ def main() -> int:
         print(__doc__)
         return 2
 
-    from pyspark.sql import functions as F
-    from pyspark.sql.types import MapType
-
+    from bench import force_full_plan
     from cdc_dedupe_spark.queries import REGISTRY
     from cdc_dedupe_spark.session import get_spark
 
@@ -48,21 +46,6 @@ def main() -> int:
         return 2
 
     spark = get_spark("cdc-dedupe-spark-scale-wave")
-
-    def _has_map(dt) -> bool:
-        if dt is None:
-            return False
-        if isinstance(dt, MapType):
-            return True
-        if any(_has_map(f.dataType) for f in getattr(dt, "fields", [])):
-            return True
-        return _has_map(getattr(dt, "elementType", None))
-
-    def force_full_plan(df) -> None:
-        if any(_has_map(f.dataType) for f in df.schema.fields):
-            df.count()
-        else:
-            df.agg(F.sum(F.hash(*[F.col(c) for c in df.columns]))).collect()
 
     sfs = {
         "sf0.1": "/root/testdata/sf0.1",

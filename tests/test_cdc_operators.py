@@ -133,10 +133,3 @@ def test_salted_join_equals_plain_join(spark):
         map(tuple, plain_l.collect()), key=str
     )
 
-
-def test_salt_counts_surfaces_hot_keys(spark):
-    from cdc_dedupe_spark.operators.skew import salt_counts
-
-    df = spark.createDataFrame([(1,)] * 90 + [(2,)] * 10, "k int")
-    top = salt_counts(df, ["k"], top=1).first()
-    assert top.k == 1 and abs(top.share - 0.9) < 1e-9

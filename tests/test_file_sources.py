@@ -8,7 +8,7 @@ import pytest
 
 from pyspark.sql import functions as F
 
-from cdc_dedupe_spark.sources.files import convert_to_parquet, read_table
+from cdc_dedupe_spark.sources.files import read_table
 from cdc_dedupe_spark.tables import table
 
 
@@ -63,22 +63,3 @@ def test_orc_roundtrip_is_query_equivalent(spark, sf_dir, tmp_path):
     got = _agg(read_table(spark, orc_dir, "orc"))
     assert got == _agg(pq)
 
-
-def test_convert_to_parquet_is_query_equivalent(spark, sf_dir, tmp_path, customer_pq):
-    """The recommended ingest flow: read the slow format once, land
-    parquet, query the parquet — results identical, later scans get the
-    vectorized reader + pushdown."""
-    csv_dir = str(tmp_path / "c.csv")
-    customer_pq.write.option("header", "true").csv(csv_dir)
-    pq_dir = str(tmp_path / "c.parquet")
-    convert_to_parquet(
-        read_table(spark, csv_dir, "csv", customer_pq.schema),
-        pq_dir,
-        partition_by=("c_mktsegment",),
-    )
-    landed = spark.read.parquet(pq_dir)
-    assert _agg(landed) == _agg(customer_pq)
-    # partition pruning: a segment filter prunes to that partition's files
-    one = landed.filter(F.col("c_mktsegment") == "BUILDING")
-    plan = one._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters: [isnotnull(c_mktsegment" in plan, plan

@@ -16,8 +16,9 @@ from cdc_dedupe_spark.sources.redis_stream import (
     ZERO_ID,
     _is_missing_stream,
     _record_id_tuple,
-    _split_range,
+    ack_entries,
     ensure_group,
+    scrub_batch,
 )
 from cdc_dedupe_spark.sources.fake_redis import FakeRedis
 
@@ -108,7 +109,7 @@ def test_stream_e2e_reads_and_dedupes(spark, tmp_path):
 
 
 def test_stream_sink_xadds_packed_batches(spark, tmp_path):
-    """writeStream.format('redis_stream') sink: packed id batches land as
+    """write.format('redis_stream') sink: packed id batches land as
     stream entries with the reference's {'ids': '[...]'} field shape."""
     in_dir = tmp_path / "in"
     out_dir = tmp_path / "out"
@@ -120,16 +121,14 @@ def test_stream_sink_xadds_packed_batches(spark, tmp_path):
         )
     )
     spark.dataSource.register(RedisStreamDataSource)
-    src = spark.readStream.schema("target_stream string, ids string").json(str(in_dir))
-    q = (
-        src.writeStream.format("redis_stream")
+    src = spark.read.schema("target_stream string, ids string").json(str(in_dir))
+    (
+        src.write.format("redis_stream")
         .option("client_factory", "cdc_dedupe_spark.sources.fake_redis:make_client")
         .option("fake_dir", str(out_dir))
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
+        .mode("append")
+        .save()
     )
-    q.awaitTermination()
     fake = FakeRedis(str(out_dir))
     entries = fake.xrange("target.idx")
     got = sorted(json.loads(f["ids"])[0] for _, f in entries)
@@ -148,39 +147,6 @@ def test_missing_stream_gating_is_type_and_message(tmp_path):
     assert not _is_missing_stream(OSError("No such file or directory"))
     assert not _is_missing_stream(Exception("no such key"))  # wrong type
     assert not _is_missing_stream(KeyError("WRONGTYPE key holds a list"))
-
-
-def test_split_range_partitions_exactly():
-    """Sub-ranges must partition (start, end] — disjoint, ordered, union
-    equal to the input range — for both the multi-millis and same-millis
-    shapes."""
-    # same-millis: cut the seq space
-    subs = _split_range("1-0", "1-100", 4)
-    assert len(subs) == 4
-    assert subs[0][0] == "1-0" and subs[-1][1] == "1-100"
-    for (_, e1), (s2, _) in zip(subs, subs[1:]):
-        assert e1 == s2  # adjacent: end of one is exclusive-start of next
-    # multi-millis: cut the millis space
-    subs = _split_range("1000-5", "5000-2", 4)
-    assert subs[0][0] == "1000-5" and subs[-1][1] == "5000-2"
-    for (_, e1), (s2, _) in zip(subs, subs[1:]):
-        assert e1 == s2
-    # k=1 and degenerate ranges stay whole
-    assert _split_range("1-0", "1-2", 1) == [("1-0", "1-2")]
-    assert _split_range("1-0", "1-1", 8) == [("1-0", "1-1")]
-
-
-def test_hot_stream_splits_into_bounded_tasks(tmp_path):
-    """max_entries_per_task splits a hot stream into several sub-range
-    tasks (the reference's buffers.source.size admission control at task
-    granularity); reading every partition yields each entry exactly once."""
-    _fill(tmp_path, "hot", range(100))
-    opts = _opts(tmp_path, "hot") | {"max_entries_per_task": "25"}
-    r = RedisStreamReader(None, opts)
-    parts = r.partitions({"hot": "1-0"}, {"hot": "1-100"})
-    assert len(parts) == 4
-    seen = [rid for p in parts for rid, _, _ in r.read(p)]
-    assert len(seen) == len(set(seen)) == 100
 
 
 def test_ensure_group_is_busygroup_tolerant(tmp_path):
@@ -209,22 +175,87 @@ def test_writer_pipelines_xadds(spark, tmp_path):
         )
     )
     spark.dataSource.register(RedisStreamDataSource)
-    src = spark.readStream.schema("target_stream string, ids string").json(str(in_dir))
-    q = (
-        src.writeStream.format("redis_stream")
+    src = spark.read.schema("target_stream string, ids string").json(str(in_dir))
+    (
+        src.write.format("redis_stream")
         .option("client_factory", "cdc_dedupe_spark.sources.fake_redis:make_client")
         .option("fake_dir", str(out_dir))
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
+        .mode("append")
+        .save()
     )
-    q.awaitTermination()
     fake = FakeRedis(str(out_dir))
     assert len(fake.xrange("t.x")) == 40
     rts = [op for op in fake.round_trips() if op.startswith(("xadd", "pipeline"))]
     # one pipeline flush per task partition, never one trip per row
     assert all(op.startswith("pipeline") for op in rts), rts
     assert len(rts) <= 8, rts
+
+
+def test_ack_entries_chunks_per_stream(tmp_path):
+    """2,500 offsets of one stream go out as ceil(2500 / PIPELINE_CHUNK)
+    = 3 XACKs, plus 3 XDELs under delete: one command per chunk, not per
+    row, and every offset acked and deleted exactly once."""
+    fake = _fill(tmp_path, "s", range(2500))
+    rows = [{"stream": "s", "offset": rid} for rid, _ in fake.xrange("s")]
+    ack_entries(_opts(tmp_path, "s"), "cdc", True, iter(rows))
+    rts = fake.round_trips()
+    assert rts.count("xack") == 3 and rts.count("xdel") == 3, rts
+    assert sorted(fake.acked("s", "cdc")) == sorted(r["offset"] for r in rows)
+    assert fake.xrange("s") == []
+
+    # simple acknowledge: XACK only; an empty partition sends nothing
+    fake = _fill(tmp_path / "simple", "s", range(2500))
+    ack_entries(_opts(tmp_path / "simple", "s"), "cdc", False, iter(rows))
+    ack_entries(_opts(tmp_path / "simple", "s"), "cdc", False, iter([]))
+    rts = fake.round_trips()
+    assert rts.count("xack") == 3 and rts.count("xdel") == 0, rts
+    assert len(fake.xrange("s")) == 2500
+
+
+def _missing_key_client(options):
+    """A fake whose XRANGE on an absent stream raises the missing-key error."""
+    fake = FakeRedis(options["fake_dir"])
+    xrange = fake.xrange
+
+    def strict_xrange(stream, *a, **k):
+        if not fake._path(stream).exists():
+            raise KeyError("no such key")
+        return xrange(stream, *a, **k)
+
+    fake.xrange = strict_xrange
+    return fake
+
+
+@pytest.mark.parametrize("factory", ["cdc_dedupe_spark.sources.fake_redis:make_client",
+                                     "tests.test_redis_source:_missing_key_client"])
+def test_scrub_batch_removes_only_that_batch(tmp_path, factory):
+    """scrub_batch deletes batch N's stamped entries and keeps the seed
+    and batch M's entries; a target stream that does not exist is
+    skipped."""
+    fake = FakeRedis(str(tmp_path))
+    fake.xadd("t.a", {"ids": "[]"})
+    fake.xadd("t.a", {"ids": "[1]", "batch": "3"})
+    fake.xadd("t.a", {"ids": "[2]", "batch": "4"})
+    fake.xadd("t.a", {"ids": "[3]", "batch": "3"})
+    opts = {"client_factory": factory, "fake_dir": str(tmp_path)}
+    scrub_batch(opts, ["t.a", "t.missing"], 3)
+    assert [f for _, f in fake.xrange("t.a")] == [{"ids": "[]"}, {"ids": "[2]", "batch": "4"}]
+
+
+def test_reader_stop_closes_cached_client(tmp_path):
+    """The driver-side reader caches one client for its offset probes;
+    stop() closes it."""
+    _fill(tmp_path, "s", range(3))
+    opts = _opts(tmp_path, "s") | {
+        "client_factory": "cdc_dedupe_spark.sources.fake_redis:make_counting_client"
+    }
+    r = RedisStreamReader(None, opts)
+    r.latestOffset()
+    r.latestOffset()
+    r.stop()
+    r.stop()
+    events = [line.split(":")[0] for line in (tmp_path / "_clients.log").read_text().split()]
+    assert events == ["open", "close"]
 
 
 def test_latest_offset_is_stateless_across_reader_instances(tmp_path):

@@ -243,6 +243,59 @@ def test_watch_redis_to_redis_topology(spark, tmp_path, ack):
     assert rts.count("xdel") <= (2 if ack == "delete" else 0)
 
 
+def test_watch_closes_every_redis_client(spark, tmp_path):
+    """Every Redis client the pipeline opens is closed: the group
+    bootstrap and the seeds on the driver, and the executors' read, XADD
+    and ack clients. The one exception is the source's cached
+    offset-probe client: its reader's stop() closes it, but the engine
+    ends the process that holds it when the query stops, which closes
+    its connection too."""
+    import os
+    import time
+    from collections import Counter
+
+    from cdc_dedupe_spark.sources.fake_redis import FakeRedis
+
+    cfg = load_config(_write_config(tmp_path, "delete"))
+    redis_dir = tmp_path / "redis"
+    fake = FakeRedis(str(redis_dir))
+    for i, eid in enumerate([1, 2, 1, 2], start=1):
+        env = _envelope_compact(f"1-{i}", eid)
+        fake.xadd(env["stream"], env["fields"])
+    handles = watch(
+        spark, cfg, None, str(tmp_path / "work"),
+        redis_options={
+            "client_factory": "cdc_dedupe_spark.sources.fake_redis:make_counting_client",
+            "fake_dir": str(redis_dir),
+        },
+        redis_sink=True,
+    )
+    handles.query.awaitTermination()
+    assert [json.loads(f["ids"]) for _, f in fake.xrange("target.catalog_product_flat")] == [
+        [], [1, 2]
+    ]
+    opened, closed = Counter(), Counter()
+    for line in (redis_dir / "_clients.log").read_text().split():
+        event, pid = line.split(":")
+        (opened if event == "open" else closed)[int(pid)] += 1
+    # group bootstrap + seeds, both on the driver
+    assert opened[os.getpid()] == closed[os.getpid()] == 2, (opened, closed)
+    assert sum(opened.values()) >= 5, opened
+
+    def alive(pid: int) -> bool:
+        try:
+            os.kill(pid, 0)
+        except ProcessLookupError:
+            return False
+        return True
+
+    deadline = time.time() + 30
+    unclosed = [pid for pid in opened if opened[pid] != closed[pid]]
+    while any(alive(pid) for pid in unclosed) and time.time() < deadline:
+        time.sleep(0.5)
+    assert not [pid for pid in unclosed if alive(pid)], (opened, closed)
+
+
 def test_watch_batch_reads_source_once(spark, tmp_path):
     """VERDICT r7 'What's wrong' #1: the micro-batch is persisted, so the
     actions in _process_batch (the packed XADD, the tagged dead/ack write,
