@@ -49,9 +49,15 @@ def envelope_payload(fields_col: str = "fields") -> Column:
     the module's degrade-to-NULL policy (see extract_entity_id) applies to
     the envelope lookup too; NULL payloads surface in the dead-letter
     relation (plans/watch_plan.py)."""
-    return F.when(
-        F.size(fields_col) == 1, F.element_at(F.map_values(fields_col), 1)
-    ).otherwise(F.try_element_at(F.col(fields_col), F.lit("value")))
+    return F.expr(envelope_payload_sql(fields_col))
+
+
+def envelope_payload_sql(fields_col: str = "fields") -> str:
+    """``envelope_payload`` as SQL text, for plans built from text."""
+    return (
+        f"CASE WHEN size({fields_col}) = 1 THEN element_at(map_values({fields_col}), 1) "
+        f"ELSE try_element_at({fields_col}, 'value') END"
+    )
 
 
 def extract_entity_id(payload: Column, column: str | Column) -> Column:

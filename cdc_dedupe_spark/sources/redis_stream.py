@@ -6,12 +6,14 @@ XADD; WatchStream.java:196-220 XACK/XDEL) with:
  - a streaming source (``spark.readStream.format("redis_stream")``);
  - a batch XADD writer (``df.write.format("redis_stream")``), which the
    pipeline calls inside ``foreachBatch``;
- - the functions the pipeline's driver and ack pass call:
-   ``ack_entries`` (XACK/XDEL), ``scrub_batch`` (crash-replay cleanup of
-   target streams), ``seed_streams`` (the startup seed entries),
-   ``ensure_group`` (consumer-group bootstrap).
+ - the functions the pipeline's driver calls: ``ack_entries``
+   (XACK/XDEL of a batch's ack set), ``scrub_batch`` (crash-replay
+   cleanup of target streams), and, on the startup client from
+   ``connect``, ``ensure_group`` (consumer-group bootstrap) and
+   ``seed_streams`` (the startup seed entries).
 
-Each of them opens its own client and closes it when done.
+``ack_entries`` and ``scrub_batch`` open their own client and close it
+when done.
 
 Spark-first mapping of the reference's consumer-group model:
 
@@ -58,13 +60,18 @@ log and replay batches. Resolution, in ``latestOffset``'s first call:
 Updates are max-merged per stream, so the watermark is monotonic by
 construction — and the merge runs whenever ``cap_state_dir`` is set, cap
 or no cap. That keeps the file fresh across UNCAPPED runs on the same
-checkpoint (an availableNow drain advances the committed offsets; if it
+checkpoint (an availableNow run advances the committed offsets; if it
 skipped the watermark file, a later capped run would seed from the stale
 file and report an end BEHIND the committed offset — a regressed offset
-the engine would commit, duplicating the gap). Under Trigger.AvailableNow
-the engine fixes its drain target with a single latestOffset call — a
-capped answer would truncate the drain, so drains must leave the cap
-unset but KEEP ``cap_state_dir`` (the watch pipeline wires both).
+the engine would commit, duplicating the gap).
+
+Trigger.AvailableNow is not a drain here: Spark 4.1.2's Python data
+source API has no ``SupportsTriggerAvailableNow``, so the engine falls
+back to a single batch (Trigger.Once), whose end is one latestOffset
+call. A capped answer would truncate that batch, so such runs leave the
+cap unset but KEEP ``cap_state_dir`` (the watch pipeline wires both). If
+the checkpoint holds an uncommitted batch, the run replays only that
+batch and stops; a further run reads what arrived after it.
 
 The ``redis`` client library is not installed in this container: the
 connection factory is import-gated and the planner/reader logic takes any
@@ -434,12 +441,12 @@ class RedisStreamDataSource(DataSource):
 def ack_entries(
     options: dict[str, str], group: str | None, delete: bool, rows: Iterable[Any]
 ) -> None:
-    """The watch pipeline's source ack for one partition of ``(stream,
-    offset)`` rows: XACK against ``group`` (WatchStream.java:196-205),
-    then XDEL under ``delete`` (WatchStream.java:207-220). Ids are grouped
-    per stream and sent PIPELINE_CHUNK per command, so round trips are
+    """The watch pipeline's source ack for a batch's ``(stream, offset)``
+    rows: XACK against ``group`` (WatchStream.java:196-205), then XDEL
+    under ``delete`` (WatchStream.java:207-220). Ids are grouped per
+    stream and sent PIPELINE_CHUNK per command, so round trips are
     O(streams · chunks), never O(rows). Both commands are idempotent, so
-    a replay re-acks for free. An empty partition opens no client."""
+    a replay re-acks for free. No rows open no client."""
     by_stream: dict[str, list[str]] = {}
     for row in rows:
         by_stream.setdefault(row["stream"], []).append(row["offset"])
@@ -474,9 +481,8 @@ def scrub_batch(options: dict[str, str], streams: Iterable[str], batch_id: int) 
                 client.xdel(stream, *stale)
 
 
-def seed_streams(options: dict[str, str], streams: Iterable[str]) -> None:
+def seed_streams(client: Any, streams: Iterable[str]) -> None:
     """XADD the reference's startup seed entry, ``{"ids": "[]"}``, to each
     target stream (WatchStream.java:262-265)."""
-    with connect(options) as client:
-        for stream in streams:
-            client.xadd(stream, {"ids": "[]"})
+    for stream in streams:
+        client.xadd(stream, {"ids": "[]"})

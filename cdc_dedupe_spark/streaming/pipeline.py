@@ -5,25 +5,32 @@ Reference pipeline (SURVEY.md §3.1): Redis XREADGROUP → envelope decode →
 id extract → fan-out to per-target sinks → size-or-time dedupe window →
 first-wins dedupe → ≤1000-id JSON batches → XADD + ack barrier → XACK.
 
-Spark mapping: file-stream source of envelope rows (offset, stream, fields)
-→ one declarative plan per micro-batch inside ``foreachBatch``: fan-out
-over a literal routing map (S6) → per-target first-wins dedupe scoped to
-the micro-batch (S8+S9; the trigger interval IS the dedupe window) →
-arrival-order packing into ≤target.size JSON id arrays (S12/S13) → packed
-batches (S14), dead letters and the ack ledger (S15-S19; the checkpoint
-itself is the real at-least-once/effectively-once contract, the ledger is
-observability parity with XACK) tagged by sink and written ONCE, with
-their row counts observed on that write → one XACK/XDEL pass over the
-persisted batch. Every Redis command (the source reads, the XADD sink,
-the acks, the crash scrub and the startup seeds) goes through
+Spark mapping: a file-stream or ``redis_stream`` source of envelope rows
+(offset, stream, fields) → one declarative plan per micro-batch inside
+``foreachBatch`` (plans/watch_plan.py): one scan decodes each entry and
+generates its sink rows — fan-out over a literal routing map (S6), its
+dead letter, its ack row — then one exchange feeds the per-target
+first-wins dedupe scoped to the micro-batch (S8+S9; the trigger interval
+IS the dedupe window), the arrival-order packing into ≤target.size JSON
+id arrays (S12/S13) and the aggregate that shapes packed batches (S14),
+dead letters and the ack ledger (S15-S19; the checkpoint itself is the
+real at-least-once/effectively-once contract, the ledger is
+observability parity with XACK). That one tagged relation is written
+ONCE. The write's Observation carries back the row counts and the ack
+set, and the driver sends XACK/XDEL from it after the manifest marks the
+batch done. Every Redis command (the source reads, the XADD sink, the
+acks, the crash scrub and the startup seeds) goes through
 ``sources/redis_stream.py``; this module sends none itself.
 
-Scale: no driver-side loops over data — routing is a per-row expression,
-dedupe is a keyed shuffle (AQE-salted on skew), every file sink is one
-partitioned job. State never accumulates across batches (window-scoped
-semantics, like the reference); the cross-batch variant is
-dropDuplicatesWithinWatermark (queries/streaming.py). Each sunk batch
-appends its counts and per-layer times to ``<work_dir>/batch_metrics.jsonl``.
+Scale: routing is a per-row expression and every file sink is one
+partitioned job. The dedupe and the packing shuffle once, by target, so
+they run one task per target. The driver holds one batch's ack set,
+which the source admission cap bounds (buffers.source.size per stream),
+like the reference's in-flight map. State never accumulates across
+batches (window-scoped semantics, like the reference); the cross-batch
+variant is dropDuplicatesWithinWatermark (queries/streaming.py). Each
+sunk batch appends its counts and per-layer times to
+``<work_dir>/batch_metrics.jsonl``.
 
 Sink semantics: **effectively-once** via a batchId-idempotent sink
 layer. Plain JSON-file and XADD appends would duplicate the output of a
@@ -61,7 +68,6 @@ import time
 import warnings
 from collections.abc import Mapping
 from dataclasses import dataclass
-from functools import partial
 from pathlib import Path
 
 from pyspark.sql import Column, DataFrame, Observation, SparkSession
@@ -69,7 +75,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from ..config import Config
-from ..plans.watch_plan import SINK_KEYS, compile_watch_plan, routed_streams, tag_sinks
+from ..plans.watch_plan import SINK_KEYS, compile_watch_plan, routed_streams
+from ..session import temp_sql_confs
 
 # FIXTURES.md §A: one row per stream entry. Canonical definition lives
 # with the source (sources/redis_stream.py) — the file-stream and Redis
@@ -129,22 +136,19 @@ def _format_check_key(cfg: Config) -> str:
     )
 
 
-def _warn_format_mismatch(batch: DataFrame, cfg: Config) -> None:
+def _warn_format_mismatch(cfg: Config, n_compact: int, n_total: int) -> None:
     """The format knob is declarative (decode detects per record, matching
     the reference: declared config.yaml:3, ignored RedisSource.java:58) —
     but if what it declares contradicts what the stream carries, say so
-    once (ADVICE r3). One tiny aggregate job on the first batch with acked
-    entries only; never in the per-batch hot path."""
+    once (ADVICE r3), on the first batch with acked entries. The counts
+    of compact and of all records come from the batch's scan-side
+    Observation, so the probe runs no job."""
     if cfg.source.format not in ("compact", "extended"):
         return
     key = _format_check_key(cfg)
     if key in _format_checked:
         return
     _format_checked.add(key)
-    n_compact, n_total = batch.agg(
-        F.sum(F.when(F.size("fields") == 1, 1).otherwise(0)), F.count(F.lit(1))
-    ).first()
-    n_compact = n_compact or 0
     mismatch = (n_total - n_compact) if cfg.source.format == "compact" else n_compact
     if mismatch:
         warnings.warn(
@@ -205,7 +209,7 @@ def _publish_json(
     staging_root: Path,
 ) -> None:
     """Write the sink-tagged relation ``df`` (plans/watch_plan.py
-    ``tag_sinks``) once, then publish each kind's files into its
+    ``compile_watch_plan``) once, then publish each kind's files into its
     hive-partitioned dir under batch-deterministic names: the staged
     ``_sink=S/_key=V/part-*`` moves to ``S/<partition_col[S]>=V/b{batchId}-
     part-*`` (``V`` exactly as Spark escaped it) — the committer pattern
@@ -243,21 +247,44 @@ def _scrub_batch_files(batch_id: int, *dirs: str) -> None:
                     f.unlink()
 
 
-def _observe_counts(
-    df: DataFrame, packed: Column, **kinds: Column
-) -> tuple[DataFrame, Observation]:
-    """Attach the batch's row counts to ``df``'s next action: a
-    batch-mode Observation rides on that action, so counting adds no job.
-    ``packed`` selects the packed rows (records and their ids); each
-    ``kinds`` entry counts the rows it selects."""
+# The write's Observation: the sink counts and the ack set, as SQL text.
+_SINK_METRICS = {
+    "acked": "count_if(_sink = 'acks')",
+    "dead": "count_if(_sink = 'dead')",
+    "packed_records": "count_if(_sink = 'targets')",
+    "packed_ids": "coalesce(sum(CASE WHEN _sink = 'targets' THEN json_array_length(ids) END), 0)",
+    "ack_set": "collect_list(CASE WHEN _sink = 'acks' "
+    "THEN named_struct('stream', _key, 'offset', offset) END)",
+}
+
+
+# Confs for a batch's writes. AQE's empty-relation rule would cut the
+# scan-side Observation out of the plan of a batch whose scan emits no sink
+# row (an empty or all-unroutable batch), and it would then never report.
+# A cached plan (the XADD path's persist) may coalesce its shuffle like any
+# other plan.
+_WRITE_CONFS = {
+    "spark.sql.adaptive.optimizer.excludedRules":
+        "org.apache.spark.sql.execution.adaptive.AQEPropagateEmptyRelation",
+    "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning": "true",
+}
+
+
+def _observe(df: DataFrame, **metrics: Column) -> tuple[DataFrame, Observation]:
+    """Attach ``metrics`` to ``df``'s next action: a batch-mode
+    Observation rides on that action, so it adds no job."""
     obs = Observation()
-    observed = df.observe(
-        obs,
-        *(F.count_if(c).alias(name) for name, c in kinds.items()),
-        F.count_if(packed).alias("packed_records"),
-        F.coalesce(F.sum(F.when(packed, F.json_array_length("ids"))), F.lit(0)).alias("packed_ids"),
-    )
-    return observed, obs
+    return df.observe(obs, *(c.alias(name) for name, c in metrics.items())), obs
+
+
+def _ack(cfg: Config, ack_options: dict[str, str], rows: list) -> None:
+    """S15-S20 from the driver: XACK against the consumer group
+    (WatchStream.java:196-205 parity: PEL interop with other group
+    consumers), then acknowledge=delete removes the acked entries
+    (WatchStream.java:207-220; the reference's tests assert the source is
+    emptied, WatchTests.java:151-154). O(streams · chunks) round trips
+    (ack_entries); XACK/XDEL are idempotent, so a replay re-acks for free."""
+    ack_entries(ack_options, cfg.source.group, cfg.source.acknowledge == "delete", rows)
 
 
 def _process_batch(
@@ -275,111 +302,99 @@ def _process_batch(
     ack_wanted = ack_options is not None and bool(
         cfg.source.group or cfg.source.acknowledge == "delete"
     )
-    already = manifest.committed(batch_id)
-    if already and not ack_wanted:
-        # Checkpoint replay of a fully-sunk batch (crash landed between
-        # sink actions and checkpoint commit): every sink action below
-        # already ran and there is no ack work — skip it all.
+    if manifest.committed(batch_id):
+        # Checkpoint replay of a fully-sunk batch (the crash landed after
+        # mark, before the checkpoint commit): every sink action already
+        # ran; only the source acks may be unfinished. They come from the
+        # same plan's ack rows as on the first attempt.
+        if ack_wanted:
+            acks = compile_watch_plan(batch, cfg).where("_sink = 'acks'")
+            _ack(cfg, ack_options, acks.selectExpr("_key AS stream", "offset").collect())
         return
     work = Path(work_dir)
-    # One persist covers the two passes over the batch — the tagged sink
-    # write and the ack foreachPartition — plus the one-shot format probe:
-    # without it each re-evaluates the whole lineage from the source — for
-    # the Redis source another XRANGE of every stream's id slice per pass
-    # (VERDICT r7 "What's wrong" #1). The micro-batch is bounded (trigger
-    # interval / admission cap), so default MEMORY_AND_DISK is safe; each
-    # source partition is fetched exactly once (pinned by
-    # tests/test_watch_pipeline.py::test_watch_batch_reads_source_once).
-    batch.persist()
-    try:
-        acked = None  # unknown on a done-marked replay: ack everything routed
-        if not already:
-            if manifest.started(batch_id):
-                # Crashed mid-write: scrub the partial attempt before
-                # rewriting. Safe precisely because the destructive source
-                # ack only ever runs AFTER mark() (below): started-without-
-                # done implies the source still holds every entry.
-                _scrub_batch_files(batch_id, *(str(work / k) for k in SINK_KEYS))
-                if sink_options is not None:
-                    scrub_batch(sink_options, _target_streams(cfg), batch_id)
-            manifest.start(batch_id)
-            t0 = time.perf_counter()
-            # Plan compilation is pure (plans/watch_plan.py); this layer
-            # only owns the sinks: packed (S14), dead letters and the ack
-            # ledger (S15-S19 — the checkpoint is the real at-least-once
-            # contract, the ledger is XACK observability parity) go out in
-            # ONE partitioned write, with their row counts observed on it.
-            packed, acks, dead = compile_watch_plan(batch, cfg)
-            sink = F.col("_sink")
-            tagged, obs = _observe_counts(
-                tag_sinks(dead, acks, None if sink_options is not None else packed),
-                sink == "targets", acked=sink == "acks", dead=sink == "dead",
-            )
-            t1 = time.perf_counter()
-            if sink_options is not None:
-                # XADD straight to the target Redis streams (reference
-                # topology). Entries carry their batchId so a crash-replay
-                # can scrub the partial attempt (scrub_batch).
-                packed, packed_obs = _observe_counts(packed, F.lit(True))
-                packed.write.format("redis_stream").options(
+    if manifest.started(batch_id):
+        # Crashed mid-write: scrub the partial attempt before rewriting.
+        # Safe precisely because the destructive source ack only ever runs
+        # AFTER mark() (below): started-without-done implies the source
+        # still holds every entry.
+        _scrub_batch_files(batch_id, *(str(work / k) for k in SINK_KEYS))
+        if sink_options is not None:
+            scrub_batch(sink_options, _target_streams(cfg), batch_id)
+    manifest.start(batch_id)
+    t0 = time.perf_counter()
+    # The scan-side counts ride on the write too: input entries, the
+    # unroutable ones, and the compact ones for the format probe.
+    scanned, scan_obs = _observe(
+        batch,
+        input=F.count(F.lit(1)),
+        unroutable=F.count_if(~F.col("stream").isin(routed_streams(cfg))),
+        compact=F.count_if(F.size("fields") == 1),
+    )
+    # Plan compilation is pure (plans/watch_plan.py); this layer only owns
+    # the sinks: packed (S14), dead letters and the ack ledger (S15-S19:
+    # the checkpoint is the real at-least-once contract, the ledger is
+    # XACK observability parity), tagged in one relation.
+    tagged, obs = _observe(
+        compile_watch_plan(scanned, cfg), **{k: F.expr(v) for k, v in _SINK_METRICS.items()}
+    )
+    t1 = time.perf_counter()
+    # Dead letters land BEFORE any source ack: malformed records must have
+    # a surviving copy before acknowledge=delete can remove them from the
+    # source (the reference instead wedges the stream on the first
+    # malformed record, RedisSource.java:63-66).
+    with temp_sql_confs(batch.sparkSession, _WRITE_CONFS):
+        if sink_options is None:
+            _publish_json(tagged, batch_id, SINK_KEYS, work_dir, work / "staging")
+        else:
+            # Two writes: XADD straight to the target Redis streams
+            # (reference topology), the rest as JSON. The persist keeps
+            # the source read once.
+            tagged.persist()
+            try:
+                # Entries carry their batchId so a crash-replay can scrub
+                # the partial attempt (scrub_batch).
+                tagged.where("_sink = 'targets'").selectExpr(
+                    "_key AS target_stream", "ids"
+                ).write.format("redis_stream").options(
                     **sink_options, batch_id=str(batch_id)
                 ).mode("append").save()
-            # Dead letters land BEFORE any source ack: malformed records
-            # must have a surviving copy before acknowledge=delete can
-            # remove them from the source (plans/watch_plan.py dead
-            # relation; the reference instead wedges the stream on the
-            # first malformed record, RedisSource.java:63-66).
-            _publish_json(tagged, batch_id, SINK_KEYS, work_dir, work / "staging")
-            counts = obs.get
-            if sink_options is not None:
-                counts.update(packed_obs.get)
-            t2 = time.perf_counter()
-            acked = counts["acked"]
-            if acked:
-                _warn_format_mismatch(batch, cfg)
-            # Effectively-once ordering: mark done BEFORE the destructive
-            # source ack. A crash after mark but mid-ack replays into the
-            # ack-only path (sinks skipped, entries re-acked — XACK/XDEL
-            # are idempotent). Marking AFTER the ack would let a
-            # crash-replay scrub COMPLETE output whose source entries
-            # acknowledge=delete already removed — permanent loss, not
-            # duplication.
-            manifest.mark(batch_id)
-
-        # S15-S20: real XACK against the consumer group (WatchStream.java:
-        # 196-205 parity — PEL interop with other group consumers), then
-        # acknowledge=delete removes acked entries (WatchStream.java:207-220;
-        # the reference's tests assert the source is emptied,
-        # WatchTests.java:151-154). Uses the SOURCE connection (ack_options)
-        # — runs for a Redis source regardless of sink kind. Reads the
-        # persisted batch (no shuffle: a repeated offset is re-acked,
-        # which XACK/XDEL make free), executor-side per partition
-        # (ack_entries: O(streams · chunks) round trips, never O(rows)).
-        # Skipped when nothing was acked, and when there is nothing to
-        # send (no consumer group and acknowledge != delete), which would
-        # open one Redis client per non-empty partition per batch to do
-        # nothing.
-        t3 = time.perf_counter()
-        if ack_wanted and acked != 0:
-            batch.filter(F.col("stream").isin(routed_streams(cfg))).select(
-                "stream", "offset"
-            ).foreachPartition(
-                partial(
-                    ack_entries, ack_options, cfg.source.group, cfg.source.acknowledge == "delete"
+                _publish_json(
+                    tagged.where("_sink <> 'targets'"), batch_id, SINK_KEYS, work_dir,
+                    work / "staging",
                 )
-            )
-        if not already:
-            # Per-batch metrics ledger: the observed counts (no extra job)
-            # and where the batch's time went.
-            t4 = time.perf_counter()
-            line = {"batch_id": batch_id, **counts} | {
-                f"{layer}_ms": round(1000.0 * (end - start), 3)
-                for layer, start, end in (("plan", t0, t1), ("publish", t1, t2), ("ack", t3, t4))
-            }
-            with open(work / "batch_metrics.jsonl", "a") as f:
-                f.write(json.dumps(line) + "\n")
-    finally:
-        batch.unpersist()
+            finally:
+                tagged.unpersist()
+    scan, counts = scan_obs.get, obs.get
+    t2 = time.perf_counter()
+    ack_set = counts.pop("ack_set")
+    if len(ack_set) != counts["acked"]:
+        raise RuntimeError(
+            f"batch {batch_id}: the write observed {counts['acked']} ack rows "
+            f"but carried back {len(ack_set)}"
+        )
+    if counts["acked"]:
+        _warn_format_mismatch(cfg, scan["compact"], scan["input"])
+    # Effectively-once ordering: mark done BEFORE the destructive source
+    # ack. A crash after mark but mid-ack replays into the ack-only path
+    # (sinks skipped, entries re-acked — XACK/XDEL are idempotent). Marking
+    # AFTER the ack would let a crash-replay scrub COMPLETE output whose
+    # source entries acknowledge=delete already removed — permanent loss,
+    # not duplication.
+    manifest.mark(batch_id)
+    t3 = time.perf_counter()
+    if ack_wanted and ack_set:
+        _ack(cfg, ack_options, ack_set)
+    # Per-batch metrics ledger: the observed counts (no extra job) and
+    # where the batch's time went.
+    t4 = time.perf_counter()
+    line = {
+        "batch_id": batch_id, "input": scan["input"], "unroutable": scan["unroutable"], **counts
+    } | {
+        f"{layer}_ms": round(1000.0 * (end - start), 3)
+        for layer, start, end in (("plan", t0, t1), ("publish", t1, t2), ("ack", t3, t4))
+    }
+    with open(work / "batch_metrics.jsonl", "a") as f:
+        f.write(json.dumps(line) + "\n")
 
 
 @dataclass
@@ -408,8 +423,14 @@ def watch(
     RedisSource.java:72-93). ``redis_sink=True`` additionally XADDs packed
     batches to the target streams instead of JSON files.
 
-    availableNow=True drains existing input and stops (the test/replay
-    mode); trigger_seconds mirrors the reference's 5 s dedupe window
+    available_now=True processes the input present at start and stops
+    (the test/replay mode). The file source drains it with
+    Trigger.AvailableNow. The Redis source cannot: on Spark 4.1.2 the
+    engine falls back to a single batch up to the latest offset. A fresh
+    run still reads everything, since the admission cap is left off; a run
+    that finds an uncommitted batch in the checkpoint replays only that
+    batch and stops (sources/redis_stream.py module docstring).
+    trigger_seconds mirrors the reference's 5 s dedupe window
     (config.yaml:17) for continuous runs. Checkpoint-replayed micro-batches
     are deduped via a per-batch manifest — effectively-once sinks (module
     docstring)."""
@@ -419,32 +440,36 @@ def watch(
     dead_dir = str(work / "dead")
     checkpoint = str(work / "checkpoint")
 
+    seed = _needs_seed(work)
     sink_options = ack_options = None
     if redis_options is not None:
         spark.dataSource.register(RedisStreamDataSource)
         source_streams = [f"{cfg.source.prefix}{t}" for t in cfg.mapping]
-        # Bootstrap the consumer group on every source stream at 0-0
-        # (BUSYGROUP-tolerant), so the XACKs emitted per batch land in a
-        # real group PEL — drop-in interop with the reference's consumers
-        # (RedisSource.java:72-80).
-        if cfg.source.group:
+        # One startup client. It bootstraps the consumer group on every
+        # source stream at 0-0 (BUSYGROUP-tolerant), so the XACKs sent per
+        # batch land in a real group PEL — drop-in interop with the
+        # reference's consumers (RedisSource.java:72-80). Under redis_sink
+        # it also seeds the target streams (see the seed below).
+        if cfg.source.group or (redis_sink and seed):
             with connect(redis_options) as client:
-                for s in source_streams:
+                for s in source_streams if cfg.source.group else ():
                     ensure_group(client, s, cfg.source.group)
+                if redis_sink and seed:
+                    seed_streams(client, _target_streams(cfg))
         reader = spark.readStream.format("redis_stream").option("streams", ",".join(source_streams))
         reader_opts = dict(redis_options)
         # The reference's poll batch cap (buffers.source.size,
         # config.yaml:13-15) becomes the source's per-batch admission cap;
-        # an explicit reader option still overrides the config. NOT set in
-        # availableNow drain mode: that trigger fixes its target offset
-        # with ONE latestOffset call, so a capped answer would truncate the
-        # drain instead of pacing it — a drain wants everything. A
-        # user-supplied cap is stripped (loudly) for the same reason.
+        # an explicit reader option still overrides the config. NOT set
+        # under availableNow: the run is one batch whose end is ONE
+        # latestOffset call, so a capped answer would truncate the run
+        # instead of pacing it. A user-supplied cap is stripped (loudly)
+        # for the same reason.
         if available_now and "max_entries_per_batch" in reader_opts:
             warnings.warn(
-                "max_entries_per_batch is ignored under availableNow: the drain "
-                "trigger fixes its target with one latestOffset call, so a capped "
-                "answer would silently truncate the drain instead of pacing it "
+                "max_entries_per_batch is ignored under availableNow: the run is "
+                "one batch whose end is one latestOffset call, so a capped answer "
+                "would silently truncate it instead of pacing it "
                 "(sources/redis_stream.py module docstring)",
                 stacklevel=2,
             )
@@ -459,7 +484,7 @@ def watch(
         # engine ignores) so the two share one lifecycle: wiping the
         # checkpoint wipes the watermark, keeping file-absent <=>
         # checkpoint-fresh — what makes capping the very first batch
-        # safe. Wired in EVERY mode, capped or not: an uncapped drain on
+        # safe. Wired in EVERY mode, capped or not: an uncapped run on
         # this checkpoint must keep the watermark file fresh, or a later
         # capped run would seed a regressed offset from the stale file
         # (ADVICE r7; redis_stream.py module docstring).
@@ -477,10 +502,8 @@ def watch(
     # 262-265) — once per pipeline lifetime, not per process start: the
     # seeds carry no batch id, so the idempotent machinery cannot dedupe
     # them and every restart would add another.
-    if _needs_seed(work):
-        if sink_options is not None:
-            seed_streams(sink_options, _target_streams(cfg))
-        else:
+    if seed:
+        if sink_options is None:
             seed_targets(spark, cfg, output_dir)
         _mark_seeded(work)
 

@@ -525,15 +525,12 @@ def test_declared_format_mismatch_warns_once(spark, tmp_path):
         target=cfg.target,
         mapping=cfg.mapping,
     )
-    batch = spark.createDataFrame(
-        [_envelope_compact("1-0", 1), _envelope_compact("2-0", 2)],
-        "offset string, stream string, fields map<string,string>",
-    )
+    # a first batch of two compact records
     with pytest.warns(UserWarning, match="decode as the other envelope form"):
-        _warn_format_mismatch(batch, cfg)
+        _warn_format_mismatch(cfg, n_compact=2, n_total=2)
     with _w.catch_warnings():
         _w.simplefilter("error")  # second call: checked-set short-circuits, no warning
-        _warn_format_mismatch(batch, cfg)
+        _warn_format_mismatch(cfg, n_compact=2, n_total=2)
     _format_checked.discard(_format_check_key(cfg))
 
 
@@ -737,6 +734,12 @@ def test_config_hardening(tmp_path):
         load_config(loop)
 
 
+def _sink_relations(tagged):
+    """(packed, acks, dead): the plan's sink kinds as filters of its one
+    tagged relation."""
+    return (tagged.filter(tagged._sink == kind) for kind in ("targets", "acks", "dead"))
+
+
 def test_watch_plan_malformed_offset_routes_to_dead(spark, tmp_path):
     """An unparseable offset must degrade to the dead relation (try_cast),
     never throw under ANSI mode and wedge the stream; and dead carries ONE
@@ -752,7 +755,7 @@ def test_watch_plan_malformed_offset_routes_to_dead(spark, tmp_path):
         [(e["offset"], e["stream"], e["fields"]) for e in (good, bad)],
         ENVELOPE_ROW_SCHEMA,
     )
-    packed, acks, dead = compile_watch_plan(batch, cfg)
+    packed, acks, dead = _sink_relations(compile_watch_plan(batch, cfg))
     ids = sorted(json.loads(r.ids) for r in packed.collect())
     assert ids == [[7], [7]]  # one batch per target, malformed entry excluded
     dead_rows = dead.collect()
@@ -778,7 +781,7 @@ def test_watch_plan_malformed_seq_part_routes_to_dead(spark, tmp_path):
         [(e["offset"], e["stream"], e["fields"]) for e in (bare, bad_seq)],
         ENVELOPE_ROW_SCHEMA,
     )
-    packed, acks, dead = compile_watch_plan(batch, cfg)
+    packed, acks, dead = _sink_relations(compile_watch_plan(batch, cfg))
     ids = sorted(json.loads(r.ids) for r in packed.collect())
     assert ids == [[7], [7]]  # bare-ms entry routed, bad-seq entry excluded
     dead_rows = dead.collect()
@@ -808,8 +811,8 @@ STATIC_EVENTS = [
 ]
 
 
-def _sink_static_batch(spark, tmp_path, batch_ids=(3,)):
-    """Sink STATIC_EVENTS once per batch id into ``tmp_path/work`` (source
+def _sink_static_batch(spark, tmp_path, batch_ids=(3,), events=STATIC_EVENTS):
+    """Sink ``events`` once per batch id into ``tmp_path/work`` (source
     acks go to a FakeRedis); returns (work dir, fake, jobs per batch id)."""
     from cdc_dedupe_spark.sources.fake_redis import FakeRedis
 
@@ -829,7 +832,7 @@ def _sink_static_batch(spark, tmp_path, batch_ids=(3,)):
     }
     manifest = SinkManifest(work / "checkpoint" / "sink_manifest")
     batch = spark.createDataFrame(
-        [(e["offset"], e["stream"], e["fields"]) for e in STATIC_EVENTS], ENVELOPE_ROW_SCHEMA
+        [(e["offset"], e["stream"], e["fields"]) for e in events], ENVELOPE_ROW_SCHEMA
     )
     sc = spark.sparkContext
     jobs = {}
@@ -846,38 +849,43 @@ def _sink_static_batch(spark, tmp_path, batch_ids=(3,)):
 
 
 def _sink_lines(work: Path, kind: str) -> list[tuple[str, dict]]:
-    """(partition directory name, JSON line) for every line under a sink."""
+    """(partition directory name, JSON line) for every line under a sink
+    (Spark's ``_SUCCESS`` markers and ``.crc`` sidecars left out)."""
     return [
         (f.parent.name, json.loads(line))
         for f in sorted((work / kind).rglob("*"))
-        if f.is_file()
+        if f.is_file() and not f.name.startswith(("_", "."))
         for line in f.read_text().splitlines()
         if line.strip()
     ]
 
 
 def test_watch_batch_one_write_no_broadcast(spark, tmp_path, capsys):
-    """A warm micro-batch runs one sink write and one ack pass: at most 9
-    Spark jobs (no emptiness probe, no per-sink writes), and the sink
-    relation holds no broadcast (routing is a literal map expression)."""
-    from cdc_dedupe_spark.plans.watch_plan import compile_watch_plan, tag_sinks
+    """A warm micro-batch is one scan, one exchange and one write: at most
+    2 Spark jobs (the shuffle-map stage and the write; no emptiness probe,
+    no per-sink writes, no executor ack pass). The sink relation holds
+    exactly one exchange and no broadcast (routing is a literal map
+    expression), and the XACKed offsets are the published ack ledger's."""
+    import re
+
+    from cdc_dedupe_spark.plans.watch_plan import compile_watch_plan
     from cdc_dedupe_spark.streaming.pipeline import ENVELOPE_ROW_SCHEMA
 
-    _, fake, jobs = _sink_static_batch(spark, tmp_path, batch_ids=(0, 1))
-    assert jobs[1] <= 9, jobs
-    assert sorted(set(fake.acked("m2.m2.catalog_category_entity", "cdc"))) == [
-        f"100{i}-0" for i in range(7)
-    ]
+    work, fake, jobs = _sink_static_batch(spark, tmp_path, batch_ids=(0, 1))
+    assert jobs[1] <= 2, jobs
+    acked = fake.acked("m2.m2.catalog_category_entity", "cdc")
+    assert sorted(set(acked)) == [f"100{i}-0" for i in range(7)]
+    assert set(acked) == {row["offset"] for _, row in _sink_lines(work, "acks")}
 
     cfg = load_config(tmp_path / "config.yaml")
     batch = spark.createDataFrame(
         [(e["offset"], e["stream"], e["fields"]) for e in STATIC_EVENTS], ENVELOPE_ROW_SCHEMA
     )
-    packed, acks, dead = compile_watch_plan(batch, cfg)
     capsys.readouterr()
-    tag_sinks(dead, acks, packed).explain("formatted")
+    compile_watch_plan(batch, cfg).explain("formatted")
     plan = capsys.readouterr().out
     assert "Exchange" in plan and "BroadcastExchange" not in plan
+    assert re.findall(r"^\(\d+\) (\w*Exchange)", plan, re.M) == ["Exchange"], plan
 
 
 def test_watch_sink_format_per_kind(spark, tmp_path):
@@ -918,8 +926,49 @@ def test_watch_batch_metrics_ledger(spark, tmp_path):
     (line,) = [json.loads(s) for s in (work / "batch_metrics.jsonl").read_text().splitlines()]
     targets = _sink_lines(work, "targets")
     assert line["batch_id"] == 3
+    assert line["input"] == len(STATIC_EVENTS) == 8
+    assert line["unroutable"] == 1
     assert line["acked"] == len(_sink_lines(work, "acks")) == 7
     assert line["dead"] == len(_sink_lines(work, "dead")) == 2
     assert line["packed_records"] == len(targets) == 4
     assert line["packed_ids"] == sum(len(json.loads(row["ids"])) for _, row in targets) == 8
     assert all(line[k] >= 0 for k in ("plan_ms", "publish_ms", "ack_ms"))
+
+
+def test_watch_batch_metrics_ledger_without_sink_rows(spark, tmp_path):
+    """A batch of unroutable entries emits no sink row, so the exchange is
+    empty; its scan-side counts still reach the ledger, and no ack is
+    sent."""
+    unroutable = [
+        {"offset": f"100{i}-0", "stream": "m2.m2.other", "fields": {"key": "{}"}} for i in range(3)
+    ]
+    work, fake, _ = _sink_static_batch(spark, tmp_path, events=unroutable)
+    (line,) = [json.loads(s) for s in (work / "batch_metrics.jsonl").read_text().splitlines()]
+    assert {k: line[k] for k in ("input", "unroutable", "acked", "dead", "packed_records")} == {
+        "input": 3, "unroutable": 3, "acked": 0, "dead": 0, "packed_records": 0
+    }
+    assert not [op for op in fake.round_trips() if op in ("xack", "xdel")]
+
+
+def test_watch_duplicate_entries_ack_and_dead_once(spark, tmp_path):
+    """A file-source batch can hold one (stream, offset) twice (a Redis
+    stream cannot): the duplicate still yields one ack line and one dead
+    line, and the batch packs exactly as it does without the duplicate."""
+    good = [_envelope_compact(f"100{i}-0", eid) for i, eid in enumerate([1, 2, 1])]
+    bad = {"offset": "1005-0", "stream": "m2.m2.catalog_category_entity", "fields": {"key": "{not json"}}
+    lines = {}
+    for name, events in (("once", [*good, bad]), ("twice", [*good, good[1], bad, bad])):
+        (tmp_path / name).mkdir()
+        _run(spark, tmp_path / name, events)
+        work = tmp_path / name / "work"
+        lines[name] = {
+            kind: sorted(json.dumps(row, sort_keys=True) for _, row in _sink_lines(work, kind))
+            for kind in ("targets", "acks", "dead")
+        }
+    twice = lines["twice"]
+    assert [json.loads(r)["offset"] for r in twice["acks"]] == [
+        "1000-0", "1001-0", "1002-0", "1005-0"
+    ]
+    assert [json.loads(r)["offset"] for r in twice["dead"]] == ["1005-0"]
+    assert twice == lines["once"]
+    assert sorted(json.loads(r)["ids"] for r in twice["targets"]) == ["[1,2]", "[1,2]", "[]", "[]"]
