@@ -87,14 +87,6 @@ class FakeRedis:
             f.write(json.dumps(dict(fields)) + os.linesep)
         return f"1-{len(self._lines(stream))}"
 
-    def xinfo_stream(self, stream: str) -> dict:
-        self._rt("xinfo_stream")
-        lines = self._lines(stream)
-        if not lines:
-            raise KeyError(f"no such stream {stream!r}")
-        # like Redis, last-generated-id survives XDEL of every entry
-        return {"last-generated-id": f"1-{len(lines)}", "length": len(self._entries(stream))}
-
     def xdel(self, stream: str, *record_ids: str) -> int:
         self._rt("xdel")
         return self._xdel_raw(stream, *record_ids)

@@ -99,7 +99,7 @@ def _needs_seed(work: Path) -> bool:
     so each restart would otherwise append another). Callers write the
     marker AFTER seeding succeeds: a crash inside the seed window then
     re-seeds on restart (rare duplicate seed) instead of permanently
-    losing the target-stream seeds (silent loss — ADVICE r8)."""
+    losing the target-stream seeds (silent loss)."""
     return not (work / "checkpoint" / "targets_seeded").exists()
 
 
@@ -125,8 +125,7 @@ def seed_targets(spark: SparkSession, cfg: Config, output_dir: str) -> None:
 # Configs whose declared source.format was already checked against observed
 # records (warn once per distinct config CONTENT, on the first batch with
 # acked entries — a content key, because id() can be reused after GC and
-# Config's mapping dict makes the object unhashable; VERDICT r6 "What's
-# wrong" #2).
+# Config's mapping dict makes the object unhashable).
 _format_checked: set[str] = set()
 
 
@@ -140,9 +139,9 @@ def _warn_format_mismatch(cfg: Config, n_compact: int, n_total: int) -> None:
     """The format knob is declarative (decode detects per record, matching
     the reference: declared config.yaml:3, ignored RedisSource.java:58) —
     but if what it declares contradicts what the stream carries, say so
-    once (ADVICE r3), on the first batch with acked entries. The counts
-    of compact and of all records come from the batch's scan-side
-    Observation, so the probe runs no job."""
+    once, on the first batch with acked entries. The counts of compact
+    and of all records come from the batch's scan-side Observation, so
+    the probe runs no job."""
     if cfg.source.format not in ("compact", "extended"):
         return
     key = _format_check_key(cfg)
@@ -431,7 +430,10 @@ def watch(
     that finds an uncommitted batch in the checkpoint replays only that
     batch and stops (sources/redis_stream.py module docstring).
     trigger_seconds mirrors the reference's 5 s dedupe window
-    (config.yaml:17) for continuous runs. Checkpoint-replayed micro-batches
+    (config.yaml:17) for continuous runs. A continuous run from Redis
+    admits at most ``buffers.source.size`` entries per stream per batch,
+    each batch reading on from the offset log's last end, so a restart on
+    the same checkpoint stays capped. Checkpoint-replayed micro-batches
     are deduped via a per-batch manifest — effectively-once sinks (module
     docstring)."""
     work = Path(work_dir)
@@ -462,14 +464,14 @@ def watch(
         # config.yaml:13-15) becomes the source's per-batch admission cap;
         # an explicit reader option still overrides the config. NOT set
         # under availableNow: the run is one batch whose end is ONE
-        # latestOffset call, so a capped answer would truncate the run
-        # instead of pacing it. A user-supplied cap is stripped (loudly)
-        # for the same reason.
+        # read(start), so a capped read would truncate the run instead of
+        # pacing it. A user-supplied cap is stripped (loudly) for the same
+        # reason.
         if available_now and "max_entries_per_batch" in reader_opts:
             warnings.warn(
                 "max_entries_per_batch is ignored under availableNow: the run is "
-                "one batch whose end is one latestOffset call, so a capped answer "
-                "would silently truncate it instead of pacing it "
+                "one batch whose end is one read, and a capped read would silently "
+                "truncate it instead of pacing it "
                 "(sources/redis_stream.py module docstring)",
                 stacklevel=2,
             )
@@ -480,16 +482,6 @@ def watch(
             and cfg.buffers.source.size > 0
         ):
             reader = reader.option("max_entries_per_batch", str(cfg.buffers.source.size))
-        # Watermark state lives INSIDE the checkpoint dir (a subdir the
-        # engine ignores) so the two share one lifecycle: wiping the
-        # checkpoint wipes the watermark, keeping file-absent <=>
-        # checkpoint-fresh — what makes capping the very first batch
-        # safe. Wired in EVERY mode, capped or not: an uncapped run on
-        # this checkpoint must keep the watermark file fresh, or a later
-        # capped run would seed a regressed offset from the stale file
-        # (ADVICE r7; redis_stream.py module docstring).
-        if "cap_state_dir" not in reader_opts:
-            reader = reader.option("cap_state_dir", str(work / "checkpoint" / "redis_cap"))
         for k, v in reader_opts.items():
             reader = reader.option(k, v)
         stream = reader.load()

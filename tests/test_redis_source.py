@@ -1,6 +1,6 @@
 """Tests for the redis_stream Python Data Source (sources/redis_stream.py):
-offset planning and range reads unit-tested against the file-backed fake
-client, plus an end-to-end readStream -> memory sink run.
+``read(start)`` admission and ``readBetweenOffsets`` replays unit-tested
+against the file-backed fake client, plus end-to-end readStream runs.
 """
 
 from __future__ import annotations
@@ -12,10 +12,8 @@ import pytest
 from cdc_dedupe_spark.sources.redis_stream import (
     RedisStreamDataSource,
     RedisStreamReader,
-    StreamRange,
     ZERO_ID,
     _is_missing_stream,
-    _record_id_tuple,
     ack_entries,
     ensure_group,
     scrub_batch,
@@ -40,37 +38,54 @@ def _fill(tmp_path, stream: str, ids) -> FakeRedis:
     return fake
 
 
+def _ids(rows) -> list[str]:
+    return [rid for rid, _, _ in rows]
+
+
 def test_initial_and_latest_offsets(tmp_path):
+    """A fresh query starts every stream at the ``start`` option; the
+    first read's end is the last id read, and a stream not created yet
+    reports its start."""
     _fill(tmp_path, "m1.a", [1, 2, 3])
-    r = RedisStreamReader(None, _opts(tmp_path, "m1.a,m1.b"))
+    r = RedisStreamReader(_opts(tmp_path, "m1.a,m1.b"))
     assert r.initialOffset() == {"m1.a": ZERO_ID, "m1.b": ZERO_ID}
-    latest = r.latestOffset()
-    assert latest["m1.a"] == "1-3"
-    assert latest["m1.b"] == ZERO_ID  # stream not created yet
+    rows, latest = r.read(r.initialOffset())
+    assert _ids(rows) == ["1-1", "1-2", "1-3"]
+    assert latest == {"m1.a": "1-3", "m1.b": ZERO_ID}  # m1.b: not created yet
 
 
 def test_partition_planning_skips_drained_streams(tmp_path):
-    r = RedisStreamReader(None, _opts(tmp_path, "a,b,c"))
-    parts = r.partitions(
+    """A replay re-reads only the streams whose range is non-empty: no
+    XRANGE for a stream whose end equals its start."""
+    fake = FakeRedis(str(tmp_path))
+    for s in "abc":
+        _fill(tmp_path, s, range(9))
+    r = RedisStreamReader(_opts(tmp_path, "a,b,c"))
+    n = len(fake.round_trips())
+    rows = list(r.readBetweenOffsets(
         {"a": "1-5", "b": "1-2", "c": ZERO_ID},
         {"a": "1-5", "b": "1-9", "c": ZERO_ID},
-    )
+    ))
     # only b has new entries
-    assert [(p.stream, p.start_id, p.end_id) for p in parts] == [("b", "1-2", "1-9")]
+    assert [(rid, s) for rid, s, _ in rows] == [(f"1-{i}", "b") for i in range(3, 10)]
+    assert fake.round_trips()[n:] == ["xrange"]
 
 
 def test_partition_planning_empty_batch_yields_noop_partition(tmp_path):
-    r = RedisStreamReader(None, _opts(tmp_path, "a"))
-    parts = r.partitions({"a": "1-5"}, {"a": "1-5"})
-    assert len(parts) == 1
-    assert list(r.read(parts[0])) == []
+    """Nothing new: the read returns no rows and ends where it started,
+    and replaying that empty range reads nothing."""
+    _fill(tmp_path, "a", range(5))
+    r = RedisStreamReader(_opts(tmp_path, "a"))
+    rows, end = r.read({"a": "1-5"})
+    assert list(rows) == [] and end == {"a": "1-5"}
+    assert list(r.readBetweenOffsets({"a": "1-5"}, {"a": "1-5"})) == []
 
 
 def test_read_respects_exclusive_start_inclusive_end(tmp_path):
     _fill(tmp_path, "s", [10, 20, 30, 40])
-    r = RedisStreamReader(None, _opts(tmp_path, "s"))
-    rows = list(r.read(StreamRange(stream="s", start_id="1-1", end_id="1-3")))
-    assert [rid for rid, _, _ in rows] == ["1-2", "1-3"]
+    r = RedisStreamReader(_opts(tmp_path, "s"))
+    rows = list(r.readBetweenOffsets({"s": "1-1"}, {"s": "1-3"}))
+    assert _ids(rows) == ["1-2", "1-3"]
     assert all(stream == "s" for _, stream, _ in rows)
     assert json.loads(rows[0][2]["payload"])["after"]["entity_id"] == "20"
 
@@ -136,10 +151,9 @@ def test_stream_sink_xadds_packed_batches(spark, tmp_path):
 
 
 def test_missing_stream_gating_is_type_and_message(tmp_path):
-    """ADVICE r2: only a server-side missing-KEY error maps to ZERO_ID.
-    A unix-socket connection failure ('No such file or directory') must
-    propagate — mapping it to ZERO_ID would commit a regressed offset and
-    replay the whole stream."""
+    """Only a server-side missing-KEY error reads as an empty stream. A
+    unix-socket connection failure ('No such file or directory') must
+    propagate, not pass as "nothing new"."""
     assert _is_missing_stream(KeyError("no such stream 'm1.a'"))
     assert not _is_missing_stream(ConnectionError(
         "Error 2 connecting to /run/redis.sock: No such file or directory"
@@ -242,131 +256,53 @@ def test_scrub_batch_removes_only_that_batch(tmp_path, factory):
     assert [f for _, f in fake.xrange("t.a")] == [{"ids": "[]"}, {"ids": "[2]", "batch": "4"}]
 
 
-def test_reader_stop_closes_cached_client(tmp_path):
-    """The driver-side reader caches one client for its offset probes;
-    stop() closes it."""
-    _fill(tmp_path, "s", range(3))
-    opts = _opts(tmp_path, "s") | {
-        "client_factory": "cdc_dedupe_spark.sources.fake_redis:make_counting_client"
-    }
-    r = RedisStreamReader(None, opts)
-    r.latestOffset()
-    r.latestOffset()
-    r.stop()
-    r.stop()
-    events = [line.split(":")[0] for line in (tmp_path / "_clients.log").read_text().split()]
-    assert events == ["open", "close"]
-
-
 def test_latest_offset_is_stateless_across_reader_instances(tmp_path):
-    """Regression pin: with no cap configured, latestOffset MUST give the
-    same (monotonic) answer from a fresh instance — the engine may run a
-    fresh planner process, and any un-seeded instance-local state would
-    produce overlapping batch ranges and duplicate rows."""
+    """The end depends only on the start handed in: a fresh reader (the
+    engine may run a fresh source runner) given the same start reads the
+    same entries and reports the same end, capped or not."""
     _fill(tmp_path, "s", list(range(10)))
-    opts = _opts(tmp_path, "s")
-    a, b = RedisStreamReader(None, opts), RedisStreamReader(None, opts)
-    a.initialOffset()
-    assert a.latestOffset() == {"s": "1-10"}
-    # fresh instance, no initialOffset call at all (the planning instance)
-    assert b.latestOffset() == {"s": "1-10"}
-    # repeated calls never regress
-    assert a.latestOffset() == {"s": "1-10"}
+    for cap in ("0", "4"):
+        opts = _opts(tmp_path, "s") | {"max_entries_per_batch": cap}
+        a, b = RedisStreamReader(opts), RedisStreamReader(opts)
+        rows_a, end_a = a.read({"s": "1-2"})
+        rows_b, end_b = b.read({"s": "1-2"})
+        assert end_a == end_b == {"s": "1-10" if cap == "0" else "1-6"}
+        assert _ids(rows_a) == _ids(rows_b)
+        # repeated reads from the same start never move
+        assert a.read({"s": "1-2"})[1] == end_a
 
 
 # --- micro-batch admission control (buffers.source.size) -----------------
 
 
-def _drain_capped(reader, committed: dict) -> tuple[list[str], dict]:
-    """One engine planning round: latestOffset -> partitions -> read ->
-    commit, mirroring MicroBatchExecution's call order. Returns the record
-    ids read and the new committed end."""
-    end = reader.latestOffset()
-    rows = [rid for p in reader.partitions(committed, end) for rid, _, _ in reader.read(p)]
-    reader.commit(end)
-    return rows, end
+def _drain(reader, start: dict) -> tuple[list[list[str]], dict]:
+    """Chain ``read(start)`` the way the engine does, each read starting at
+    the previous end, until a read admits nothing. Returns the ids of each
+    batch and the final end."""
+    batches = []
+    while True:
+        rows, end = reader.read(start)
+        ids = _ids(rows)
+        if not ids:
+            assert end == start
+            return batches, end
+        batches.append(ids)
+        start = end
 
 
 def test_cap_drains_backlog_in_bounded_batches(tmp_path):
-    """VERDICT r6 'Next round' #3: a 5,000-entry backlog with
-    max_entries_per_batch=1,000 drains in >= 5 batches, each admitting at
-    most the cap, with every entry seen exactly once."""
+    """A 5,000-entry backlog with max_entries_per_batch=1,000 drains in 5
+    batches from the very first read, each admitting at most the cap and
+    ending at the cap-th id, with every entry seen exactly once."""
     _fill(tmp_path, "s", range(5000))
-    opts = _opts(tmp_path, "s") | {
-        "max_entries_per_batch": "1000",
-        "cap_state_dir": str(tmp_path / "ckpt" / "redis_cap"),
-    }
-    r = RedisStreamReader(None, opts)
-    # The engine's observed call order on a fresh query: latestOffset FIRST,
-    # then initialOffset (batch 0's end is that first latestOffset answer).
-    first_end = r.latestOffset()
+    r = RedisStreamReader(_opts(tmp_path, "s") | {"max_entries_per_batch": "1000"})
+    _, first_end = r.read(r.initialOffset())
     assert first_end == {"s": "1-1000"}, "first batch must already be capped"
-    committed = r.initialOffset()
-    # batch 0 consumes that first reported end, like the engine does.
-    seen = [rid for p in r.partitions(committed, first_end) for rid, _, _ in r.read(p)]
-    assert len(seen) == 1000
-    r.commit(first_end)
-    committed = first_end
-    batches = 1
-    while True:
-        rows, end = _drain_capped(r, committed)
-        if _record_id_tuple(end["s"]) <= _record_id_tuple(committed["s"]):
-            break
-        assert len(rows) <= 1000, f"batch {batches} admitted {len(rows)} > cap"
-        seen += rows
-        committed = end
-        batches += 1
-    assert batches >= 5
-    assert len(seen) == len(set(seen)) == 5000
-
-
-def test_cap_watermark_survives_planner_restart(tmp_path):
-    """Mid-drain planner restart: a FRESH reader on the same cap_state_dir
-    resumes capped batching from the persisted watermark — offsets stay
-    monotonic, no entry is lost or read twice. Without the state dir the
-    engine would get one uncapped batch (still monotonic), never a
-    regressed offset."""
-    _fill(tmp_path, "s", range(300))
-    opts = _opts(tmp_path, "s") | {
-        "max_entries_per_batch": "100",
-        "cap_state_dir": str(tmp_path / "ckpt" / "redis_cap"),
-    }
-    r1 = RedisStreamReader(None, opts)
-    first_end = r1.latestOffset()
-    assert first_end == {"s": "1-100"}
-    committed = r1.initialOffset()
-    rows1 = [rid for p in r1.partitions(committed, first_end) for rid, _, _ in r1.read(p)]
-    r1.commit(first_end)
-    committed = first_end
-
-    # planner process bounce: fresh instance, same state dir; the engine
-    # does NOT call initialOffset on a restart.
-    r2 = RedisStreamReader(None, opts)
-    end2 = r2.latestOffset()
-    assert _record_id_tuple(end2["s"]) >= _record_id_tuple(committed["s"]), "regressed offset"
-    assert end2 == {"s": "1-200"}, "restart must resume capped, not uncapped"
-    rows2 = [rid for p in r2.partitions(committed, end2) for rid, _, _ in r2.read(p)]
-    r2.commit(end2)
-    rows3, _ = _drain_capped(r2, end2)
-    seen = rows1 + rows2 + rows3
-    assert len(seen) == len(set(seen)) == 300
-
-
-def test_cap_without_state_dir_first_batch_uncapped_but_monotonic(tmp_path):
-    """No cap_state_dir -> no safe seed: the first latestOffset reports the
-    true stream end (uncapped), later calls cap from the in-memory
-    watermark. Never a regressed offset."""
-    _fill(tmp_path, "s", range(300))
-    opts = _opts(tmp_path, "s") | {"max_entries_per_batch": "100"}
-    r = RedisStreamReader(None, opts)
-    assert r.latestOffset() == {"s": "1-300"}  # uncapped first answer
-    fake = FakeRedis(str(tmp_path))
-    for i in range(50):
-        fake.xadd("s", {"payload": ENVELOPE % i})
-    assert r.latestOffset() == {"s": "1-350"}  # new entries < cap: all admitted
-    for i in range(250):
-        fake.xadd("s", {"payload": ENVELOPE % i})
-    assert r.latestOffset() == {"s": "1-450"}  # capped at +100
+    batches, end = _drain(r, r.initialOffset())
+    assert [len(b) for b in batches] == [1000] * 5
+    assert [b[-1] for b in batches] == [f"1-{k * 1000}" for k in range(1, 6)]
+    seen = [rid for b in batches for rid in b]
+    assert len(seen) == len(set(seen)) == 5000 and end == {"s": "1-5000"}
 
 
 def test_cap_e2e_processing_time_batches(spark, tmp_path):
@@ -382,10 +318,7 @@ def test_cap_e2e_processing_time_batches(spark, tmp_path):
     ckpt = str(tmp_path / "ckpt")
     spark.dataSource.register(RedisStreamDataSource)
     reader = spark.readStream.format("redis_stream")
-    for k, v in (
-        _opts(streams_dir, "s")
-        | {"max_entries_per_batch": "100", "cap_state_dir": ckpt + "/redis_cap"}
-    ).items():
+    for k, v in (_opts(streams_dir, "s") | {"max_entries_per_batch": "100"}).items():
         reader = reader.option(k, v)
     q = (
         reader.load()
@@ -414,11 +347,10 @@ def test_cap_e2e_processing_time_batches(spark, tmp_path):
 
 def test_cap_e2e_restart_no_duplicates(spark, tmp_path):
     """Engine-level checkpoint restart WITH the cap: run a few capped
-    batches, stop, add more entries, restart on the same checkpoint +
-    cap_state_dir. On restart the engine calls latestOffset without
-    initialOffset — the persisted watermark must resume capped batching
-    with every entry delivered exactly once and offset-log ends strictly
-    increasing across both runs."""
+    batches, stop, add more entries, restart on the same checkpoint. The
+    restarted run reads from the offset log's last end, so it stays
+    capped, with every entry delivered exactly once and offset-log ends
+    strictly increasing across both runs."""
     import json as _json
     import pathlib
     import time
@@ -428,10 +360,7 @@ def test_cap_e2e_restart_no_duplicates(spark, tmp_path):
     ckpt = str(tmp_path / "ckpt")
     out = str(tmp_path / "out")
     spark.dataSource.register(RedisStreamDataSource)
-    opts = _opts(streams_dir, "s") | {
-        "max_entries_per_batch": "100",
-        "cap_state_dir": ckpt + "/redis_cap",
-    }
+    opts = _opts(streams_dir, "s") | {"max_entries_per_batch": "100"}
 
     def n_out() -> int:
         try:
@@ -485,84 +414,60 @@ def test_cap_e2e_restart_no_duplicates(spark, tmp_path):
 
 
 def test_uncapped_drain_refreshes_cap_watermark(tmp_path):
-    """ADVICE r7 (medium): capped run -> UNCAPPED availableNow drain on the
-    same checkpoint/cap dir -> later capped run. The drain must max-merge
-    its (uncapped) ends into cap_watermark.json; a later capped run then
-    seeds at-or-past the drain's committed offset — never a regressed end,
-    never a duplicate."""
+    """Capped reads -> an UNCAPPED availableNow drain -> capped reads again,
+    each starting at the previous end (the offset log's). The later capped
+    read starts at the drain's end: never a regressed end, never a
+    duplicate."""
     _fill(tmp_path, "s", range(100))
-    cap_dir = str(tmp_path / "ckpt" / "redis_cap")
-    capped = _opts(tmp_path, "s") | {"max_entries_per_batch": "40", "cap_state_dir": cap_dir}
-    uncapped = _opts(tmp_path, "s") | {"cap_state_dir": cap_dir}
+    capped = RedisStreamReader(_opts(tmp_path, "s") | {"max_entries_per_batch": "40"})
+    uncapped = RedisStreamReader(_opts(tmp_path, "s"))
 
-    r1 = RedisStreamReader(None, capped)
-    end1 = r1.latestOffset()
+    rows1, end1 = capped.read(capped.initialOffset())
     assert end1 == {"s": "1-40"}
-    committed = r1.initialOffset()
-    rows1 = [rid for p in r1.partitions(committed, end1) for rid, _, _ in r1.read(p)]
-    r1.commit(end1)
-
-    # availableNow drain (cap unset, cap_state_dir KEPT — the watch
-    # pipeline wires exactly this): consumes to the true stream end.
-    r2 = RedisStreamReader(None, uncapped)
-    end2 = r2.latestOffset()
+    rows2, end2 = uncapped.read(end1)
     assert end2 == {"s": "1-100"}
-    rows2 = [rid for p in r2.partitions(end1, end2) for rid, _, _ in r2.read(p)]
-    r2.commit(end2)
 
-    # new entries arrive; a later CAPPED run seeds from the cap file
     fake = FakeRedis(str(tmp_path))
     for i in range(60):
         fake.xadd("s", {"payload": ENVELOPE % i})
-    r3 = RedisStreamReader(None, capped)
-    end3 = r3.latestOffset()
-    assert _record_id_tuple(end3["s"]) >= _record_id_tuple(end2["s"]), (
-        f"regressed offset: {end3} after committed {end2}"
-    )
-    assert end3 == {"s": "1-140"}, "must resume capped from the drain's end, not the stale file"
-    rows3 = [rid for p in r3.partitions(end2, end3) for rid, _, _ in r3.read(p)]
-    r3.commit(end3)
-    rows4, _ = _drain_capped(r3, end3)
-    seen = rows1 + rows2 + rows3 + rows4
+    rows3, end3 = capped.read(end2)
+    assert end3 == {"s": "1-140"}, "must resume capped from the drain's end"
+    batches, _ = _drain(capped, end3)
+    seen = _ids(rows1) + _ids(rows2) + _ids(rows3) + [rid for b in batches for rid in b]
     assert len(seen) == len(set(seen)) == 160
 
 
 def test_capped_restart_added_stream_seeds_from_configured_start(tmp_path):
-    """ADVICE r7 (low): a stream ADDED to the config after
-    cap_watermark.json was written seeds from the configured start id, not
+    """A stream ADDED to the config since the checkpoint was written (so
+    missing from the logged start) starts at the configured start id, not
     ZERO_ID — its first capped end lands past the configured start."""
     _fill(tmp_path, "a", range(50))
-    cap_dir = str(tmp_path / "ckpt" / "redis_cap")
-    r1 = RedisStreamReader(
-        None, _opts(tmp_path, "a") | {"max_entries_per_batch": "20", "cap_state_dir": cap_dir}
-    )
-    assert r1.latestOffset() == {"a": "1-20"}  # file now holds only 'a'
+    r1 = RedisStreamReader(_opts(tmp_path, "a") | {"max_entries_per_batch": "20"})
+    _, logged = r1.read(r1.initialOffset())
+    assert logged == {"a": "1-20"}
 
     fake = FakeRedis(str(tmp_path))
     for i in range(30):
         fake.xadd("b", {"payload": ENVELOPE % i})
     r2 = RedisStreamReader(
-        None,
-        _opts(tmp_path, "a,b")
-        | {"max_entries_per_batch": "20", "cap_state_dir": cap_dir, "start": "1-5"},
+        _opts(tmp_path, "a,b") | {"max_entries_per_batch": "20", "start": "1-5"}
     )
-    end = r2.latestOffset()
-    assert end["a"] == "1-40"  # resumed capped from the persisted watermark
+    rows, end = r2.read(logged)
+    assert end["a"] == "1-40"  # resumed capped from the logged end
     assert end["b"] == "1-25", "new stream must cap from the configured start (1-5), not 0-0"
+    assert [rid for rid, s, _ in rows if s == "b"][0] == "1-6"
 
 
-# --- cap watermark property test ------------------------------------------
+# --- admission property test ---------------------------------------------
 
 from hypothesis import HealthCheck, given, settings  # noqa: E402
 from hypothesis import strategies as st  # noqa: E402
 
-# An op sequence: add N entries / poll (latestOffset+consume+commit) /
-# restart the planner (fresh reader, same state dir).
+# An op sequence: add N entries to a stream / read from the last end.
 _OPS = st.lists(
     st.one_of(
-        st.tuples(st.just("add"), st.integers(min_value=1, max_value=40)),
-        st.tuples(st.just("poll"), st.just(0)),
-        st.tuples(st.just("restart"), st.just(0)),
+        st.tuples(st.just("add"), st.sampled_from("ab"), st.integers(min_value=1, max_value=40)),
+        st.tuples(st.just("read"), st.just(""), st.just(0)),
     ),
     min_size=3,
     max_size=14,
@@ -572,92 +477,84 @@ _OPS = st.lists(
 @given(ops=_OPS, cap=st.integers(min_value=1, max_value=15))
 @settings(max_examples=25, deadline=None, suppress_health_check=[HealthCheck.function_scoped_fixture])
 def test_cap_watermark_invariants_under_interleaving(tmp_path_factory, ops, cap):
-    """Whatever the interleaving of appends, polls, and planner restarts:
-    reported ends never regress, every batch admits <= cap entries (except
-    at most the first poll after a restart, which may catch up), and a
-    final drain delivers every entry exactly once."""
+    """Whatever the interleaving of appends and chained ``read(start)``
+    calls (each from a fresh reader, as after a restart): ends never
+    regress, each stream admits at most the cap per read, and the
+    concatenated reads equal the stream, in order."""
     tmp_path = tmp_path_factory.mktemp("capprop")
     fake = FakeRedis(str(tmp_path))
-    opts = _opts(tmp_path, "s") | {
-        "max_entries_per_batch": str(cap),
-        "cap_state_dir": str(tmp_path / "ckpt" / "redis_cap"),
-    }
+    opts = _opts(tmp_path, "a,b") | {"max_entries_per_batch": str(cap)}
+    start = RedisStreamReader(opts).initialOffset()
+    seen: dict[str, list[str]] = {"a": [], "b": []}
 
-    def new_reader(fresh_query: bool) -> RedisStreamReader:
-        r = RedisStreamReader(None, opts)
-        if fresh_query:
-            r.latestOffset()  # engine probes latest BEFORE initialOffset
-            r.initialOffset()
-        return r
+    def key(rid: str) -> tuple[int, int]:
+        ms, _, seq = rid.partition("-")
+        return int(ms), int(seq)
 
-    reader = new_reader(fresh_query=True)
-    committed = {"s": ZERO_ID}
-    last_reported = ZERO_ID
-    seen: list[str] = []
-    n_added = 0
-    fresh_after_restart = False
+    def read() -> int:
+        nonlocal start
+        it, end = RedisStreamReader(opts).read(start)
+        rows = list(it)
+        for s in "ab":
+            assert key(end[s]) >= key(start[s]), f"regressed end: {end} after {start}"
+            ids = [rid for rid, stream, _ in rows if stream == s]
+            assert len(ids) <= cap, f"{s} admitted {len(ids)} > cap {cap}"
+            seen[s] += ids
+        start = end
+        return len(rows)
 
-    def poll():
-        nonlocal committed, last_reported, fresh_after_restart
-        end = reader.latestOffset()
-        assert _record_id_tuple(end["s"]) >= _record_id_tuple(last_reported), (
-            f"regressed end: {end} after {last_reported}"
-        )
-        rows = [rid for p in reader.partitions(committed, end) for rid, _, _ in reader.read(p)]
-        if not fresh_after_restart:
-            assert len(rows) <= cap, f"admitted {len(rows)} > cap {cap}"
-        reader.commit(end)
-        seen.extend(rows)
-        committed = end
-        last_reported = end["s"]
-        fresh_after_restart = False
-
-    for op, n in ops:
+    for op, stream, n in ops:
         if op == "add":
             for i in range(n):
-                fake.xadd("s", {"payload": ENVELOPE % i})
-            n_added += n
-        elif op == "poll" and n_added:
-            poll()
-        elif op == "restart":
-            reader = new_reader(fresh_query=False)
-            fresh_after_restart = True
+                fake.xadd(stream, {"payload": ENVELOPE % i})
+        else:
+            read()
+    while read():  # final drain
+        pass
+    for s in "ab":
+        assert seen[s] == [rid for rid, _ in fake.xrange(s)]
 
-    # final drain: poll until nothing new arrives
-    for _ in range(n_added + 2):
-        before = len(seen)
-        poll()
-        if len(seen) == before and committed["s"] == last_reported:
-            end_now = reader.latestOffset()
-            if end_now == committed:
-                break
-    assert len(seen) == len(set(seen)) == n_added, (
-        f"delivered {len(seen)} ({len(set(seen))} unique) of {n_added}"
-    )
+
+def _failing_client(options):
+    """A fake whose XRANGE fails like a dropped connection."""
+    fake = FakeRedis(options["fake_dir"])
+
+    def xrange(*a, **k):
+        raise ConnectionError("Error 111 connecting to localhost:6379. Connection refused.")
+
+    fake.xrange = xrange
+    return fake
 
 
 def test_missing_stream_mid_run_reports_watermark_not_zero(tmp_path):
-    """A consumed stream that disappears mid-run (DEL / failover) must not
-    be reported as 0-0 — that end would be committed to the offset log and
-    a recreated stream would replay every already-processed entry through
-    the regressed range (round-8 review). The reader reports the highest
-    end it ever reported (its watermark) instead; a stream that genuinely
-    never existed still reports 0-0."""
-    fake = _fill(tmp_path, "m1.a", [1, 2, 3])
-    opts = _opts(tmp_path, "m1.a,m1.never")
-    opts["cap_state_dir"] = str(tmp_path / "cap")
-    r = RedisStreamReader(None, opts)
-    first = r.latestOffset()
-    assert first["m1.a"] == "1-3"
-    assert first["m1.never"] == ZERO_ID  # never existed: genuinely fresh
+    """A consumed stream that disappears mid-run (DEL / failover) reports
+    its start — the committed id — not 0-0: that end would be committed to
+    the offset log and a recreated stream would replay every
+    already-processed entry through the regressed range. A recreated
+    stream whose ids restart below the committed id stays held there. This
+    holds whether XRANGE of a missing key returns nothing (Redis) or
+    raises the missing-key error. Any other read error propagates instead
+    of being read as "nothing new"."""
+    for factory in ("cdc_dedupe_spark.sources.fake_redis:make_client",
+                    "tests.test_redis_source:_missing_key_client"):
+        d = tmp_path / factory.rpartition(":")[2]
+        fake = _fill(d, "m1.a", [1, 2, 3])
+        opts = _opts(d, "m1.a,m1.never") | {"client_factory": factory}
+        r = RedisStreamReader(opts)
+        _, first = r.read(r.initialOffset())
+        assert first == {"m1.a": "1-3", "m1.never": ZERO_ID}  # never existed: genuinely fresh
 
-    # the stream vanishes (file-backed fake: remove its storage)
-    fake._path("m1.a").unlink()
-    second = r.latestOffset()
-    assert second["m1.a"] == "1-3", "must hold the watermark, not regress to 0-0"
+        # the stream vanishes (file-backed fake: remove its storage)
+        fake._path("m1.a").unlink()
+        rows, second = r.read(first)
+        assert list(rows) == [] and second == first, "must hold the committed id, not regress"
 
-    # recreated with new entries: resumes past the held end, no replay range
-    fake.xadd("m1.a", {"payload": "x"})  # becomes id 1-1 again (fake ids restart)
-    # ids restarted below the watermark -> reader keeps reporting the max
-    third = r.latestOffset()
-    assert third["m1.a"] == "1-3"
+        # recreated with ids restarting below the committed id: still held
+        fake.xadd("m1.a", {"payload": "x"})  # becomes id 1-1 again (fake ids restart)
+        assert r.read(second)[1] == first
+
+    broken = RedisStreamReader(opts | {"client_factory": "tests.test_redis_source:_failing_client"})
+    with pytest.raises(ConnectionError):
+        broken.read(first)
+    with pytest.raises(ConnectionError):
+        list(broken.readBetweenOffsets({"m1.a": ZERO_ID}, first))
