@@ -16,10 +16,10 @@ costs a handful of py4j calls.
 Trade-off: routed copies are partitioned on their target alone, so the
 dedupe and the packing run one task per target and lose AQE's hot-key
 split; the packing window always had that bound, since its order is per
-target. The ack set travels back to the driver on the write's Observation
-(streaming/pipeline.py). It is bounded by the source admission cap, and
-the reference's ack barrier is itself a driver-side in-flight map
-(WatchStream.java:170-231).
+target. The sink rows, the ack set among them, are collected to the
+driver (streaming/pipeline.py). They are bounded by the source admission
+cap, and the reference's ack barrier is itself a driver-side in-flight
+map (WatchStream.java:170-231).
 
 Reference stages covered (SURVEY.md §2A): S2/S3 decode+extract, S6 fan-out,
 S9 first-wins dedupe, S12/S13 packing, S15-S19 ack set.
@@ -39,7 +39,7 @@ from ..operators.cdc import ENVELOPE_SCHEMA, envelope_payload_sql
 # Sink kind -> the directory key column its files sit under
 # (``<kind>/<column>=<value>/``).
 SINK_KEYS = {"targets": "target_stream", "dead": "stream", "acks": "stream"}
-_SINK_COLUMNS = ("_sink", "_key", "ids", "offset", "id_column", "payload", "ack_mode")
+SINK_COLUMNS = ("_sink", "_key", "ids", "offset", "id_column", "payload", "ack_mode")
 
 
 def _routes(cfg: Config) -> dict[str, list[tuple[str, str]]]:
@@ -261,5 +261,5 @@ def compile_watch_plan(batch: DataFrame, cfg: Config) -> DataFrame:
         .selectExpr(*sql.pack)
         .groupBy("_sink", "_key", F.expr(sql.bucket), "offset", "payload")
         .agg(*(F.expr(a) for a in sql.aggs))
-        .select(*_SINK_COLUMNS)
+        .select(*SINK_COLUMNS)
     )

@@ -4,16 +4,15 @@ Redis commands. It replaces the reference's Lettuce consumer/producer
 XADD; WatchStream.java:196-220 XACK/XDEL) with:
 
  - a streaming source (``spark.readStream.format("redis_stream")``);
- - a batch XADD writer (``df.write.format("redis_stream")``), which the
-   pipeline calls inside ``foreachBatch``;
- - the functions the pipeline's driver calls: ``ack_entries``
-   (XACK/XDEL of a batch's ack set), ``scrub_batch`` (crash-replay
-   cleanup of target streams), and, on the startup client from
-   ``connect``, ``ensure_group`` (consumer-group bootstrap) and
-   ``seed_streams`` (the startup seed entries).
+ - the functions the pipeline's driver calls: ``xadd_entries`` (the
+   pipelined XADD of a batch's packed rows), ``ack_entries`` (XACK/XDEL
+   of a batch's ack set), ``scrub_batch`` (crash-replay cleanup of
+   target streams), and, on the startup client from ``connect``,
+   ``ensure_group`` (consumer-group bootstrap) and ``seed_streams`` (the
+   startup seed entries).
 
-``ack_entries`` and ``scrub_batch`` open their own client and close it
-when done.
+``xadd_entries``, ``ack_entries`` and ``scrub_batch`` open their own
+client and close it when done.
 
 Spark-first mapping of the reference's consumer-group model:
 
@@ -27,7 +26,8 @@ Spark-first mapping of the reference's consumer-group model:
  - the driver's source runner reads the batch and ships it to the JVM as
    Arrow, in place of one Python worker task per stream; the reference
    too reads with one poller per process (RedisSource.java:72-93). The
-   admission cap bounds that data, as it bounds the driver-held ack set.
+   admission cap bounds that data, as it bounds the batch's sink rows and
+   ack set that the pipeline's driver holds.
 
 Admission (the reference's poll batch size, config.yaml:13-15):
 ``read(start)`` sends one ``XRANGE (start[s] + COUNT
@@ -61,14 +61,9 @@ from __future__ import annotations
 
 import importlib
 from contextlib import contextmanager
-from typing import Any, Iterable, Iterator, Tuple
+from typing import Any, Iterable, Iterator, Sequence, Tuple
 
-from pyspark.sql.datasource import (
-    DataSource,
-    DataSourceWriter,
-    SimpleDataSourceStreamReader,
-    WriterCommitMessage,
-)
+from pyspark.sql.datasource import DataSource, SimpleDataSourceStreamReader
 from pyspark.sql.types import StructType
 
 ENVELOPE_ROW_SCHEMA = "offset string, stream string, fields map<string,string>"
@@ -80,7 +75,7 @@ ZERO_ID = "0-0"
 PIPELINE_CHUNK = 1000
 
 # Field that stamps a target-stream entry with the micro-batch that XADDed
-# it: the writer sets it, scrub_batch deletes by it.
+# it: xadd_entries sets it, scrub_batch deletes by it.
 _BATCH_FIELD = "batch"
 
 
@@ -215,38 +210,8 @@ class RedisStreamReader(SimpleDataSourceStreamReader):
         return iter(rows)
 
 
-class RedisBatchWriter(DataSourceWriter):
-    """``df.write.format("redis_stream")``: XADD one entry per row to the
-    stream in its ``target_stream`` column, with field ``ids`` set to its
-    ``ids`` column (the packed JSON array, WatchStream.java:285-293 shape).
-    With the ``batch_id`` option set, every entry also carries
-    ``batch=<batch_id>``, which ``scrub_batch`` deletes by. XADD is an
-    append: a retried micro-batch is kept from duplicating its entries by
-    the watch pipeline's manifest and scrub, not by this writer."""
-
-    def __init__(self, schema: StructType, options: dict[str, str]) -> None:
-        self.options = dict(options)
-        self.stamp = {_BATCH_FIELD: options["batch_id"]} if "batch_id" in options else {}
-        names = [f.name for f in schema.fields]
-        self.stream_i, self.ids_i = names.index("target_stream"), names.index("ids")
-
-    def write(self, rows: Iterator[Any]) -> WriterCommitMessage:
-        # Pipeline the XADDs: one network round trip per PIPELINE_CHUNK
-        # entries instead of per entry (WatchStream.java:291-293 batches
-        # the same way through Reactor).
-        with connect(self.options) as client:
-            pipe = client.pipeline()
-            for n, row in enumerate(rows, start=1):
-                pipe.xadd(row[self.stream_i], {"ids": row[self.ids_i], **self.stamp})
-                if n % PIPELINE_CHUNK == 0:
-                    pipe.execute()
-            pipe.execute()
-        return WriterCommitMessage()
-
-
 class RedisStreamDataSource(DataSource):
-    """``spark.readStream.format("redis_stream")`` and
-    ``df.write.format("redis_stream")`` after
+    """``spark.readStream.format("redis_stream")`` after
     ``spark.dataSource.register(RedisStreamDataSource)``."""
 
     @classmethod
@@ -259,8 +224,28 @@ class RedisStreamDataSource(DataSource):
     def simpleStreamReader(self, schema: StructType) -> RedisStreamReader:
         return RedisStreamReader(self.options)
 
-    def writer(self, schema: StructType, overwrite: bool) -> RedisBatchWriter:
-        return RedisBatchWriter(schema, self.options)
+
+def xadd_entries(
+    options: dict[str, str], entries: Sequence[tuple[str, str]], batch_id: int
+) -> None:
+    """XADD one entry per ``(stream, ids)`` pair, with field ``ids`` (the
+    packed JSON array, WatchStream.java:285-293 shape) and the stamp
+    ``batch=<batch_id>`` that ``scrub_batch`` deletes by. The XADDs are
+    pipelined, one round trip per PIPELINE_CHUNK entries instead of per
+    entry (WatchStream.java:291-293 batches the same way through
+    Reactor). XADD is an append: a retried micro-batch is kept from
+    duplicating its entries by the watch pipeline's manifest and scrub,
+    not here. No entries open no client."""
+    if not entries:
+        return
+    stamp = {_BATCH_FIELD: str(batch_id)}
+    with connect(options) as client:
+        pipe = client.pipeline()
+        for n, (stream, ids) in enumerate(entries, start=1):
+            pipe.xadd(stream, {"ids": ids, **stamp})
+            if n % PIPELINE_CHUNK == 0:
+                pipe.execute()
+        pipe.execute()
 
 
 def ack_entries(

@@ -15,22 +15,23 @@ IS the dedupe window), the arrival-order packing into ≤target.size JSON
 id arrays (S12/S13) and the aggregate that shapes packed batches (S14),
 dead letters and the ack ledger (S15-S19; the checkpoint itself is the
 real at-least-once/effectively-once contract, the ledger is
-observability parity with XACK). That one tagged relation is written
-ONCE. The write's Observation carries back the row counts and the ack
-set, and the driver sends XACK/XDEL from it after the manifest marks the
-batch done. Every Redis command (the source reads, the XADD sink, the
-acks, the crash scrub and the startup seeds) goes through
-``sources/redis_stream.py``; this module sends none itself.
+observability parity with XACK). That one tagged relation is collected
+ONCE. The driver writes the file sinks from the collected rows in plain
+Python (under ``redis_sink`` it XADDs the packed rows instead), takes
+the counts and the ack set from the same rows, and sends XACK/XDEL
+after the manifest marks the batch done. Every Redis command (the source
+reads, the XADD sink, the acks, the crash scrub and the startup seeds)
+goes through ``sources/redis_stream.py``; this module sends none itself.
 
-Scale: routing is a per-row expression and every file sink is one
-partitioned job. The dedupe and the packing shuffle once, by target, so
-they run one task per target. The driver holds one batch's ack set,
-which the source admission cap bounds (buffers.source.size per stream),
-like the reference's in-flight map. State never accumulates across
-batches (window-scoped semantics, like the reference); the cross-batch
-variant is dropDuplicatesWithinWatermark (queries/streaming.py). Each
-sunk batch appends its counts and per-layer times to
-``<work_dir>/batch_metrics.jsonl``.
+Scale: routing is a per-row expression. The dedupe and the packing
+shuffle once, by target, so they run one task per target. The driver
+holds one batch's sink rows (packed records, dead letters, the ack
+set), which the source admission cap bounds (buffers.source.size per
+stream), like the reference's in-flight map. State never accumulates
+across batches (window-scoped semantics, like the reference); the
+cross-batch variant is dropDuplicatesWithinWatermark
+(queries/streaming.py). Each sunk batch appends its counts and per-layer
+times to ``<work_dir>/batch_metrics.jsonl``.
 
 Sink semantics: **effectively-once** via a batchId-idempotent sink
 layer. Plain JSON-file and XADD appends would duplicate the output of a
@@ -47,9 +48,9 @@ checkpoint dir, so both share one lifecycle):
  - crash DURING the sink writes: the ``{batchId}.started`` marker exists
    without ``.done``, so the replay first scrubs the crashed attempt's
    output — file sinks publish under batch-deterministic names
-   (``b{batchId}-*``, staged then moved, the classic committer pattern),
-   XADD entries are stamped with their batchId (the writer's ``batch_id``
-   option, ``scrub_batch``) — then rewrites. Scrub runs ONLY
+   (``b{batchId}-*``, each written as a hidden ``.b{batchId}-*.tmp`` and
+   renamed into place), XADD entries are stamped with their batchId
+   (``xadd_entries``, ``scrub_batch``) — then rewrites. Scrub runs ONLY
    on a genuine crash-replay (started-without-done), never in the fresh
    hot path, and is safe precisely because ``done`` is marked BEFORE the
    destructive acknowledge=delete: started-without-done implies the
@@ -63,7 +64,7 @@ the manifest contract is the same.
 from __future__ import annotations
 
 import json
-import shutil
+import os
 import time
 import warnings
 from collections.abc import Mapping
@@ -75,7 +76,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from ..config import Config
-from ..plans.watch_plan import SINK_KEYS, compile_watch_plan, routed_streams
+from ..plans.watch_plan import SINK_COLUMNS, SINK_KEYS, compile_watch_plan, routed_streams
 from ..session import temp_sql_confs
 
 # FIXTURES.md §A: one row per stream entry. Canonical definition lives
@@ -89,17 +90,18 @@ from ..sources.redis_stream import (
     ensure_group,
     scrub_batch,
     seed_streams,
+    xadd_entries,
 )
 
 
 def _needs_seed(work: Path) -> bool:
     """True until ``_mark_seeded`` runs — the marker lives inside the
     checkpoint dir, so wiping the checkpoint (a fresh pipeline) re-seeds;
-    restarting on a live checkpoint does not (seeds are not batch-stamped,
-    so each restart would otherwise append another). Callers write the
-    marker AFTER seeding succeeds: a crash inside the seed window then
-    re-seeds on restart (rare duplicate seed) instead of permanently
-    losing the target-stream seeds (silent loss)."""
+    restarting on a live checkpoint does not (XADD seeds are not
+    batch-stamped, so each restart would otherwise append another).
+    Callers write the marker AFTER seeding succeeds: a crash inside the
+    seed window then re-seeds on restart (rare duplicate XADD seed)
+    instead of permanently losing the target-stream seeds (silent loss)."""
     return not (work / "checkpoint" / "targets_seeded").exists()
 
 
@@ -113,13 +115,15 @@ def _target_streams(cfg: Config) -> list[str]:
     return [f"{cfg.target.prefix}{t}" for t in cfg.targets()]
 
 
-def seed_targets(spark: SparkSession, cfg: Config, output_dir: str) -> None:
+def seed_targets(cfg: Config, output_dir: str) -> None:
     """Seed every target stream with ``{"ids": "[]"}`` at startup
-    (WatchStream.java:262-265; the reference's tests count on it)."""
-    seeds = spark.createDataFrame(
-        [("[]", t) for t in _target_streams(cfg)], "ids string, target_stream string"
-    )
-    seeds.coalesce(1).write.mode("append").partitionBy("target_stream").json(output_dir)
+    (WatchStream.java:262-265; the reference's tests count on it), one
+    ``seed-part-00000.json`` per target directory."""
+    for t in _target_streams(cfg):
+        _write_json_file(
+            _key_dir(Path(output_dir), SINK_KEYS["targets"], t) / "seed-part-00000.json",
+            ['{"ids":"[]"}'],
+        )
 
 
 # Configs whose declared source.format was already checked against observed
@@ -200,72 +204,88 @@ class SinkManifest:
                 f.unlink(missing_ok=True)
 
 
-def _publish_json(
-    df: DataFrame,
-    batch_id: int,
-    partition_col: Mapping[str, str],
-    final_dir: str,
-    staging_root: Path,
-) -> None:
-    """Write the sink-tagged relation ``df`` (plans/watch_plan.py
-    ``compile_watch_plan``) once, then publish each kind's files into its
-    hive-partitioned dir under batch-deterministic names: the staged
-    ``_sink=S/_key=V/part-*`` moves to ``S/<partition_col[S]>=V/b{batchId}-
-    part-*`` (``V`` exactly as Spark escaped it) — the committer pattern
-    that lets a replay of the same batch identify (and scrub) a crashed
-    attempt's files. NULL fields are left out of each line explicitly
-    (whatever the session conf), so each kind's lines carry only its own
-    fields. Moves are driver-side metadata ops, O(part files), not O(rows);
-    a cluster deployment swaps this for a transactional table append
-    (module docstring)."""
-    staging = staging_root / f"b{batch_id}-{Path(final_dir).name}"
-    (
-        df.write.mode("overwrite")
-        .option("ignoreNullFields", True)
-        .partitionBy("_sink", "_key")
-        .json(str(staging))
-    )
-    final = Path(final_dir)
-    for sink, col in partition_col.items():
-        for key_dir in (staging / f"_sink={sink}").glob("_key=*"):
-            dest_dir = final / sink / f"{col}={key_dir.name[len('_key='):]}"
-            dest_dir.mkdir(parents=True, exist_ok=True)
-            for part in key_dir.iterdir():
-                if part.is_file() and not part.name.startswith(("_", ".")):
-                    part.replace(dest_dir / f"b{batch_id}-{part.name}")
-    shutil.rmtree(staging, ignore_errors=True)
+# Spark's ExternalCatalogUtils.escapePathName: the characters a partition
+# value escapes as %XX (upper-case hex) in its directory name.
+_PATH_ESCAPES = {c: f"%{c:02X}" for c in (*range(0x01, 0x20), *b"\"#%'*/:=?\\{[]^", 0x7F)}
 
-
-def _scrub_batch_files(batch_id: int, *dirs: str) -> None:
-    """Delete every file a crashed attempt of this batch published."""
-    for d in dirs:
-        root = Path(d)
-        if root.exists():
-            for f in root.rglob(f"b{batch_id}-*"):
-                if f.is_file():
-                    f.unlink()
-
-
-# The write's Observation: the sink counts and the ack set, as SQL text.
-_SINK_METRICS = {
-    "acked": "count_if(_sink = 'acks')",
-    "dead": "count_if(_sink = 'dead')",
-    "packed_records": "count_if(_sink = 'targets')",
-    "packed_ids": "coalesce(sum(CASE WHEN _sink = 'targets' THEN json_array_length(ids) END), 0)",
-    "ack_set": "collect_list(CASE WHEN _sink = 'acks' "
-    "THEN named_struct('stream', _key, 'offset', offset) END)",
+# The string escapes of Spark's JSON writer (Jackson): short forms for the
+# quote, the backslash and \b \t \n \f \r, \u00XX with upper-case hex for
+# the other control characters; everything else (non-ASCII, 0x7F, U+2028)
+# is written raw.
+_JSON_ESCAPES = {c: f"\\u{c:04X}" for c in range(0x20)} | {
+    ord(c): "\\" + e for c, e in zip('"\\\b\t\n\f\r', '"\\btnfr')
 }
 
 
-# Confs for a batch's writes. AQE's empty-relation rule would cut the
+def _key_dir(root: Path, col: str, key: str) -> Path:
+    """The hive-style directory ``root/<col>=<key>`` that Spark's
+    ``partitionBy(col)`` writes ``key``'s rows to."""
+    return root / f"{col}={key.translate(_PATH_ESCAPES)}"
+
+
+def _json_line(row: tuple) -> str:
+    """A sink row as Spark's JSON writer writes it with ignoreNullFields:
+    the non-NULL fields after ``(_sink, _key)``, in column order, with
+    compact separators. Every field is a string."""
+    fields = zip(SINK_COLUMNS[2:], row[2:])
+    return "{" + ",".join(
+        f'"{name}":"{value.translate(_JSON_ESCAPES)}"'
+        for name, value in fields
+        if value is not None
+    ) + "}"
+
+
+def _write_json_file(path: Path, lines: list[str]) -> None:
+    """Write ``lines`` to ``path`` through a hidden ``.<name>.tmp`` that is
+    renamed into place: readers (Spark's skip hidden files) never see a
+    partial file, and a crash leaves only the tmp, which
+    ``_scrub_batch_files`` deletes."""
+    path.parent.mkdir(parents=True, exist_ok=True)
+    tmp = path.with_name(f".{path.name}.tmp")
+    tmp.write_bytes("".join(line + "\n" for line in lines).encode())
+    os.replace(tmp, path)
+
+
+def _publish_json(
+    rows: list, batch_id: int, partition_col: Mapping[str, str], final_dir: str
+) -> None:
+    """Publish collected rows of the sink-tagged relation (plans/watch_plan.py
+    ``compile_watch_plan``): each ``(_sink, _key)`` group becomes one file,
+    ``S/<partition_col[S]>=V/b{batchId}-part-00000.json`` under
+    ``final_dir``, with ``V`` escaped and each line written as Spark's
+    partitioned JSON writer would, so Spark reads the sinks back as
+    before. The batch-deterministic name lets a replay of the same batch
+    identify (and scrub) a crashed attempt's files. The driver writes the
+    files itself: the rows are one batch's, bounded like its ack set by
+    the source admission cap, and no Hadoop committer runs. A cluster
+    deployment swaps this for a transactional table append (module
+    docstring)."""
+    files: dict[tuple[str, str], list[str]] = {}
+    for row in rows:
+        files.setdefault((row[0], row[1]), []).append(_json_line(row))
+    for (sink, key), lines in files.items():
+        key_dir = _key_dir(Path(final_dir) / sink, partition_col[sink], key)
+        _write_json_file(key_dir / f"b{batch_id}-part-00000.json", lines)
+
+
+def _scrub_batch_files(batch_id: int, *dirs: str) -> None:
+    """Delete every file a crashed attempt of this batch published or left
+    half-written (its hidden tmp files)."""
+    for d in dirs:
+        root = Path(d)
+        if root.exists():
+            for pattern in (f"b{batch_id}-*", f".b{batch_id}-*"):
+                for f in root.rglob(pattern):
+                    if f.is_file():
+                        f.unlink()
+
+
+# Confs for a batch's collect. AQE's empty-relation rule would cut the
 # scan-side Observation out of the plan of a batch whose scan emits no sink
 # row (an empty or all-unroutable batch), and it would then never report.
-# A cached plan (the XADD path's persist) may coalesce its shuffle like any
-# other plan.
 _WRITE_CONFS = {
     "spark.sql.adaptive.optimizer.excludedRules":
         "org.apache.spark.sql.execution.adaptive.AQEPropagateEmptyRelation",
-    "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning": "true",
 }
 
 
@@ -321,8 +341,9 @@ def _process_batch(
             scrub_batch(sink_options, _target_streams(cfg), batch_id)
     manifest.start(batch_id)
     t0 = time.perf_counter()
-    # The scan-side counts ride on the write too: input entries, the
-    # unroutable ones, and the compact ones for the format probe.
+    # The scan-side counts ride on the collect: input entries, the
+    # unroutable ones, and the compact ones for the format probe. Only the
+    # scan sees entries that yield no sink row.
     scanned, scan_obs = _observe(
         batch,
         input=F.count(F.lit(1)),
@@ -333,45 +354,32 @@ def _process_batch(
     # the sinks: packed (S14), dead letters and the ack ledger (S15-S19:
     # the checkpoint is the real at-least-once contract, the ledger is
     # XACK observability parity), tagged in one relation.
-    tagged, obs = _observe(
-        compile_watch_plan(scanned, cfg), **{k: F.expr(v) for k, v in _SINK_METRICS.items()}
-    )
+    tagged = compile_watch_plan(scanned, cfg)
     t1 = time.perf_counter()
+    with temp_sql_confs(batch.sparkSession, _WRITE_CONFS):
+        rows = tagged.collect()
+    scan = scan_obs.get
+    packed = [r for r in rows if r[0] == "targets"]
+    ack_set = [{"stream": r[1], "offset": r[3]} for r in rows if r[0] == "acks"]
     # Dead letters land BEFORE any source ack: malformed records must have
     # a surviving copy before acknowledge=delete can remove them from the
     # source (the reference instead wedges the stream on the first
     # malformed record, RedisSource.java:63-66).
-    with temp_sql_confs(batch.sparkSession, _WRITE_CONFS):
-        if sink_options is None:
-            _publish_json(tagged, batch_id, SINK_KEYS, work_dir, work / "staging")
-        else:
-            # Two writes: XADD straight to the target Redis streams
-            # (reference topology), the rest as JSON. The persist keeps
-            # the source read once.
-            tagged.persist()
-            try:
-                # Entries carry their batchId so a crash-replay can scrub
-                # the partial attempt (scrub_batch).
-                tagged.where("_sink = 'targets'").selectExpr(
-                    "_key AS target_stream", "ids"
-                ).write.format("redis_stream").options(
-                    **sink_options, batch_id=str(batch_id)
-                ).mode("append").save()
-                _publish_json(
-                    tagged.where("_sink <> 'targets'"), batch_id, SINK_KEYS, work_dir,
-                    work / "staging",
-                )
-            finally:
-                tagged.unpersist()
-    scan, counts = scan_obs.get, obs.get
+    if sink_options is None:
+        _publish_json(rows, batch_id, SINK_KEYS, work_dir)
+    else:
+        # The packed rows go to the target Redis streams (reference
+        # topology), the rest to the files.
+        xadd_entries(sink_options, [(r[1], r[2]) for r in packed], batch_id)
+        _publish_json([r for r in rows if r[0] != "targets"], batch_id, SINK_KEYS, work_dir)
     t2 = time.perf_counter()
-    ack_set = counts.pop("ack_set")
-    if len(ack_set) != counts["acked"]:
-        raise RuntimeError(
-            f"batch {batch_id}: the write observed {counts['acked']} ack rows "
-            f"but carried back {len(ack_set)}"
-        )
-    if counts["acked"]:
+    counts = {
+        "acked": len(ack_set),
+        "dead": len(rows) - len(packed) - len(ack_set),
+        "packed_records": len(packed),
+        "packed_ids": sum(len(json.loads(r[2])) for r in packed),
+    }
+    if ack_set:
         _warn_format_mismatch(cfg, scan["compact"], scan["input"])
     # Effectively-once ordering: mark done BEFORE the destructive source
     # ack. A crash after mark but mid-ack replays into the ack-only path
@@ -383,8 +391,8 @@ def _process_batch(
     t3 = time.perf_counter()
     if ack_wanted and ack_set:
         _ack(cfg, ack_options, ack_set)
-    # Per-batch metrics ledger: the observed counts (no extra job) and
-    # where the batch's time went.
+    # Per-batch metrics ledger: the counts (the collected rows and the
+    # scan's Observation, no extra job) and where the batch's time went.
     t4 = time.perf_counter()
     line = {
         "batch_id": batch_id, "input": scan["input"], "unroutable": scan["unroutable"], **counts
@@ -496,7 +504,7 @@ def watch(
     # them and every restart would add another.
     if seed:
         if sink_options is None:
-            seed_targets(spark, cfg, output_dir)
+            seed_targets(cfg, output_dir)
         _mark_seeded(work)
 
     manifest = SinkManifest(work / "checkpoint" / "sink_manifest")

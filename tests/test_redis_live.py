@@ -122,18 +122,20 @@ def test_watch_live_redis_topology(spark, tmp_path, live):
 
 
 def test_missing_stream_taxonomy_live(live):
-    """`_is_missing_stream` encodes server behavior (sources/
-    redis_stream.py): XINFO STREAM on a nonexistent key must raise a
-    ResponseError the helper classifies as missing, while a wrong-type key
-    must NOT be classified as missing."""
-    from cdc_dedupe_spark.sources.redis_stream import _is_missing_stream
+    """`_is_missing_stream` encodes server behavior for XRANGE, the one read
+    command the source sends (sources/redis_stream.py ``_xrange``): XRANGE
+    of a nonexistent key answers an empty list, not an error, while XRANGE
+    of a wrong-type key raises WRONGTYPE, which the helper must NOT
+    classify as missing, so ``_xrange`` propagates it."""
+    from cdc_dedupe_spark.sources.redis_stream import _is_missing_stream, _xrange
 
     client, p = live
-    with pytest.raises(Exception) as ei:
-        client.xinfo_stream(p + "never_created")
-    assert _is_missing_stream(ei.value), f"unclassified: {ei.value!r}"
+    assert client.xrange(p + "never_created") == []
+    assert _xrange(client, p + "never_created") == []
 
     client.set(p + "a_string", "x")
-    with pytest.raises(Exception) as ei:
-        client.xinfo_stream(p + "a_string")
+    with pytest.raises(_redis.exceptions.ResponseError, match="WRONGTYPE") as ei:
+        client.xrange(p + "a_string")
     assert not _is_missing_stream(ei.value), "WRONGTYPE misread as missing stream"
+    with pytest.raises(_redis.exceptions.ResponseError, match="WRONGTYPE"):
+        _xrange(client, p + "a_string")

@@ -1,6 +1,7 @@
 """Tests for the redis_stream Python Data Source (sources/redis_stream.py):
 ``read(start)`` admission and ``readBetweenOffsets`` replays unit-tested
-against the file-backed fake client, plus end-to-end readStream runs.
+against the file-backed fake client, plus end-to-end readStream runs, and
+the driver-side XADD, ack and scrub functions.
 """
 
 from __future__ import annotations
@@ -17,6 +18,7 @@ from cdc_dedupe_spark.sources.redis_stream import (
     ack_entries,
     ensure_group,
     scrub_batch,
+    xadd_entries,
 )
 from cdc_dedupe_spark.sources.fake_redis import FakeRedis
 
@@ -54,7 +56,7 @@ def test_initial_and_latest_offsets(tmp_path):
     assert latest == {"m1.a": "1-3", "m1.b": ZERO_ID}  # m1.b: not created yet
 
 
-def test_partition_planning_skips_drained_streams(tmp_path):
+def test_replay_rereads_only_streams_with_new_entries(tmp_path):
     """A replay re-reads only the streams whose range is non-empty: no
     XRANGE for a stream whose end equals its start."""
     fake = FakeRedis(str(tmp_path))
@@ -71,7 +73,7 @@ def test_partition_planning_skips_drained_streams(tmp_path):
     assert fake.round_trips()[n:] == ["xrange"]
 
 
-def test_partition_planning_empty_batch_yields_noop_partition(tmp_path):
+def test_read_with_nothing_new_ends_at_its_start(tmp_path):
     """Nothing new: the read returns no rows and ends where it started,
     and replaying that empty range reads nothing."""
     _fill(tmp_path, "a", range(5))
@@ -123,31 +125,17 @@ def test_stream_e2e_reads_and_dedupes(spark, tmp_path):
     assert got == [7, 8, 9]
 
 
-def test_stream_sink_xadds_packed_batches(spark, tmp_path):
-    """write.format('redis_stream') sink: packed id batches land as
-    stream entries with the reference's {'ids': '[...]'} field shape."""
-    in_dir = tmp_path / "in"
+def test_stream_sink_xadds_packed_batches(tmp_path):
+    """xadd_entries: packed id batches land as stream entries with the
+    reference's {'ids': '[...]'} field shape, stamped with their batch."""
     out_dir = tmp_path / "out"
-    in_dir.mkdir()
-    (in_dir / "batch.json").write_text(
-        '\n'.join(
-            json.dumps({"target_stream": "target.idx", "ids": json.dumps([i, i + 1])})
-            for i in range(0, 6, 2)
-        )
-    )
-    spark.dataSource.register(RedisStreamDataSource)
-    src = spark.read.schema("target_stream string, ids string").json(str(in_dir))
-    (
-        src.write.format("redis_stream")
-        .option("client_factory", "cdc_dedupe_spark.sources.fake_redis:make_client")
-        .option("fake_dir", str(out_dir))
-        .mode("append")
-        .save()
-    )
+    rows = [("target.idx", json.dumps([i, i + 1])) for i in range(0, 6, 2)]
+    xadd_entries(_opts(out_dir, ""), rows, 7)
     fake = FakeRedis(str(out_dir))
     entries = fake.xrange("target.idx")
     got = sorted(json.loads(f["ids"])[0] for _, f in entries)
     assert got == [0, 2, 4]
+    assert [f["batch"] for _, f in entries] == ["7"] * 3
 
 
 def test_missing_stream_gating_is_type_and_message(tmp_path):
@@ -177,30 +165,15 @@ class _Boom:
         raise Exception("boom: connection refused")
 
 
-def test_writer_pipelines_xadds(spark, tmp_path):
+def test_writer_pipelines_xadds(tmp_path):
     """The XADD sink must batch through pipeline(): landing N rows costs
     O(N / PIPELINE_CHUNK) round trips, not N."""
-    in_dir = tmp_path / "in"
     out_dir = tmp_path / "out"
-    in_dir.mkdir()
-    (in_dir / "batch.json").write_text(
-        "\n".join(
-            json.dumps({"target_stream": "t.x", "ids": json.dumps([i])}) for i in range(40)
-        )
-    )
-    spark.dataSource.register(RedisStreamDataSource)
-    src = spark.read.schema("target_stream string, ids string").json(str(in_dir))
-    (
-        src.write.format("redis_stream")
-        .option("client_factory", "cdc_dedupe_spark.sources.fake_redis:make_client")
-        .option("fake_dir", str(out_dir))
-        .mode("append")
-        .save()
-    )
+    xadd_entries(_opts(out_dir, ""), [("t.x", json.dumps([i])) for i in range(40)], 0)
     fake = FakeRedis(str(out_dir))
     assert len(fake.xrange("t.x")) == 40
     rts = [op for op in fake.round_trips() if op.startswith(("xadd", "pipeline"))]
-    # one pipeline flush per task partition, never one trip per row
+    # one pipeline flush for the batch, never one trip per row
     assert all(op.startswith("pipeline") for op in rts), rts
     assert len(rts) <= 8, rts
 
@@ -256,7 +229,7 @@ def test_scrub_batch_removes_only_that_batch(tmp_path, factory):
     assert [f for _, f in fake.xrange("t.a")] == [{"ids": "[]"}, {"ids": "[2]", "batch": "4"}]
 
 
-def test_latest_offset_is_stateless_across_reader_instances(tmp_path):
+def test_read_end_depends_only_on_its_start(tmp_path):
     """The end depends only on the start handed in: a fresh reader (the
     engine may run a fresh source runner) given the same start reads the
     same entries and reports the same end, capped or not."""
@@ -413,7 +386,7 @@ def test_cap_e2e_restart_no_duplicates(spark, tmp_path):
     assert len([k for k in keys if k > (1, 300)]) >= 3, ends
 
 
-def test_uncapped_drain_refreshes_cap_watermark(tmp_path):
+def test_capped_read_resumes_from_uncapped_drain_end(tmp_path):
     """Capped reads -> an UNCAPPED availableNow drain -> capped reads again,
     each starting at the previous end (the offset log's). The later capped
     read starts at the drain's end: never a regressed end, never a
@@ -476,7 +449,7 @@ _OPS = st.lists(
 
 @given(ops=_OPS, cap=st.integers(min_value=1, max_value=15))
 @settings(max_examples=25, deadline=None, suppress_health_check=[HealthCheck.function_scoped_fixture])
-def test_cap_watermark_invariants_under_interleaving(tmp_path_factory, ops, cap):
+def test_chained_reads_invariants_under_interleaving(tmp_path_factory, ops, cap):
     """Whatever the interleaving of appends and chained ``read(start)``
     calls (each from a fresh reader, as after a restart): ends never
     regress, each stream admits at most the cap per read, and the
@@ -526,7 +499,7 @@ def _failing_client(options):
     return fake
 
 
-def test_missing_stream_mid_run_reports_watermark_not_zero(tmp_path):
+def test_missing_stream_mid_run_holds_committed_id(tmp_path):
     """A consumed stream that disappears mid-run (DEL / failover) reports
     its start — the committed id — not 0-0: that end would be committed to
     the offset log and a recreated stream would replay every

@@ -246,8 +246,8 @@ def test_watch_redis_to_redis_topology(spark, tmp_path, ack):
 def test_watch_closes_every_redis_client(spark, tmp_path):
     """Every Redis client the pipeline opens is closed, in the process
     that opened it: the driver's startup client (group bootstrap and
-    seeds) and ack client, the source runner's read clients and the
-    executors' XADD clients."""
+    seeds), XADD client and ack client, and the source runner's read
+    clients."""
     import os
     from collections import Counter
 
@@ -275,19 +275,19 @@ def test_watch_closes_every_redis_client(spark, tmp_path):
     for line in (redis_dir / "_clients.log").read_text().split():
         event, pid = line.split(":")
         (opened if event == "open" else closed)[int(pid)] += 1
-    # the startup client and the batch's ack client, both on the driver
-    assert opened[os.getpid()] == closed[os.getpid()] == 2, (opened, closed)
-    # plus the source runner's read and at least one XADD client
+    # the startup client and the batch's XADD and ack clients, all on the
+    # driver
+    assert opened[os.getpid()] == closed[os.getpid()] == 3, (opened, closed)
+    # plus the source runner's read client
     assert sum(opened.values()) >= 4, opened
     assert opened == closed, (opened, closed)
 
 
 def test_watch_batch_reads_source_once(spark, tmp_path):
     """The source is read exactly ONCE per batch: one XRANGE per (stream,
-    batch), sent by the source runner, and one scan of the batch however
-    many writes _process_batch runs over it (the packed XADD and the JSON
-    write of the rest, around one persisted relation). Redis-sink mode
-    with group+delete acks = the maximal action count."""
+    batch), sent by the source runner, and one scan of the batch for the
+    one collect that feeds both the packed XADD and the JSON files of the
+    rest. Redis-sink mode with group+delete acks = the most sinks."""
     from cdc_dedupe_spark.sources.fake_redis import FakeRedis
 
     cfg = load_config(_write_config(tmp_path, "delete"))
@@ -900,7 +900,7 @@ def _sink_static_batch(spark, tmp_path, batch_ids=(3,), events=STATIC_EVENTS):
 
 def _sink_lines(work: Path, kind: str) -> list[tuple[str, dict]]:
     """(partition directory name, JSON line) for every line under a sink
-    (Spark's ``_SUCCESS`` markers and ``.crc`` sidecars left out)."""
+    (hidden and ``_``-prefixed files left out, as Spark's reader does)."""
     return [
         (f.parent.name, json.loads(line))
         for f in sorted((work / kind).rglob("*"))
@@ -939,10 +939,11 @@ def test_watch_batch_one_write_no_broadcast(spark, tmp_path, capsys):
 
 
 def test_watch_sink_format_per_kind(spark, tmp_path):
-    """The one tagged write publishes exactly the files the per-kind writes
-    did: the union's NULL fields never leak into a line, every file sits
-    directly under <sink>/<key column>=<value>/ as b{batchId}-*, and
-    nothing of the staged layout is left behind."""
+    """The one tagged relation publishes exactly the files the per-kind
+    writes did: the union's NULL fields never leak into a line, every file
+    sits directly under <sink>/<key column>=<value>/ as b{batchId}-*, and
+    the driver writes them without the Hadoop filesystem: no staged
+    layout, committer directory, checksum, marker or tmp file exists."""
     work, _, _ = _sink_static_batch(spark, tmp_path)
 
     targets, acks, dead = (_sink_lines(work, k) for k in ("targets", "acks", "dead"))
@@ -958,7 +959,10 @@ def test_watch_sink_format_per_kind(spark, tmp_path):
                 assert f.parent.parent == work / kind and f.parent.name.startswith(f"{col}="), f
                 assert f.name.startswith("b3-"), f
     assert not [d for d in work.rglob("*") if d.name.startswith(("_sink=", "_key="))]
-    assert not any((work / "staging").iterdir())
+    assert not [
+        p for p in work.rglob("*")
+        if p.name in ("staging", "_temporary", "_SUCCESS") or p.name.endswith((".crc", ".tmp"))
+    ]
     # partition values keep Spark's escaping, so they read back verbatim
     assert sorted(d.name for d in (work / "targets").iterdir()) == [
         "target_stream=t%3Aflat", "target_stream=t%3Aproduct"
@@ -967,6 +971,58 @@ def test_watch_sink_format_per_kind(spark, tmp_path):
     assert {r.target_stream for r in out.select("target_stream").distinct().collect()} == {
         "t:flat", "t:product"
     }
+
+
+def test_driver_publish_matches_spark_json_writer(spark, tmp_path):
+    """The driver writes each sink file as Spark's partitioned JSON writer
+    does for the same rows: the partition directory escapes every
+    character escapePathName escapes and keeps non-ASCII text, each line
+    matches byte for byte (control characters, quote, backslash, 0x7F,
+    U+2028, non-ASCII), and spark.read.json reads the key back verbatim."""
+    from cdc_dedupe_spark.plans.watch_plan import SINK_COLUMNS, SINK_KEYS
+    from cdc_dedupe_spark.streaming.pipeline import _publish_json
+
+    key = "".join(map(chr, range(0x01, 0x20))) + "\"#%'*/:=?\\{[]^\x7f t:ünï✓"
+    payload = "".join(map(chr, range(0x20))) + '"\\ \x7f\u2028 ünï ✓ \U0001F600'
+    rows = [
+        ("targets", key, "[1,2]", None, None, None, None),
+        ("dead", key, None, "1-1", "entity_id", payload, None),
+        ("acks", key, None, "1-1", None, None, "delete"),
+    ]
+    spark_dir = tmp_path / "spark"
+    spark.createDataFrame(rows, ", ".join(f"{c} string" for c in SINK_COLUMNS)).write.option(
+        "ignoreNullFields", True
+    ).partitionBy("_sink", "_key").json(str(spark_dir))
+    _publish_json(rows, 0, SINK_KEYS, str(tmp_path / "driver"))
+    for sink, col in SINK_KEYS.items():
+        (spark_key_dir,) = (spark_dir / f"_sink={sink}").iterdir()
+        (driver_key_dir,) = (tmp_path / "driver" / sink).iterdir()
+        assert driver_key_dir.name == col + spark_key_dir.name[len("_key"):]
+        spark_bytes = b"".join(f.read_bytes() for f in sorted(spark_key_dir.glob("part-*")))
+        assert (driver_key_dir / "b0-part-00000.json").read_bytes() == spark_bytes, sink
+    back = spark.read.json(str(tmp_path / "driver" / "dead")).collect()
+    assert [(r.stream, r.payload) for r in back] == [(key, payload)]
+
+
+def test_watch_scrubs_crashed_publish_tmp_files(spark, tmp_path):
+    """A publish that crashed mid-file leaves a hidden .b{batchId}-*.tmp
+    beside its .started marker; the replay scrubs it (and only that
+    batch's) and rewrites the batch exactly once."""
+    work = tmp_path / "work"
+    manifest_dir = work / "checkpoint" / "sink_manifest"
+    manifest_dir.mkdir(parents=True)
+    (manifest_dir / "3.started").write_text("")
+    stale = work / "dead" / "stream=m2.m2.gone" / ".b3-part-00000.json.tmp"
+    other = work / "dead" / "stream=m2.m2.gone" / ".b4-part-00000.json.tmp"
+    stale.parent.mkdir(parents=True)
+    stale.write_text('{"offset":"9-9"}\n{"off')
+    other.write_text("")
+
+    work, _, _ = _sink_static_batch(spark, tmp_path)
+    assert not stale.exists() and other.exists()
+    assert len(_sink_lines(work, "targets")) == 4
+    assert len(_sink_lines(work, "acks")) == 7
+    assert len(_sink_lines(work, "dead")) == 2
 
 
 def test_watch_batch_metrics_ledger(spark, tmp_path):
