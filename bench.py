@@ -155,18 +155,16 @@ mapping:
 @contextmanager
 def _probe_pipeline(spark, prefix: str):
     """Scratch watch pipeline shared by the two latency probes: the
-    latency config, a file-backed fake Redis source and the RocksDB state
-    store. Yields ``(add, start)``: ``add(n, base)`` appends ``n`` compact
-    envelopes to the source stream, ``start(trigger_sec)`` starts the watch
-    query on it. On exit the provider conf is restored and the working dir
-    (config, fake-redis stream, checkpoint/work dirs) is removed."""
+    latency config and a file-backed fake Redis source. Yields
+    ``(add, start)``: ``add(n, base)`` appends ``n`` compact envelopes to
+    the source stream, ``start(trigger_sec)`` starts the watch query on
+    it. On exit the working dir (config, fake-redis stream, checkpoint/work
+    dirs) is removed."""
     import shutil
     import tempfile
 
     from cdc_dedupe_spark.config import load_config
-    from cdc_dedupe_spark.session import temp_sql_confs
     from cdc_dedupe_spark.streaming.pipeline import watch
-    from cdc_dedupe_spark.streaming.run import STATE_STORE_PROVIDERS, _PROVIDER_CONF
     from cdc_dedupe_spark.sources.fake_redis import FakeRedis
 
     tmp = Path(tempfile.mkdtemp(prefix=prefix))
@@ -196,8 +194,7 @@ def _probe_pipeline(spark, prefix: str):
                 },
             ).query
 
-        with temp_sql_confs(spark, {_PROVIDER_CONF: STATE_STORE_PROVIDERS["rocksdb"]}):
-            yield add, start
+        yield add, start
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
 
@@ -205,7 +202,7 @@ def _probe_pipeline(spark, prefix: str):
 def _latency_probe(spark, trigger_sec: int = 5, n_events: int = 20_000) -> dict:
     """BASELINE.md's reference-parity latency row: run the WATCH pipeline
     under a real processing-time trigger (trigger='5 seconds' mirroring
-    the reference's config.yaml:17) with the RocksDB state-store provider,
+    the reference's config.yaml:17),
     and report p50/p99 micro-batch commit latency from the engine's own
     progress events. The source is the file-backed fake Redis client
     pre-loaded with ``n_events`` compact envelopes; the config's
@@ -238,7 +235,6 @@ def _latency_probe(spark, trigger_sec: int = 5, n_events: int = 20_000) -> dict:
 
     return {
         "trigger_sec": trigger_sec,
-        "state_store": "rocksdb",
         # streaming stages carry the query run id as their job group —
         # recorded so the skew-flag sweep can exclude the probe's stages
         # (a paced 5 s trigger is SUPPOSED to have busy single batches)
@@ -268,7 +264,7 @@ def _backlog_drain_probe(
     no batch ever admits more than the cap, the bounded-buffer contrast
     to the reference's unbounded in-flight queue, SURVEY §2A S7), and
     peak_commit_sec (per-batch latency stays near steady-state even
-    with a 10× backlog queued — state-store and sink cost scale with
+    with a 10× backlog queued — plan and sink cost scale with
     the BATCH, not the backlog)."""
     run_ids: list[str] = []
     with _probe_pipeline(spark, "bench-drain-") as (add, start):
@@ -309,7 +305,6 @@ def _backlog_drain_probe(
     rows = [p["numInputRows"] for p in progresses]
     return {
         "trigger_sec": trigger_sec,
-        "state_store": "rocksdb",
         "query_run_ids": run_ids,
         "admission_cap": cap,
         "backlog_events": backlog,

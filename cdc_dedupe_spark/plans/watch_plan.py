@@ -6,20 +6,22 @@ offset, id_column, payload, ack_mode)``: the packed id batches per target,
 the dead letters and the ack ledger. There are no side effects here, so
 the plan is unit-testable in batch mode and reusable by any sink layer.
 
-Shape: one scan, one exchange. Each input row is decoded once, and a
-generator emits every sink row it contributes: its ack row, its dead row
-and one copy per healthy route. One hash exchange then feeds both windows
-(first-wins, packing) and the one aggregate that shapes the sink rows.
+Shape: one scan, one task. The batch is coalesced to one partition, so
+the whole plan is one pipeline with no exchange. Each input row is
+decoded once, and a generator emits every sink row it contributes: its
+ack row, its dead row and one copy per healthy route. Both windows
+(first-wins, packing) and the one aggregate that shapes the sink rows
+read that one partition, which satisfies all of their distributions.
 The plan is SQL text rendered once per config, so building it per batch
 costs a handful of py4j calls.
 
-Trade-off: routed copies are partitioned on their target alone, so the
-dedupe and the packing run one task per target and lose AQE's hot-key
-split; the packing window always had that bound, since its order is per
-target. The sink rows, the ack set among them, are collected to the
-driver (streaming/pipeline.py). They are bounded by the source admission
-cap, and the reference's ack barrier is itself a driver-side in-flight
-map (WatchStream.java:170-231).
+Trade-off: a batch runs on one core, like the reference's one poller
+per table and its one size-or-time window (WatchStream.java:271-293).
+The source admission cap (buffers.source.size) bounds that task, and
+the Redis source already reads the batch in one place. The sink rows,
+the ack set among them, are collected to the driver
+(streaming/pipeline.py), and the reference's ack barrier is itself a
+driver-side in-flight map (WatchStream.java:170-231).
 
 Reference stages covered (SURVEY.md §2A): S2/S3 decode+extract, S6 fan-out,
 S9 first-wins dedupe, S12/S13 packing, S15-S19 ack set.
@@ -181,9 +183,9 @@ def _render(cfg: Config) -> _PlanSQL:
     # S9: first-wins per (target, entity_id) within this micro-batch, keyed
     # by entity id only, like Collectors.toMap (WatchStream.java:272).
     # Routed copies carry a NULL offset, so (_sink, _key, offset) is the
-    # target for them and the source entry for ack and dead rows: every
-    # window and the aggregate below are clustered by the one exchange on
-    # (_key, offset).
+    # target for them and the source entry for ack and dead rows. The
+    # batch is one partition (compile_watch_plan), so every window and the
+    # aggregate below run in the one task without an exchange.
     first_wins = [
         "*",
         f"row_number() OVER (PARTITION BY _sink, _key, offset, entity_id {_ORDER}) AS _first",
@@ -252,10 +254,10 @@ def compile_watch_plan(batch: DataFrame, cfg: Config) -> DataFrame:
     """
     sql = _plan_sql(cfg)
     return (
-        batch.selectExpr(*sql.decode)
+        batch.coalesce(1)
+        .selectExpr(*sql.decode)
         .selectExpr(*sql.parse)
         .selectExpr(*sql.generate)
-        .repartition("_key", "offset")
         .selectExpr(*sql.first_wins)
         .where("_sink <> 'targets' OR _first = 1")
         .selectExpr(*sql.pack)

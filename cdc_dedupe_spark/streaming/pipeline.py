@@ -7,9 +7,9 @@ first-wins dedupe → ≤1000-id JSON batches → XADD + ack barrier → XACK.
 
 Spark mapping: a file-stream or ``redis_stream`` source of envelope rows
 (offset, stream, fields) → one declarative plan per micro-batch inside
-``foreachBatch`` (plans/watch_plan.py): one scan decodes each entry and
-generates its sink rows — fan-out over a literal routing map (S6), its
-dead letter, its ack row — then one exchange feeds the per-target
+``foreachBatch`` (plans/watch_plan.py), run as one task: one scan decodes
+each entry and generates its sink rows — fan-out over a literal routing
+map (S6), its dead letter, its ack row — which feed the per-target
 first-wins dedupe scoped to the micro-batch (S8+S9; the trigger interval
 IS the dedupe window), the arrival-order packing into ≤target.size JSON
 id arrays (S12/S13) and the aggregate that shapes packed batches (S14),
@@ -23,11 +23,12 @@ after the manifest marks the batch done. Every Redis command (the source
 reads, the XADD sink, the acks, the crash scrub and the startup seeds)
 goes through ``sources/redis_stream.py``; this module sends none itself.
 
-Scale: routing is a per-row expression. The dedupe and the packing
-shuffle once, by target, so they run one task per target. The driver
-holds one batch's sink rows (packed records, dead letters, the ack
-set), which the source admission cap bounds (buffers.source.size per
-stream), like the reference's in-flight map. State never accumulates
+Scale: routing is a per-row expression, and the whole batch runs in one
+task with no shuffle, like the reference's one poller per table. The
+source admission cap (buffers.source.size per stream) bounds that task
+and the sink rows the driver holds (packed records, dead letters, the
+ack set), like the reference's in-flight map. An uncapped availableNow
+drain from Redis runs as one such task. State never accumulates
 across batches (window-scoped semantics, like the reference); the
 cross-batch variant is dropDuplicatesWithinWatermark
 (queries/streaming.py). Each sunk batch appends its counts and per-layer
@@ -77,7 +78,6 @@ from pyspark.sql.streaming import StreamingQuery
 
 from ..config import Config
 from ..plans.watch_plan import SINK_COLUMNS, SINK_KEYS, compile_watch_plan, routed_streams
-from ..session import temp_sql_confs
 
 # FIXTURES.md §A: one row per stream entry. Canonical definition lives
 # with the source (sources/redis_stream.py) — the file-stream and Redis
@@ -280,30 +280,11 @@ def _scrub_batch_files(batch_id: int, *dirs: str) -> None:
                         f.unlink()
 
 
-# Confs for a batch's collect. AQE's empty-relation rule would cut the
-# scan-side Observation out of the plan of a batch whose scan emits no sink
-# row (an empty or all-unroutable batch), and it would then never report.
-_WRITE_CONFS = {
-    "spark.sql.adaptive.optimizer.excludedRules":
-        "org.apache.spark.sql.execution.adaptive.AQEPropagateEmptyRelation",
-}
-
-
 def _observe(df: DataFrame, **metrics: Column) -> tuple[DataFrame, Observation]:
     """Attach ``metrics`` to ``df``'s next action: a batch-mode
     Observation rides on that action, so it adds no job."""
     obs = Observation()
     return df.observe(obs, *(c.alias(name) for name, c in metrics.items())), obs
-
-
-def _ack(cfg: Config, ack_options: dict[str, str], rows: list) -> None:
-    """S15-S20 from the driver: XACK against the consumer group
-    (WatchStream.java:196-205 parity: PEL interop with other group
-    consumers), then acknowledge=delete removes the acked entries
-    (WatchStream.java:207-220; the reference's tests assert the source is
-    emptied, WatchTests.java:151-154). O(streams · chunks) round trips
-    (ack_entries); XACK/XDEL are idempotent, so a replay re-acks for free."""
-    ack_entries(ack_options, cfg.source.group, cfg.source.acknowledge == "delete", rows)
 
 
 def _process_batch(
@@ -328,7 +309,8 @@ def _process_batch(
         # same plan's ack rows as on the first attempt.
         if ack_wanted:
             acks = compile_watch_plan(batch, cfg).where("_sink = 'acks'")
-            _ack(cfg, ack_options, acks.selectExpr("_key AS stream", "offset").collect())
+            rows = acks.selectExpr("_key AS stream", "offset").collect()
+            ack_entries(ack_options, cfg.source.group, cfg.source.acknowledge == "delete", rows)
         return
     work = Path(work_dir)
     if manifest.started(batch_id):
@@ -356,8 +338,7 @@ def _process_batch(
     # XACK observability parity), tagged in one relation.
     tagged = compile_watch_plan(scanned, cfg)
     t1 = time.perf_counter()
-    with temp_sql_confs(batch.sparkSession, _WRITE_CONFS):
-        rows = tagged.collect()
+    rows = tagged.collect()
     scan = scan_obs.get
     packed = [r for r in rows if r[0] == "targets"]
     ack_set = [{"stream": r[1], "offset": r[3]} for r in rows if r[0] == "acks"]
@@ -389,8 +370,14 @@ def _process_batch(
     # not duplication.
     manifest.mark(batch_id)
     t3 = time.perf_counter()
+    # S15-S20 from the driver: XACK against the consumer group
+    # (WatchStream.java:196-205 parity: PEL interop with other group
+    # consumers), then acknowledge=delete removes the acked entries
+    # (WatchStream.java:207-220; the reference's tests assert the source is
+    # emptied, WatchTests.java:151-154). XACK/XDEL are idempotent, so a
+    # replay re-acks for free.
     if ack_wanted and ack_set:
-        _ack(cfg, ack_options, ack_set)
+        ack_entries(ack_options, cfg.source.group, cfg.source.acknowledge == "delete", ack_set)
     # Per-batch metrics ledger: the counts (the collected rows and the
     # scan's Observation, no extra job) and where the batch's time went.
     t4 = time.perf_counter()
@@ -466,33 +453,21 @@ def watch(
                     ensure_group(client, s, cfg.source.group)
                 if redis_sink and seed:
                     seed_streams(client, _target_streams(cfg))
-        reader = spark.readStream.format("redis_stream").option("streams", ",".join(source_streams))
-        reader_opts = dict(redis_options)
         # The reference's poll batch cap (buffers.source.size,
-        # config.yaml:13-15) becomes the source's per-batch admission cap;
-        # an explicit reader option still overrides the config. NOT set
-        # under availableNow: the run is one batch whose end is ONE
-        # read(start), so a capped read would truncate the run instead of
-        # pacing it. A user-supplied cap is stripped (loudly) for the same
-        # reason.
-        if available_now and "max_entries_per_batch" in reader_opts:
-            warnings.warn(
-                "max_entries_per_batch is ignored under availableNow: the run is "
-                "one batch whose end is one read, and a capped read would silently "
-                "truncate it instead of pacing it "
-                "(sources/redis_stream.py module docstring)",
-                stacklevel=2,
-            )
-            reader_opts.pop("max_entries_per_batch")
-        if (
-            not available_now
-            and "max_entries_per_batch" not in reader_opts
-            and cfg.buffers.source.size > 0
-        ):
-            reader = reader.option("max_entries_per_batch", str(cfg.buffers.source.size))
-        for k, v in reader_opts.items():
-            reader = reader.option(k, v)
-        stream = reader.load()
+        # config.yaml:13-15) is the source's per-batch admission cap, and
+        # the config is its only source: a cap among the user's options is
+        # dropped. NOT set under availableNow: the run is one batch whose
+        # end is ONE read(start), so a capped read would truncate the run
+        # instead of pacing it.
+        reader_opts = {k: v for k, v in redis_options.items() if k != "max_entries_per_batch"}
+        if not available_now and cfg.buffers.source.size > 0:
+            reader_opts["max_entries_per_batch"] = str(cfg.buffers.source.size)
+        stream = (
+            spark.readStream.format("redis_stream")
+            .option("streams", ",".join(source_streams))
+            .options(**reader_opts)
+            .load()
+        )
         ack_options = dict(redis_options)
         if redis_sink:
             sink_options = dict(redis_options)

@@ -357,21 +357,22 @@ def test_watch_drain_then_capped_run_delivers_once(spark, tmp_path):
     """An availableNow drain, then a capped processing-time run on the same
     checkpoint: every entry is delivered exactly once, and the offset
     log's ends strictly increase — the capped run starts at the drain's
-    end and ends each batch at the cap-th id. A user-supplied cap in drain
-    mode is stripped with a warning (a capped read would silently truncate
-    the drain)."""
+    end and ends each batch at the config's cap-th id. The config is the
+    cap's only source: a cap among the Redis options neither truncates
+    the drain nor changes the capped run's batches."""
     import time
 
-    cfg = load_config(_write_config(tmp_path, "simple"))
+    config = _write_config(tmp_path, "simple")
+    config.write_text(config.read_text().replace("source: {size: 1000", "source: {size: 2"))
+    cfg = load_config(config)
     src, tgt = "m2.m2.catalog_category_entity", "target.catalog_product_flat"
-    fake, opts, add = _redis_source(tmp_path, max_entries_per_batch="2")
+    fake, opts, add = _redis_source(tmp_path, max_entries_per_batch="1")
     work = tmp_path / "work"
     add([1, 2, 3, 4])
 
-    with pytest.warns(UserWarning, match="max_entries_per_batch"):
-        h = watch(spark, cfg, None, str(work), redis_options=opts, redis_sink=True)
+    h = watch(spark, cfg, None, str(work), redis_options=opts, redis_sink=True)
     h.query.awaitTermination()
-    # the drain consumed everything (the stripped cap did not truncate it)
+    # the drain consumed everything in one batch: no cap truncated it
     assert _seq_sorted(fake.acked(src, "cdc")) == [f"1-{i}" for i in range(1, 5)]
     assert _offset_ends(work, src) == ["1-4"]
 
@@ -861,9 +862,10 @@ STATIC_EVENTS = [
 ]
 
 
-def _sink_static_batch(spark, tmp_path, batch_ids=(3,), events=STATIC_EVENTS):
-    """Sink ``events`` once per batch id into ``tmp_path/work`` (source
-    acks go to a FakeRedis); returns (work dir, fake, jobs per batch id)."""
+def _sink_static_batch(spark, tmp_path, batch_ids=(3,), events=STATIC_EVENTS, partitions=None):
+    """Sink ``events`` (repartitioned into ``partitions`` when given) once
+    per batch id into ``tmp_path/work`` (source acks go to a FakeRedis);
+    returns (work dir, fake, jobs per batch id)."""
     from cdc_dedupe_spark.sources.fake_redis import FakeRedis
 
     from cdc_dedupe_spark.streaming.pipeline import (
@@ -884,6 +886,8 @@ def _sink_static_batch(spark, tmp_path, batch_ids=(3,), events=STATIC_EVENTS):
     batch = spark.createDataFrame(
         [(e["offset"], e["stream"], e["fields"]) for e in events], ENVELOPE_ROW_SCHEMA
     )
+    if partitions is not None:
+        batch = batch.repartition(partitions)
     sc = spark.sparkContext
     jobs = {}
     for bid in batch_ids:
@@ -911,18 +915,16 @@ def _sink_lines(work: Path, kind: str) -> list[tuple[str, dict]]:
 
 
 def test_watch_batch_one_write_no_broadcast(spark, tmp_path, capsys):
-    """A warm micro-batch is one scan, one exchange and one write: at most
-    2 Spark jobs (the shuffle-map stage and the write; no emptiness probe,
-    no per-sink writes, no executor ack pass). The sink relation holds
-    exactly one exchange and no broadcast (routing is a literal map
-    expression), and the XACKed offsets are the published ack ledger's."""
-    import re
-
+    """A warm micro-batch is one scan in one task: at most 1 Spark job (the
+    collect; no shuffle-map stage, no emptiness probe, no per-sink writes,
+    no executor ack pass). The sink relation holds no exchange at all, no
+    broadcast either (routing is a literal map expression), and the
+    XACKed offsets are the published ack ledger's."""
     from cdc_dedupe_spark.plans.watch_plan import compile_watch_plan
     from cdc_dedupe_spark.streaming.pipeline import ENVELOPE_ROW_SCHEMA
 
     work, fake, jobs = _sink_static_batch(spark, tmp_path, batch_ids=(0, 1))
-    assert jobs[1] <= 2, jobs
+    assert jobs[1] <= 1, jobs
     acked = fake.acked("m2.m2.catalog_category_entity", "cdc")
     assert sorted(set(acked)) == [f"100{i}-0" for i in range(7)]
     assert set(acked) == {row["offset"] for _, row in _sink_lines(work, "acks")}
@@ -934,8 +936,23 @@ def test_watch_batch_one_write_no_broadcast(spark, tmp_path, capsys):
     capsys.readouterr()
     compile_watch_plan(batch, cfg).explain("formatted")
     plan = capsys.readouterr().out
-    assert "Exchange" in plan and "BroadcastExchange" not in plan
-    assert re.findall(r"^\(\d+\) (\w*Exchange)", plan, re.M) == ["Exchange"], plan
+    assert "Exchange" not in plan, plan
+
+
+def test_watch_sink_files_independent_of_input_partitioning(spark, tmp_path):
+    """The batch is coalesced into one task whatever its partitioning, and
+    the windows' total order fixes every line: a batch spread over 3
+    partitions publishes the same lines per file as one partition."""
+    files = {}
+    for partitions in (1, 3):
+        (tmp_path / str(partitions)).mkdir()
+        work, _, _ = _sink_static_batch(spark, tmp_path / str(partitions), partitions=partitions)
+        files[partitions] = {
+            str(f.relative_to(work)): f.read_text().splitlines()
+            for kind in ("targets", "acks", "dead")
+            for f in sorted((work / kind).rglob("*.json"))
+        }
+    assert files[3] == files[1], files
 
 
 def test_watch_sink_format_per_kind(spark, tmp_path):
