@@ -6,22 +6,21 @@ offset, id_column, payload, ack_mode)``: the packed id batches per target,
 the dead letters and the ack ledger. There are no side effects here, so
 the plan is unit-testable in batch mode and reusable by any sink layer.
 
-Shape: one scan, one task. The batch is coalesced to one partition, so
-the whole plan is one pipeline with no exchange. Each input row is
-decoded once, and a generator emits every sink row it contributes: its
-ack row, its dead row and one copy per healthy route. Both windows
-(first-wins, packing) and the one aggregate that shapes the sink rows
-read that one partition, which satisfies all of their distributions.
-The plan is SQL text rendered once per config, so building it per batch
-costs a handful of py4j calls.
+Shape: one scan. Each input row is decoded once, and a generator emits
+every sink row it contributes: its ack row, its dead row and one copy
+per healthy route. Both windows (first-wins, packing) and the one
+aggregate that shapes the sink rows read one partition, or one hash
+exchange on ``(_key, offset)``. The plan is SQL text rendered once per
+config, so building it per batch costs a handful of py4j calls.
 
-Trade-off: a batch runs on one core, like the reference's one poller
-per table and its one size-or-time window (WatchStream.java:271-293).
-The source admission cap (buffers.source.size) bounds that task, and
-the Redis source already reads the batch in one place. The sink rows,
-the ack set among them, are collected to the driver
-(streaming/pipeline.py), and the reference's ack barrier is itself a
-driver-side in-flight map (WatchStream.java:170-231).
+Trade-off: a Redis batch arrives as one partition, so it is coalesced
+and the plan runs as one task, like the reference's one poller per table
+(WatchStream.java:271-293). The admission cap (buffers.source.size)
+bounds that task in a continuous run; an availableNow drain is uncapped.
+A file-source batch, one split per file and uncapped, keeps the exchange
+(``parallel``). The sink rows, the ack set among them, are collected to
+the driver (streaming/pipeline.py), like the reference's driver-side
+in-flight map (WatchStream.java:170-231).
 
 Reference stages covered (SURVEY.md §2A): S2/S3 decode+extract, S6 fan-out,
 S9 first-wins dedupe, S12/S13 packing, S15-S19 ack set.
@@ -183,9 +182,9 @@ def _render(cfg: Config) -> _PlanSQL:
     # S9: first-wins per (target, entity_id) within this micro-batch, keyed
     # by entity id only, like Collectors.toMap (WatchStream.java:272).
     # Routed copies carry a NULL offset, so (_sink, _key, offset) is the
-    # target for them and the source entry for ack and dead rows. The
-    # batch is one partition (compile_watch_plan), so every window and the
-    # aggregate below run in the one task without an exchange.
+    # target for them and the source entry for ack and dead rows: every
+    # window and the aggregate below read one partition, or the one
+    # exchange on (_key, offset) under parallel (compile_watch_plan).
     first_wins = [
         "*",
         f"row_number() OVER (PARTITION BY _sink, _key, offset, entity_id {_ORDER}) AS _first",
@@ -230,9 +229,11 @@ def _plan_sql(cfg: Config) -> _PlanSQL:
     return _rendered[key]
 
 
-def compile_watch_plan(batch: DataFrame, cfg: Config) -> DataFrame:
+def compile_watch_plan(batch: DataFrame, cfg: Config, parallel: bool = False) -> DataFrame:
     """Compile one micro-batch into the tagged sink relation
-    ``(_sink, _key, ids, offset, id_column, payload, ack_mode)``.
+    ``(_sink, _key, ids, offset, id_column, payload, ack_mode)``: as one
+    task over the coalesced batch, or, with ``parallel``, over the
+    batch's own partitions and one hash exchange on ``(_key, offset)``.
 
     ``_sink`` is the kind (SINK_KEYS), ``_key`` its target or source
     stream, and the (all string) fields a kind does not carry are NULL:
@@ -253,11 +254,14 @@ def compile_watch_plan(batch: DataFrame, cfg: Config) -> DataFrame:
     still acked.
     """
     sql = _plan_sql(cfg)
-    return (
-        batch.coalesce(1)
+    rows = (
+        (batch if parallel else batch.coalesce(1))
         .selectExpr(*sql.decode)
         .selectExpr(*sql.parse)
         .selectExpr(*sql.generate)
+    )
+    return (
+        (rows.repartition("_key", "offset") if parallel else rows)
         .selectExpr(*sql.first_wins)
         .where("_sink <> 'targets' OR _first = 1")
         .selectExpr(*sql.pack)

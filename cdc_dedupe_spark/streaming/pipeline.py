@@ -7,9 +7,9 @@ first-wins dedupe → ≤1000-id JSON batches → XADD + ack barrier → XACK.
 
 Spark mapping: a file-stream or ``redis_stream`` source of envelope rows
 (offset, stream, fields) → one declarative plan per micro-batch inside
-``foreachBatch`` (plans/watch_plan.py), run as one task: one scan decodes
-each entry and generates its sink rows — fan-out over a literal routing
-map (S6), its dead letter, its ack row — which feed the per-target
+``foreachBatch`` (plans/watch_plan.py): one scan decodes each entry and
+generates its sink rows — fan-out over a literal routing map (S6), its
+dead letter, its ack row — which feed the per-target
 first-wins dedupe scoped to the micro-batch (S8+S9; the trigger interval
 IS the dedupe window), the arrival-order packing into ≤target.size JSON
 id arrays (S12/S13) and the aggregate that shapes packed batches (S14),
@@ -23,13 +23,14 @@ after the manifest marks the batch done. Every Redis command (the source
 reads, the XADD sink, the acks, the crash scrub and the startup seeds)
 goes through ``sources/redis_stream.py``; this module sends none itself.
 
-Scale: routing is a per-row expression, and the whole batch runs in one
-task with no shuffle, like the reference's one poller per table. The
-source admission cap (buffers.source.size per stream) bounds that task
-and the sink rows the driver holds (packed records, dead letters, the
-ack set), like the reference's in-flight map. An uncapped availableNow
-drain from Redis runs as one such task. State never accumulates
-across batches (window-scoped semantics, like the reference); the
+Scale: routing is a per-row expression. A Redis batch runs its plan in
+one task, like the reference's one poller per table; in a continuous
+run the admission cap (buffers.source.size per stream) bounds it and
+the sink rows the driver holds, like the reference's in-flight map. An
+availableNow drain from Redis is uncapped and is one such task. An
+uncapped file-source batch shuffles once on ``(_key, offset)``, so its
+scan runs a task per split and its windows a task per target. State
+never accumulates across batches (window-scoped semantics); the
 cross-batch variant is dropDuplicatesWithinWatermark
 (queries/streaming.py). Each sunk batch appends its counts and per-layer
 times to ``<work_dir>/batch_metrics.jsonl``.
@@ -78,6 +79,7 @@ from pyspark.sql.streaming import StreamingQuery
 
 from ..config import Config
 from ..plans.watch_plan import SINK_COLUMNS, SINK_KEYS, compile_watch_plan, routed_streams
+from ..session import temp_sql_confs
 
 # FIXTURES.md §A: one row per stream entry. Canonical definition lives
 # with the source (sources/redis_stream.py) — the file-stream and Redis
@@ -256,10 +258,9 @@ def _publish_json(
     partitioned JSON writer would, so Spark reads the sinks back as
     before. The batch-deterministic name lets a replay of the same batch
     identify (and scrub) a crashed attempt's files. The driver writes the
-    files itself: the rows are one batch's, bounded like its ack set by
-    the source admission cap, and no Hadoop committer runs. A cluster
-    deployment swaps this for a transactional table append (module
-    docstring)."""
+    files itself: the rows are one batch's, like its ack set, and no
+    Hadoop committer runs. A cluster deployment swaps this for a
+    transactional table append (module docstring)."""
     files: dict[tuple[str, str], list[str]] = {}
     for row in rows:
         files.setdefault((row[0], row[1]), []).append(_json_line(row))
@@ -280,6 +281,16 @@ def _scrub_batch_files(batch_id: int, *dirs: str) -> None:
                         f.unlink()
 
 
+# Confs for the collect of a plan with an exchange (parallel). AQE's
+# empty-relation rule would cut the scan-side Observation out of the plan
+# of a batch whose scan emits no sink row (an empty or all-unroutable
+# batch), and it would then never report. The one-task plan needs none.
+_EXCHANGE_CONFS = {
+    "spark.sql.adaptive.optimizer.excludedRules":
+        "org.apache.spark.sql.execution.adaptive.AQEPropagateEmptyRelation",
+}
+
+
 def _observe(df: DataFrame, **metrics: Column) -> tuple[DataFrame, Observation]:
     """Attach ``metrics`` to ``df``'s next action: a batch-mode
     Observation rides on that action, so it adds no job."""
@@ -295,6 +306,7 @@ def _process_batch(
     sink_options: dict[str, str] | None,
     manifest: SinkManifest,
     ack_options: dict[str, str] | None,
+    parallel: bool = False,
 ) -> None:
     # Source-side acks (XACK / acknowledge=delete) need the SOURCE's Redis
     # connection, not the sink's: a Redis-source run with JSON file sinks
@@ -308,7 +320,7 @@ def _process_batch(
         # ran; only the source acks may be unfinished. They come from the
         # same plan's ack rows as on the first attempt.
         if ack_wanted:
-            acks = compile_watch_plan(batch, cfg).where("_sink = 'acks'")
+            acks = compile_watch_plan(batch, cfg, parallel).where("_sink = 'acks'")
             rows = acks.selectExpr("_key AS stream", "offset").collect()
             ack_entries(ack_options, cfg.source.group, cfg.source.acknowledge == "delete", rows)
         return
@@ -336,9 +348,10 @@ def _process_batch(
     # the sinks: packed (S14), dead letters and the ack ledger (S15-S19:
     # the checkpoint is the real at-least-once contract, the ledger is
     # XACK observability parity), tagged in one relation.
-    tagged = compile_watch_plan(scanned, cfg)
+    tagged = compile_watch_plan(scanned, cfg, parallel)
     t1 = time.perf_counter()
-    rows = tagged.collect()
+    with temp_sql_confs(batch.sparkSession, _EXCHANGE_CONFS if parallel else {}):
+        rows = tagged.collect()
     scan = scan_obs.get
     packed = [r for r in rows if r[0] == "targets"]
     ack_set = [{"stream": r[1], "offset": r[3]} for r in rows if r[0] == "acks"]
@@ -370,12 +383,10 @@ def _process_batch(
     # not duplication.
     manifest.mark(batch_id)
     t3 = time.perf_counter()
-    # S15-S20 from the driver: XACK against the consumer group
-    # (WatchStream.java:196-205 parity: PEL interop with other group
-    # consumers), then acknowledge=delete removes the acked entries
-    # (WatchStream.java:207-220; the reference's tests assert the source is
-    # emptied, WatchTests.java:151-154). XACK/XDEL are idempotent, so a
-    # replay re-acks for free.
+    # S15-S20 from the driver: XACK in the consumer group (PEL interop,
+    # WatchStream.java:196-205), then acknowledge=delete removes the
+    # entries (WatchStream.java:207-220, WatchTests.java:151-154).
+    # XACK/XDEL are idempotent, so a replay re-acks for free.
     if ack_wanted and ack_set:
         ack_entries(ack_options, cfg.source.group, cfg.source.acknowledge == "delete", ack_set)
     # Per-batch metrics ledger: the counts (the collected rows and the
@@ -440,6 +451,13 @@ def watch(
     seed = _needs_seed(work)
     sink_options = ack_options = None
     if redis_options is not None:
+        # The reference's poll batch cap (buffers.source.size,
+        # config.yaml:13-15) is the source's per-batch admission cap, and
+        # the config is its only source. It is NOT set under availableNow:
+        # the run is one batch whose end is ONE read(start), so a capped
+        # read would truncate the run instead of pacing it.
+        if "max_entries_per_batch" in redis_options:
+            raise ValueError("set the admission cap as buffers.source.size in the config")
         spark.dataSource.register(RedisStreamDataSource)
         source_streams = [f"{cfg.source.prefix}{t}" for t in cfg.mapping]
         # One startup client. It bootstraps the consumer group on every
@@ -453,13 +471,7 @@ def watch(
                     ensure_group(client, s, cfg.source.group)
                 if redis_sink and seed:
                     seed_streams(client, _target_streams(cfg))
-        # The reference's poll batch cap (buffers.source.size,
-        # config.yaml:13-15) is the source's per-batch admission cap, and
-        # the config is its only source: a cap among the user's options is
-        # dropped. NOT set under availableNow: the run is one batch whose
-        # end is ONE read(start), so a capped read would truncate the run
-        # instead of pacing it.
-        reader_opts = {k: v for k, v in redis_options.items() if k != "max_entries_per_batch"}
+        reader_opts = dict(redis_options)
         if not available_now and cfg.buffers.source.size > 0:
             reader_opts["max_entries_per_batch"] = str(cfg.buffers.source.size)
         stream = (
@@ -483,8 +495,13 @@ def watch(
         _mark_seeded(work)
 
     manifest = SinkManifest(work / "checkpoint" / "sink_manifest")
+    # A file-source batch has a split per file and no admission cap, so
+    # its plan runs in parallel (plans/watch_plan.py).
+    parallel = redis_options is None
     writer = stream.writeStream.foreachBatch(
-        lambda b, bid: _process_batch(b, bid, cfg, work_dir, sink_options, manifest, ack_options)
+        lambda b, bid: _process_batch(
+            b, bid, cfg, work_dir, sink_options, manifest, ack_options, parallel
+        )
     ).option("checkpointLocation", checkpoint)
     if available_now:
         writer = writer.trigger(availableNow=True)

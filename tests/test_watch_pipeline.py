@@ -358,18 +358,21 @@ def test_watch_drain_then_capped_run_delivers_once(spark, tmp_path):
     checkpoint: every entry is delivered exactly once, and the offset
     log's ends strictly increase — the capped run starts at the drain's
     end and ends each batch at the config's cap-th id. The config is the
-    cap's only source: a cap among the Redis options neither truncates
-    the drain nor changes the capped run's batches."""
+    cap's only source: a cap among the Redis options is rejected before
+    the drain starts, so it can never truncate it."""
     import time
 
     config = _write_config(tmp_path, "simple")
     config.write_text(config.read_text().replace("source: {size: 1000", "source: {size: 2"))
     cfg = load_config(config)
     src, tgt = "m2.m2.catalog_category_entity", "target.catalog_product_flat"
-    fake, opts, add = _redis_source(tmp_path, max_entries_per_batch="1")
+    fake, opts, add = _redis_source(tmp_path)
     work = tmp_path / "work"
     add([1, 2, 3, 4])
 
+    with pytest.raises(ValueError, match="buffers.source.size"):
+        watch(spark, cfg, None, str(work), redis_options=opts | {"max_entries_per_batch": "1"})
+    assert not work.exists() and fake.acked(src, "cdc") == []
     h = watch(spark, cfg, None, str(work), redis_options=opts, redis_sink=True)
     h.query.awaitTermination()
     # the drain consumed everything in one batch: no cap truncated it
@@ -862,9 +865,12 @@ STATIC_EVENTS = [
 ]
 
 
-def _sink_static_batch(spark, tmp_path, batch_ids=(3,), events=STATIC_EVENTS, partitions=None):
+def _sink_static_batch(
+    spark, tmp_path, batch_ids=(3,), events=STATIC_EVENTS, partitions=None, parallel=False
+):
     """Sink ``events`` (repartitioned into ``partitions`` when given) once
-    per batch id into ``tmp_path/work`` (source acks go to a FakeRedis);
+    per batch id into ``tmp_path/work`` (source acks go to a FakeRedis),
+    with the one-task plan or, under ``parallel``, the file source's plan;
     returns (work dir, fake, jobs per batch id)."""
     from cdc_dedupe_spark.sources.fake_redis import FakeRedis
 
@@ -894,7 +900,7 @@ def _sink_static_batch(spark, tmp_path, batch_ids=(3,), events=STATIC_EVENTS, pa
         group = f"static-sink-{id(tmp_path)}-{bid}"
         sc.setJobGroup(group, group)
         try:
-            _process_batch(batch, bid, cfg, str(work), None, manifest, ack_options)
+            _process_batch(batch, bid, cfg, str(work), None, manifest, ack_options, parallel)
         finally:
             sc.setLocalProperty("spark.jobGroup.id", None)
             sc.setLocalProperty("spark.job.description", None)
@@ -919,7 +925,10 @@ def test_watch_batch_one_write_no_broadcast(spark, tmp_path, capsys):
     collect; no shuffle-map stage, no emptiness probe, no per-sink writes,
     no executor ack pass). The sink relation holds no exchange at all, no
     broadcast either (routing is a literal map expression), and the
-    XACKed offsets are the published ack ledger's."""
+    XACKed offsets are the published ack ledger's. The file source's
+    parallel plan holds exactly one exchange."""
+    import re
+
     from cdc_dedupe_spark.plans.watch_plan import compile_watch_plan
     from cdc_dedupe_spark.streaming.pipeline import ENVELOPE_ROW_SCHEMA
 
@@ -937,22 +946,30 @@ def test_watch_batch_one_write_no_broadcast(spark, tmp_path, capsys):
     compile_watch_plan(batch, cfg).explain("formatted")
     plan = capsys.readouterr().out
     assert "Exchange" not in plan, plan
+    compile_watch_plan(batch, cfg, parallel=True).explain("formatted")
+    plan = capsys.readouterr().out
+    assert re.findall(r"^\(\d+\) (\w*Exchange)", plan, re.M) == ["Exchange"], plan
 
 
 def test_watch_sink_files_independent_of_input_partitioning(spark, tmp_path):
-    """The batch is coalesced into one task whatever its partitioning, and
-    the windows' total order fixes every line: a batch spread over 3
-    partitions publishes the same lines per file as one partition."""
+    """The windows' total order fixes every line, whatever the batch's
+    partitioning and the plan's shape: a batch spread over 3 partitions
+    publishes the same lines per file as one partition, in one task or
+    over the parallel plan's exchange."""
     files = {}
-    for partitions in (1, 3):
-        (tmp_path / str(partitions)).mkdir()
-        work, _, _ = _sink_static_batch(spark, tmp_path / str(partitions), partitions=partitions)
-        files[partitions] = {
+    for partitions, parallel in ((1, False), (3, False), (3, True)):
+        name = f"{partitions}-{parallel}"
+        (tmp_path / name).mkdir()
+        work, _, _ = _sink_static_batch(
+            spark, tmp_path / name, partitions=partitions, parallel=parallel
+        )
+        files[name] = {
             str(f.relative_to(work)): f.read_text().splitlines()
             for kind in ("targets", "acks", "dead")
             for f in sorted((work / kind).rglob("*.json"))
         }
-    assert files[3] == files[1], files
+    assert files["3-False"] == files["1-False"], files
+    assert files["3-True"] == files["1-False"], files
 
 
 def test_watch_sink_format_per_kind(spark, tmp_path):
@@ -1071,6 +1088,20 @@ def test_watch_batch_metrics_ledger_without_sink_rows(spark, tmp_path):
         "input": 3, "unroutable": 3, "acked": 0, "dead": 0, "packed_records": 0
     }
     assert not [op for op in fake.round_trips() if op in ("xack", "xdel")]
+
+
+def test_watch_batch_metrics_ledger_without_sink_rows_parallel(spark, tmp_path):
+    """Under the file source's parallel plan, a batch of unroutable entries
+    leaves the exchange empty; AQE must not cut the scan-side Observation
+    away with it, so the counts still reach the ledger."""
+    unroutable = [
+        {"offset": f"100{i}-0", "stream": "m2.m2.other", "fields": {"key": "{}"}} for i in range(3)
+    ]
+    work, _, _ = _sink_static_batch(spark, tmp_path, events=unroutable, parallel=True)
+    (line,) = [json.loads(s) for s in (work / "batch_metrics.jsonl").read_text().splitlines()]
+    assert {k: line[k] for k in ("input", "unroutable", "acked", "packed_records")} == {
+        "input": 3, "unroutable": 3, "acked": 0, "packed_records": 0
+    }
 
 
 def test_watch_duplicate_entries_ack_and_dead_once(spark, tmp_path):
