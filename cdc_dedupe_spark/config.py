@@ -90,7 +90,7 @@ def load_config(path: str | Path) -> Config:
         # Coerce to the conservative mode (nothing is ever deleted on a
         # typo) but say so loudly — silently "working" while the operator
         # believes delete-mode is pruning the source would let the source
-        # streams grow unbounded (round-8 review; format below warns too).
+        # streams grow unbounded (format below warns too).
         warnings.warn(
             f"source.acknowledge={ack!r} is not one of ('simple', 'delete'); "
             "falling back to 'simple' — source entries will NOT be deleted",
@@ -102,9 +102,8 @@ def load_config(path: str | Path) -> Config:
         # The knob is declarative only — decode detects per record, like the
         # reference (declared config.yaml:3, ignored RedisSource.java:58) —
         # but an unknown value is certainly a typo, so say so instead of
-        # silently carrying it (ADVICE r3: warn when the knob disagrees
-        # with reality; per-record disagreement warns in envelope_payload's
-        # caller, streaming/pipeline.py).
+        # silently carrying it (per-record disagreement with the knob warns
+        # in streaming/pipeline.py).
         warnings.warn(
             f"source.format={fmt!r} is not one of ('compact', 'extended'); "
             "record format is detected per record regardless",
@@ -127,7 +126,7 @@ def load_config(path: str | Path) -> Config:
         mapping={
             # A scalar target is the obvious shorthand for a one-target
             # list; without the guard a string char-splits into one-letter
-            # targets (round-8 review).
+            # targets.
             str(tbl): {
                 str(col): [str(t) for t in ([tgts] if isinstance(tgts, str) else tgts)]
                 for col, tgts in cols.items()
@@ -152,7 +151,7 @@ def _validate(cfg: Config) -> None:
     sp, tp = cfg.source.prefix, cfg.target.prefix
     # No `if sp and tp` guard: empty prefixes (the defaults) are exactly
     # when a target name can equal a source table name outright — the
-    # feedback loop this validator exists to block (round-8 review).
+    # feedback loop this validator exists to block.
     for tbl in cfg.mapping:
         for tgt in cfg.targets():
             if f"{tp}{tgt}" == f"{sp}{tbl}":

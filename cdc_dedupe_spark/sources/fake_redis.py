@@ -225,23 +225,3 @@ def make_counting_client(options: dict) -> FakeRedis:
     client.close = lambda: note("close")  # type: ignore[attr-defined]
     return client
 
-
-def make_xdel_crash_client(options: dict) -> "FakeRedis":
-    """Client whose FIRST xdel performs the deletion and then raises —
-    simulating a driver crash mid-acknowledge=delete (some source entries
-    already gone, the batch not yet checkpoint-committed). One-shot: a
-    marker file records that the crash fired, so the restarted pipeline's
-    clients (same factory) behave normally."""
-    client = make_client(options)
-    state = Path(options["crash_state"])
-    orig_xdel = client.xdel
-
-    def xdel(stream: str, *record_ids: str) -> int:
-        res = orig_xdel(stream, *record_ids)
-        if not state.exists():
-            state.write_text("fired")
-            raise RuntimeError("injected crash right after XDEL")
-        return res
-
-    client.xdel = xdel  # type: ignore[method-assign]
-    return client

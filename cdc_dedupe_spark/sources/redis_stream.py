@@ -249,17 +249,17 @@ def xadd_entries(
 
 
 def ack_entries(
-    options: dict[str, str], group: str | None, delete: bool, rows: Iterable[Any]
+    options: dict[str, str], group: str | None, delete: bool, pairs: Iterable[tuple[str, str]]
 ) -> None:
     """The watch pipeline's source ack for a batch's ``(stream, offset)``
-    rows: XACK against ``group`` (WatchStream.java:196-205), then XDEL
+    pairs: XACK against ``group`` (WatchStream.java:196-205), then XDEL
     under ``delete`` (WatchStream.java:207-220). Ids are grouped per
     stream and sent PIPELINE_CHUNK per command, so round trips are
-    O(streams · chunks), never O(rows). Both commands are idempotent, so
-    a replay re-acks for free. No rows open no client."""
+    O(streams · chunks), never O(pairs). Both commands are idempotent, so
+    a replay re-acks for free. No pairs open no client."""
     by_stream: dict[str, list[str]] = {}
-    for row in rows:
-        by_stream.setdefault(row["stream"], []).append(row["offset"])
+    for stream, offset in pairs:
+        by_stream.setdefault(stream, []).append(offset)
     if not by_stream:
         return
     with connect(options) as client:

@@ -320,9 +320,9 @@ def _process_batch(
         # ran; only the source acks may be unfinished. They come from the
         # same plan's ack rows as on the first attempt.
         if ack_wanted:
-            acks = compile_watch_plan(batch, cfg, parallel).where("_sink = 'acks'")
-            rows = acks.selectExpr("_key AS stream", "offset").collect()
-            ack_entries(ack_options, cfg.source.group, cfg.source.acknowledge == "delete", rows)
+            acks = compile_watch_plan(batch, cfg, parallel).where("_sink = 'acks'").collect()
+            pairs = [(r[1], r[3]) for r in acks]
+            ack_entries(ack_options, cfg.source.group, cfg.source.acknowledge == "delete", pairs)
         return
     work = Path(work_dir)
     if manifest.started(batch_id):
@@ -354,7 +354,7 @@ def _process_batch(
         rows = tagged.collect()
     scan = scan_obs.get
     packed = [r for r in rows if r[0] == "targets"]
-    ack_set = [{"stream": r[1], "offset": r[3]} for r in rows if r[0] == "acks"]
+    ack_set = [(r[1], r[3]) for r in rows if r[0] == "acks"]
     # Dead letters land BEFORE any source ack: malformed records must have
     # a surviving copy before acknowledge=delete can remove them from the
     # source (the reference instead wedges the stream on the first

@@ -183,16 +183,16 @@ def test_ack_entries_chunks_per_stream(tmp_path):
     = 3 XACKs, plus 3 XDELs under delete: one command per chunk, not per
     row, and every offset acked and deleted exactly once."""
     fake = _fill(tmp_path, "s", range(2500))
-    rows = [{"stream": "s", "offset": rid} for rid, _ in fake.xrange("s")]
-    ack_entries(_opts(tmp_path, "s"), "cdc", True, iter(rows))
+    pairs = [("s", rid) for rid, _ in fake.xrange("s")]
+    ack_entries(_opts(tmp_path, "s"), "cdc", True, iter(pairs))
     rts = fake.round_trips()
     assert rts.count("xack") == 3 and rts.count("xdel") == 3, rts
-    assert sorted(fake.acked("s", "cdc")) == sorted(r["offset"] for r in rows)
+    assert sorted(fake.acked("s", "cdc")) == sorted(offset for _, offset in pairs)
     assert fake.xrange("s") == []
 
     # simple acknowledge: XACK only; an empty partition sends nothing
     fake = _fill(tmp_path / "simple", "s", range(2500))
-    ack_entries(_opts(tmp_path / "simple", "s"), "cdc", False, iter(rows))
+    ack_entries(_opts(tmp_path / "simple", "s"), "cdc", False, iter(pairs))
     ack_entries(_opts(tmp_path / "simple", "s"), "cdc", False, iter([]))
     rts = fake.round_trips()
     assert rts.count("xack") == 3 and rts.count("xdel") == 0, rts

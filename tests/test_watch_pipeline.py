@@ -12,13 +12,19 @@ Scenarios:
 
 from __future__ import annotations
 
+import contextlib
+import itertools
 import json
+import os
 from pathlib import Path
 
 import pytest
 
 from cdc_dedupe_spark.config import load_config
-from cdc_dedupe_spark.streaming.pipeline import watch
+from cdc_dedupe_spark.plans.watch_plan import SINK_KEYS
+from cdc_dedupe_spark.sources.fake_redis import FakePipeline, FakeRedis
+from cdc_dedupe_spark.streaming import pipeline
+from cdc_dedupe_spark.streaming.pipeline import SinkManifest, watch
 
 CONFIG_YAML = """\
 source:
@@ -193,26 +199,10 @@ def test_watch_redis_to_redis_topology(spark, tmp_path, ack):
     the file-backed fake client. acknowledge=delete empties the source
     stream (S20, WatchTests.java:151-154); simple retains all entries
     (WatchTests.java:245-248)."""
-    from cdc_dedupe_spark.sources.fake_redis import FakeRedis
-
     cfg = load_config(_write_config(tmp_path, ack))
-    redis_dir = tmp_path / "redis"
-    fake = FakeRedis(str(redis_dir))
-    for i, eid in enumerate([1, 2, 1, 2], start=1):
-        env = _envelope_compact(f"1-{i}", eid)
-        fake.xadd(env["stream"], env["fields"])
-
-    handles = watch(
-        spark,
-        cfg,
-        source_dir=None,
-        work_dir=str(tmp_path / "work"),
-        redis_options={
-            "client_factory": "cdc_dedupe_spark.sources.fake_redis:make_client",
-            "fake_dir": str(redis_dir),
-        },
-        redis_sink=True,
-    )
+    fake, opts, add = _redis_source(tmp_path)
+    add([1, 2, 1, 2])
+    handles = watch(spark, cfg, None, str(tmp_path / "work"), redis_options=opts, redis_sink=True)
     handles.query.awaitTermination()
 
     for target in ("target.catalog_product_flat", "target.catalog_category_product"):
@@ -248,31 +238,20 @@ def test_watch_closes_every_redis_client(spark, tmp_path):
     that opened it: the driver's startup client (group bootstrap and
     seeds), XADD client and ack client, and the source runner's read
     clients."""
-    import os
     from collections import Counter
 
-    from cdc_dedupe_spark.sources.fake_redis import FakeRedis
-
     cfg = load_config(_write_config(tmp_path, "delete"))
-    redis_dir = tmp_path / "redis"
-    fake = FakeRedis(str(redis_dir))
-    for i, eid in enumerate([1, 2, 1, 2], start=1):
-        env = _envelope_compact(f"1-{i}", eid)
-        fake.xadd(env["stream"], env["fields"])
-    handles = watch(
-        spark, cfg, None, str(tmp_path / "work"),
-        redis_options={
-            "client_factory": "cdc_dedupe_spark.sources.fake_redis:make_counting_client",
-            "fake_dir": str(redis_dir),
-        },
-        redis_sink=True,
+    fake, opts, add = _redis_source(
+        tmp_path, client_factory="cdc_dedupe_spark.sources.fake_redis:make_counting_client"
     )
+    add([1, 2, 1, 2])
+    handles = watch(spark, cfg, None, str(tmp_path / "work"), redis_options=opts, redis_sink=True)
     handles.query.awaitTermination()
     assert [json.loads(f["ids"]) for _, f in fake.xrange("target.catalog_product_flat")] == [
         [], [1, 2]
     ]
     opened, closed = Counter(), Counter()
-    for line in (redis_dir / "_clients.log").read_text().split():
+    for line in (fake.root / "_clients.log").read_text().split():
         event, pid = line.split(":")
         (opened if event == "open" else closed)[int(pid)] += 1
     # the startup client and the batch's XADD and ack clients, all on the
@@ -288,26 +267,10 @@ def test_watch_batch_reads_source_once(spark, tmp_path):
     batch), sent by the source runner, and one scan of the batch for the
     one collect that feeds both the packed XADD and the JSON files of the
     rest. Redis-sink mode with group+delete acks = the most sinks."""
-    from cdc_dedupe_spark.sources.fake_redis import FakeRedis
-
     cfg = load_config(_write_config(tmp_path, "delete"))
-    redis_dir = tmp_path / "redis"
-    fake = FakeRedis(str(redis_dir))
-    for i, eid in enumerate([1, 2, 1, 2], start=1):
-        env = _envelope_compact(f"1-{i}", eid)
-        fake.xadd(env["stream"], env["fields"])
-
-    handles = watch(
-        spark,
-        cfg,
-        source_dir=None,
-        work_dir=str(tmp_path / "work"),
-        redis_options={
-            "client_factory": "cdc_dedupe_spark.sources.fake_redis:make_client",
-            "fake_dir": str(redis_dir),
-        },
-        redis_sink=True,
-    )
+    fake, opts, add = _redis_source(tmp_path)
+    add([1, 2, 1, 2])
+    handles = watch(spark, cfg, None, str(tmp_path / "work"), redis_options=opts, redis_sink=True)
     handles.query.awaitTermination()
 
     # one stream, one availableNow batch -> exactly one XRANGE round trip
@@ -332,8 +295,6 @@ def _offset_ends(work: Path, stream: str) -> list[str]:
 def _redis_source(tmp_path: Path, **extra: str):
     """A FakeRedis source, its options, and an ``add(eids)`` that XADDs one
     compact envelope per entity id to the watched stream."""
-    from cdc_dedupe_spark.sources.fake_redis import FakeRedis
-
     redis_dir = tmp_path / "redis"
     fake = FakeRedis(str(redis_dir))
     opts = {
@@ -443,8 +404,6 @@ def test_watch_restart_resumes_from_checkpoint(spark, tmp_path):
     # checkpoint/work dir
     events1 = [_envelope_compact(f"200{i}-0", eid) for i, eid in enumerate([2, 3])]
     (tmp_path / "in" / "batch1.json").write_text("\n".join(json.dumps(e) for e in events1))
-    from cdc_dedupe_spark.streaming.pipeline import watch
-
     handles2 = watch(spark, cfg, str(tmp_path / "in"), str(tmp_path / "work"))
     handles2.query.awaitTermination()
     out2 = spark.read.json(handles2.output_dir)
@@ -471,87 +430,6 @@ def _delete_last_commit(work: Path) -> None:
     crc = commits[-1].parent / f".{commits[-1].name}.crc"
     if crc.exists():
         crc.unlink()
-
-
-def test_watch_sink_replay_after_commit_crash_no_duplicates(spark, tmp_path):
-    """Window 1: crash AFTER the sinks ran, BEFORE the checkpoint commit.
-    The engine replays the batch; the manifest's done-marker makes the
-    replay a no-op — no duplicate target records, no duplicate acks
-    (effectively-once)."""
-    events = [_envelope_compact(f"100{i}-0", eid) for i, eid in enumerate([1, 2])]
-    cfg, handles, out = _run(spark, tmp_path, events)
-    tgt = "target.catalog_product_flat"
-    assert [json.loads(r) for r in _target_records(out, tgt) if r != "[]"] == [[1, 2]]
-
-    _delete_last_commit(tmp_path / "work")
-    handles2 = watch(spark, cfg, str(tmp_path / "in"), str(tmp_path / "work"))
-    handles2.query.awaitTermination()
-
-    out2 = spark.read.json(handles2.output_dir)
-    assert [json.loads(r) for r in _target_records(out2, tgt) if r != "[]"] == [[1, 2]]
-    offsets = [r.offset for r in spark.read.json(handles2.ack_dir).collect()]
-    assert sorted(offsets) == ["1000-0", "1001-0"], "acks must not duplicate on replay"
-
-
-def test_watch_sink_scrubs_partial_attempt(spark, tmp_path):
-    """Window 2: crash DURING the sink writes (started-marker present, done
-    absent, some batch files already published). The replay scrubs the
-    crashed attempt's b{batchId}-* files before rewriting — partial output
-    never double-counts."""
-    # plant a crashed batch-0 attempt: started marker + one partial file
-    manifest_dir = tmp_path / "work" / "checkpoint" / "sink_manifest"
-    manifest_dir.mkdir(parents=True)
-    (manifest_dir / "0.started").write_text("")
-    tgt = "target.catalog_product_flat"
-    tgt_dir = tmp_path / "work" / "targets" / f"target_stream={tgt}"
-    tgt_dir.mkdir(parents=True)
-    (tgt_dir / "b0-part-00000-crashed.json").write_text('{"ids":"[9]"}\n')
-
-    events = [_envelope_compact(f"100{i}-0", eid) for i, eid in enumerate([1, 2])]
-    _, handles, out = _run(spark, tmp_path, events)
-    batches = [json.loads(r) for r in _target_records(out, tgt) if r != "[]"]
-    assert batches == [[1, 2]], f"crashed attempt's partial output survived: {batches}"
-
-
-def test_watch_redis_sink_idempotent_replay(spark, tmp_path):
-    """Both crash windows for the XADD sink: a done-marked replay skips the
-    XADDs entirely; a started-without-done replay scrubs the crashed
-    attempt's entries (they carry batch=<batchId>) and rewrites exactly
-    one copy."""
-    from cdc_dedupe_spark.sources.fake_redis import FakeRedis
-
-    cfg = load_config(_write_config(tmp_path, "simple"))
-    redis_dir = tmp_path / "redis"
-    fake = FakeRedis(str(redis_dir))
-    for i, eid in enumerate([1, 2, 1, 2], start=1):
-        env = _envelope_compact(f"1-{i}", eid)
-        fake.xadd(env["stream"], env["fields"])
-    redis_opts = {"client_factory": "cdc_dedupe_spark.sources.fake_redis:make_client", "fake_dir": str(redis_dir)}
-    work = str(tmp_path / "work")
-
-    def run() -> None:
-        h = watch(spark, cfg, None, work, redis_options=redis_opts, redis_sink=True)
-        h.query.awaitTermination()
-
-    def non_seed(target: str) -> list:
-        return [json.loads(f["ids"]) for _, f in fake.xrange(target) if f["ids"] != "[]"]
-
-    tgt = "target.catalog_product_flat"
-    run()
-    assert non_seed(tgt) == [[1, 2]]
-
-    # window 1: done marker present -> replay skips the XADDs
-    _delete_last_commit(Path(work))
-    run()
-    assert non_seed(tgt) == [[1, 2]], "done-marked replay must not re-XADD"
-
-    # window 2: done marker gone (crash mid-write) -> scrub + rewrite once
-    _delete_last_commit(Path(work))
-    manifest_dir = Path(work) / "checkpoint" / "sink_manifest"
-    done = sorted(manifest_dir.glob("*.done"), key=lambda p: int(p.stem))[-1]
-    done.unlink()
-    run()
-    assert non_seed(tgt) == [[1, 2]], "scrub-replay must leave exactly one copy"
 
 
 def test_unknown_source_format_warns(tmp_path):
@@ -595,15 +473,10 @@ def test_watch_delete_with_foreign_consumer_pel(spark, tmp_path):
     assert the source still empties (WatchTests.java:151-154), and real
     Redis leaves the foreign PEL dangling rather than blocking XDEL. The
     pipeline must neither skip the delete nor touch the foreign group."""
-    from cdc_dedupe_spark.sources.fake_redis import FakeRedis
-
     cfg = load_config(_write_config(tmp_path, "delete"))
-    redis_dir = tmp_path / "redis"
-    fake = FakeRedis(str(redis_dir))
+    fake, opts, add = _redis_source(tmp_path)
     src_stream = "m2.m2.catalog_category_entity"
-    for i, eid in enumerate([1, 2, 1, 2], start=1):
-        env = _envelope_compact(f"1-{i}", eid)
-        fake.xadd(env["stream"], env["fields"])
+    add([1, 2, 1, 2])
 
     # A foreign group's consumer reads everything and acks NOTHING, so all
     # 4 entries sit in its PEL when our pipeline XDELs them.
@@ -611,17 +484,7 @@ def test_watch_delete_with_foreign_consumer_pel(spark, tmp_path):
     fake.xreadgroup("other", "rival", {src_stream: ">"})
     assert fake.pending(src_stream, "other") == [f"1-{i}" for i in range(1, 5)]
 
-    handles = watch(
-        spark,
-        cfg,
-        source_dir=None,
-        work_dir=str(tmp_path / "work"),
-        redis_options={
-            "client_factory": "cdc_dedupe_spark.sources.fake_redis:make_client",
-            "fake_dir": str(redis_dir),
-        },
-        redis_sink=True,
-    )
+    handles = watch(spark, cfg, None, str(tmp_path / "work"), redis_options=opts, redis_sink=True)
     handles.query.awaitTermination()
 
     # Source emptied despite the foreign PEL (the reference's assertion)...
@@ -637,48 +500,37 @@ def test_watch_delete_with_foreign_consumer_pel(spark, tmp_path):
         assert ids == [[], [1, 2]]
 
 
-def test_watch_crash_mid_delete_ack_no_output_loss(spark, tmp_path):
-    """The data-loss window: a crash AFTER some
+def test_watch_crash_mid_delete_ack_no_output_loss(spark, tmp_path, monkeypatch):
+    """The data-loss window through the engine: a crash AFTER some
     acknowledge=delete XDELs but BEFORE the checkpoint commit. The done
-    marker is written BEFORE the destructive ack, so the restart must
-    take the committed path — skip the sinks (no scrub, no rewrite from
-    the now-partial source) and only finish the remaining acks. Marking
-    AFTER the ack (the old order) scrubbed and rewrote the batch from
-    whatever entries survived the partial delete — permanent loss."""
-    from cdc_dedupe_spark.sources.fake_redis import FakeRedis
+    marker is written BEFORE the destructive ack, so the engine's replay
+    of the now partially deleted range takes the committed path: skip the
+    sinks (no scrub, no rewrite from the shrunk source) and only finish
+    the remaining acks. Marking AFTER the ack would scrub and rewrite the
+    batch from whatever entries survived the partial delete: permanent
+    loss. The acks run on the driver, so patching FakeRedis reaches them."""
+    from cdc_dedupe_spark.sources import redis_stream
 
     cfg = load_config(_write_config(tmp_path, "delete"))
-    redis_dir = tmp_path / "redis"
-    fake = FakeRedis(str(redis_dir))
-    for i, eid in enumerate([1, 2, 1, 2], start=1):
-        env = _envelope_compact(f"1-{i}", eid)
-        fake.xadd(env["stream"], env["fields"])
+    src = "m2.m2.catalog_category_entity"
+    fake, opts, add = _redis_source(tmp_path)
+    add([1, 2, 1, 2])
+    work = str(tmp_path / "work")
 
-    crash_opts = {
-        "client_factory": "cdc_dedupe_spark.sources.fake_redis:make_xdel_crash_client",
-        "fake_dir": str(redis_dir),
-        "crash_state": str(tmp_path / "crash.flag"),
-    }
-    with pytest.raises(Exception):
-        h = watch(
-            spark, cfg, source_dir=None, work_dir=str(tmp_path / "work"),
-            redis_options=crash_opts, redis_sink=True,
-        )
-        h.query.awaitTermination()
-    src_stream = "m2.m2.catalog_category_entity"
-    assert len(fake.xrange(src_stream)) < 4  # the partial delete really happened
+    monkeypatch.setattr(redis_stream, "PIPELINE_CHUNK", 2)
+    with monkeypatch.context() as m:
+        _crash_on(m, FakeRedis, "xdel")
+        with pytest.raises(Exception):
+            h = watch(spark, cfg, None, work, redis_options=opts, redis_sink=True)
+            h.query.awaitTermination()
+    assert len(fake.xrange(src)) == 2  # the first XDEL chunk went out, the second did not
 
-    # restart on the same work dir: same factory, crash flag already fired
-    h2 = watch(
-        spark, cfg, source_dir=None, work_dir=str(tmp_path / "work"),
-        redis_options=crash_opts, redis_sink=True,
-    )
-    h2.query.awaitTermination()
-
+    h = watch(spark, cfg, None, work, redis_options=opts, redis_sink=True)
+    h.query.awaitTermination()
     for target in ("target.catalog_product_flat", "target.catalog_category_product"):
         ids = [json.loads(f["ids"]) for _, f in fake.xrange(target)]
         assert ids == [[], [1, 2]], f"{target}: {ids}"  # seed + ONE intact batch
-    assert fake.xrange(src_stream) == []  # remaining acks finished on replay
+    assert fake.xrange(src) == []  # remaining acks finished on replay
 
 
 def test_watch_redis_source_json_sink_still_acks(spark, tmp_path):
@@ -686,23 +538,10 @@ def test_watch_redis_source_json_sink_still_acks(spark, tmp_path):
     S15-S20 ack path is about the source stream, not the sink kind — the
     source must still be XACKed and emptied (an ack block gated on
     redis_sink would skip it)."""
-    from cdc_dedupe_spark.sources.fake_redis import FakeRedis
-
     cfg = load_config(_write_config(tmp_path, "delete"))
-    redis_dir = tmp_path / "redis"
-    fake = FakeRedis(str(redis_dir))
-    for i, eid in enumerate([1, 2, 1, 2], start=1):
-        env = _envelope_compact(f"1-{i}", eid)
-        fake.xadd(env["stream"], env["fields"])
-
-    handles = watch(
-        spark, cfg, source_dir=None, work_dir=str(tmp_path / "work"),
-        redis_options={
-            "client_factory": "cdc_dedupe_spark.sources.fake_redis:make_client",
-            "fake_dir": str(redis_dir),
-        },
-        redis_sink=False,
-    )
+    fake, opts, add = _redis_source(tmp_path)
+    add([1, 2, 1, 2])
+    handles = watch(spark, cfg, None, str(tmp_path / "work"), redis_options=opts)
     handles.query.awaitTermination()
 
     out = spark.read.json(handles.output_dir)
@@ -732,8 +571,6 @@ def test_sink_manifest_prunes_old_markers(tmp_path):
     """The manifest must not grow unboundedly (two files per micro-batch
     forever): markers behind the RETAIN horizon are
     pruned on mark()."""
-    from cdc_dedupe_spark.streaming.pipeline import SinkManifest
-
     m = SinkManifest(tmp_path / "m")
     for b in range(SinkManifest.RETAIN + 50):
         m.start(b)
@@ -748,9 +585,9 @@ def test_sink_manifest_prunes_old_markers(tmp_path):
 
 
 def test_config_hardening(tmp_path):
-    """Round-8 review hardening: empty file -> clear error; zero target
-    buffer -> rejected (it divides the packing row number); scalar target
-    -> one-target list, never char-split; invalid acknowledge -> loud
+    """Config edge cases: empty file -> clear error; zero target buffer ->
+    rejected (it divides the packing row number); scalar target ->
+    one-target list, never char-split; invalid acknowledge -> loud
     conservative fallback; feedback loop detected with EMPTY prefixes."""
     import warnings as w
 
@@ -872,13 +709,7 @@ def _sink_static_batch(
     per batch id into ``tmp_path/work`` (source acks go to a FakeRedis),
     with the one-task plan or, under ``parallel``, the file source's plan;
     returns (work dir, fake, jobs per batch id)."""
-    from cdc_dedupe_spark.sources.fake_redis import FakeRedis
-
-    from cdc_dedupe_spark.streaming.pipeline import (
-        ENVELOPE_ROW_SCHEMA,
-        SinkManifest,
-        _process_batch,
-    )
+    from cdc_dedupe_spark.streaming.pipeline import ENVELOPE_ROW_SCHEMA, _process_batch
 
     (tmp_path / "config.yaml").write_text(STATIC_CONFIG)
     cfg = load_config(tmp_path / "config.yaml")
@@ -1038,30 +869,191 @@ def test_driver_publish_matches_spark_json_writer(spark, tmp_path):
     assert [(r.stream, r.payload) for r in back] == [(key, payload)]
 
 
-def test_watch_scrubs_crashed_publish_tmp_files(spark, tmp_path):
-    """A publish that crashed mid-file leaves a hidden .b{batchId}-*.tmp
-    beside its .started marker; the replay scrubs it (and only that
-    batch's) and rewrites the batch exactly once."""
+def test_watch_replay_scrubs_files_it_does_not_rewrite(spark, tmp_path):
+    """A replay of a batch that started and never finished deletes what the
+    crashed attempt left under names the replay does not write again: a
+    published file or a hidden tmp file under a key the replay no longer
+    routes to (its source was trimmed, or its mapping changed, between
+    the attempts). Other batches' files stay. The crash matrix cannot show
+    this: a replay of the same entries rewrites every file under the
+    crashed attempt's name."""
     work = tmp_path / "work"
     manifest_dir = work / "checkpoint" / "sink_manifest"
     manifest_dir.mkdir(parents=True)
     (manifest_dir / "3.started").write_text("")
-    stale = work / "dead" / "stream=m2.m2.gone" / ".b3-part-00000.json.tmp"
-    other = work / "dead" / "stream=m2.m2.gone" / ".b4-part-00000.json.tmp"
-    stale.parent.mkdir(parents=True)
-    stale.write_text('{"offset":"9-9"}\n{"off')
-    other.write_text("")
+    gone = work / "targets" / "target_stream=t%3Agone"
+    gone.mkdir(parents=True)
+    stale = [gone / "b3-part-00000.json", gone / ".b3-part-00000.json.tmp"]
+    kept = [gone / "b30-part-00000.json", gone / ".b4-part-00000.json.tmp"]
+    for f in stale + kept:
+        f.write_text('{"ids":"[9]"}\n')
 
     work, _, _ = _sink_static_batch(spark, tmp_path)
-    assert not stale.exists() and other.exists()
-    assert len(_sink_lines(work, "targets")) == 4
+    assert sorted(gone.iterdir()) == sorted(kept)
+    assert len(_sink_lines(work, "targets")) == 4 + 1  # the kept b30 file's line
     assert len(_sink_lines(work, "acks")) == 7
     assert len(_sink_lines(work, "dead")) == 2
 
 
+class Crash(Exception):
+    """A crash injected on the driver."""
+
+
+def _crash_on(m, owner, name: str, call: int = 1, before: bool = False) -> None:
+    """Through monkeypatch ``m``, make ``owner.name`` raise Crash at its
+    ``call``-th call: after the call has run or, under ``before``, in its
+    place."""
+    real, calls = getattr(owner, name), itertools.count(1)
+
+    def crashing(*args, **kwargs):
+        n = next(calls)
+        result = None if n == call and before else real(*args, **kwargs)
+        if n == call:
+            raise Crash(name)
+        return result
+
+    m.setattr(owner, name, crashing)
+
+
+def _crash_mid_file(m) -> None:
+    """Crash the second sink file after its tmp file is written, before
+    its rename."""
+    real, calls = pipeline._write_json_file, itertools.count(1)
+
+    def write(path, lines):
+        if next(calls) == 2:
+            _crash_on(m, os, "replace", before=True)
+        real(path, lines)
+
+    m.setattr(pipeline, "_write_json_file", write)
+
+
+# Each side-effect boundary of _process_batch, in its order, and how to
+# crash there; None lets the batch run to its end, which stands for a
+# crash before the checkpoint commit. XADD, XACK and XDEL go out
+# MATRIX_CHUNK entries per command, so a crash after the first command
+# leaves the rest unsent.
+CRASHES = {
+    "after_start": lambda m: _crash_on(m, SinkManifest, "start"),
+    "mid_file": _crash_mid_file,
+    "mid_xadd": lambda m: _crash_on(m, FakePipeline, "execute"),
+    "before_mark": lambda m: _crash_on(m, SinkManifest, "mark", before=True),
+    "after_mark": lambda m: _crash_on(m, SinkManifest, "mark"),
+    "after_xack1": lambda m: _crash_on(m, FakeRedis, "xack", 1),
+    "after_xack2": lambda m: _crash_on(m, FakeRedis, "xack", 2),
+    "after_xdel1": lambda m: _crash_on(m, FakeRedis, "xdel", 1),
+    "after_xdel2": lambda m: _crash_on(m, FakeRedis, "xdel", 2),
+    "before_commit": None,
+}
+MATRIX_CHUNK = 3
+# One source stream: routed entries and dead letters in both batches;
+# batch 3's five entries take two ack commands.
+MATRIX_BATCHES = {
+    2: [*(_envelope_compact("", eid) for eid in [1, 2, 1, 3, 4]), *STATIC_EVENTS[5:7]],
+    3: [*(_envelope_compact("", eid) for eid in [2, 5, 5, 6]), STATIC_EVENTS[5]],
+}
+
+
+def _crash_run(spark, root: Path, sink: str, ack: str, m=None, crash: str | None = None):
+    """Sink batch 2, then batch 3, through ``_process_batch`` from a
+    FakeRedis source. Under ``crash`` (armed through monkeypatch ``m``),
+    batch 3 crashes there first and is run again with its id, as the
+    engine replays a batch its commit log lacks. Each run re-reads the
+    batch's range from the source, as ``readBetweenOffsets`` does, so
+    XDELs before a crash shrink the replay. Returns the sink state (each
+    file's bytes, hidden files too, and each target stream's entries)
+    after batch 2 and at the end, the ledger's batch ids and the fake."""
+    from cdc_dedupe_spark.streaming.pipeline import ENVELOPE_ROW_SCHEMA, _process_batch
+
+    config = root / "config.yaml"
+    config.write_text(STATIC_CONFIG.replace("acknowledge: delete", f"acknowledge: {ack}"))
+    cfg = load_config(config)
+    fake, opts, _ = _redis_source(root)
+    src, work = "m2.m2.catalog_category_entity", root / "work"
+    ranges = {}
+    for bid, events in MATRIX_BATCHES.items():
+        ids = [fake.xadd(e["stream"], e["fields"]) for e in events]
+        ranges[bid] = ids[0], ids[-1]
+    manifest = SinkManifest(work / "checkpoint" / "sink_manifest")
+
+    def run(bid: int) -> None:
+        rows = [(rid, src, f) for rid, f in fake.xrange(src, *ranges[bid])]
+        batch = spark.createDataFrame(rows, ENVELOPE_ROW_SCHEMA)
+        sink_options = opts if sink == "redis" else None
+        _process_batch(batch, bid, cfg, str(work), sink_options, manifest, opts)
+
+    def state() -> tuple[dict, dict]:
+        files = {
+            str(f.relative_to(work)): f.read_bytes()
+            for kind in SINK_KEYS
+            for f in sorted((work / kind).rglob("*"))
+            if f.is_file()
+        }
+        return files, {t: [f for _, f in fake.xrange(t)] for t in ("t:flat", "t:product")}
+
+    run(2)
+    after_2 = state()
+    if crash is not None:
+        arm = CRASHES[crash]
+        with m.context() as armed, pytest.raises(Crash) if arm else contextlib.nullcontext():
+            if arm:
+                arm(armed)
+            run(3)
+    run(3)
+    ledger = (work / "batch_metrics.jsonl").read_text().splitlines()
+    return after_2, state(), [json.loads(line)["batch_id"] for line in ledger], fake
+
+
+@pytest.fixture(scope="module")
+def crash_reference(spark, tmp_path_factory):
+    """The uncrashed run's sink states, made once per (sink, ack mode)."""
+    refs = {}
+
+    def get(sink: str, ack: str):
+        if (sink, ack) not in refs:
+            refs[sink, ack] = _crash_run(spark, tmp_path_factory.mktemp("ref"), sink, ack)[:2]
+        return refs[sink, ack]
+
+    return get
+
+
+@pytest.mark.parametrize("crash,sink,ack", [
+    (crash, sink, ack)
+    for crash in CRASHES for sink in ("files", "redis") for ack in ("simple", "delete")
+    if (crash != "mid_xadd" or sink == "redis") and (ack == "delete" or "xdel" not in crash)
+])
+def test_watch_sink_crash_matrix(spark, tmp_path, monkeypatch, crash_reference, crash, sink, ack):
+    """Effectively-once at every side-effect boundary: batch 3 crashes at
+    ``crash`` and is replayed with its id. The sinks then hold exactly the
+    uncrashed run's output, byte for byte (packed ids, dead letters, the
+    acks ledger), with no crashed attempt's file, tmp file or XADD left.
+    Batch 2's output is untouched, every source entry is XACKed (and
+    XDELed under delete), and the metrics ledger has at most one line per
+    batch."""
+    from cdc_dedupe_spark.sources import redis_stream
+
+    monkeypatch.setattr(redis_stream, "PIPELINE_CHUNK", MATRIX_CHUNK)
+    ref_after_2, ref_final = crash_reference(sink, ack)
+    after_2, final, ledger, fake = _crash_run(spark, tmp_path, sink, ack, monkeypatch, crash)
+    files, xadds = final
+    assert (after_2, final) == (ref_after_2, ref_final)
+    # not degenerate: batch 3 publishes dead letters and packed ids
+    b3 = {k.split("/")[0] for k in files if "/b3-" in k}
+    assert b3 == ({"acks", "dead"} if sink == "redis" else {"targets", "acks", "dead"})
+    assert any(f["batch"] == "3" for e in xadds.values() for f in e) == (sink == "redis")
+    assert {k: v for k, v in files.items() if "/b2-" in k} == after_2[0]
+    assert {t: [f for f in e if f["batch"] == "2"] for t, e in xadds.items()} == after_2[1]
+
+    src = "m2.m2.catalog_category_entity"
+    assert set(fake.acked(src, "cdc")) == {f"1-{i}" for i in range(1, 13)}
+    assert len(fake.xrange(src)) == (0 if ack == "delete" else 12)
+    assert len(ledger) == len(set(ledger)) and 2 in ledger, ledger
+
+
 def test_watch_batch_metrics_ledger(spark, tmp_path):
-    """One ledger line per sunk batch, its counts read from the write's
-    Observation and consistent with that batch's files."""
+    """One ledger line per sunk batch, consistent with that batch's files:
+    input and unroutable come from the scan's Observation, the other
+    counts from the collected sink rows."""
     work, _, _ = _sink_static_batch(spark, tmp_path)
     (line,) = [json.loads(s) for s in (work / "batch_metrics.jsonl").read_text().splitlines()]
     targets = _sink_lines(work, "targets")
@@ -1076,9 +1068,9 @@ def test_watch_batch_metrics_ledger(spark, tmp_path):
 
 
 def test_watch_batch_metrics_ledger_without_sink_rows(spark, tmp_path):
-    """A batch of unroutable entries emits no sink row, so the exchange is
-    empty; its scan-side counts still reach the ledger, and no ack is
-    sent."""
+    """A batch of unroutable entries emits no sink row, so the one task
+    collects nothing; its scan-side Observation still reports the counts
+    to the ledger, and no ack is sent."""
     unroutable = [
         {"offset": f"100{i}-0", "stream": "m2.m2.other", "fields": {"key": "{}"}} for i in range(3)
     ]
